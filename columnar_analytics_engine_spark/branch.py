@@ -99,13 +99,13 @@ def clone_table(
     branch-aware; schema and cluster-spec sidecars are copied so the
     branch starts from the source's logical state."""
     from columnar_analytics_engine_spark.manifest import (
-        read_manifest,
+        manifest_table,
         write_manifest,
     )
 
     if os.path.abspath(dest_index) == os.path.abspath(src_index):
         raise ValueError("clone destination must differ from the source")
-    snapshot = read_manifest(spark, src_index, as_of=as_of)
+    snapshot = manifest_table(src_index, as_of=as_of)
     version = write_manifest(spark, dest_index, snapshot)
     from columnar_analytics_engine_spark.manifest import current_version
 

@@ -152,18 +152,10 @@ def changed_files(
     Returns ``{"added": [...], "removed": [...], "both": [...]}``
     (files only in ``to_version`` / only in ``from_version`` / in
     both)."""
-    from columnar_analytics_engine_spark.manifest import read_manifest
+    from columnar_analytics_engine_spark.manifest import manifest_files
 
-    f_from = {
-        r["file"]
-        for r in read_manifest(spark, index_path, as_of=from_version)
-        .select("file").distinct().collect()
-    }
-    f_to = {
-        r["file"]
-        for r in read_manifest(spark, index_path, as_of=to_version)
-        .select("file").distinct().collect()
-    }
+    f_from = set(manifest_files(index_path, as_of=from_version))
+    f_to = set(manifest_files(index_path, as_of=to_version))
     return {
         "added": sorted(f_to - f_from),
         "removed": sorted(f_from - f_to),
@@ -210,8 +202,8 @@ def read_changes(
     classification is one keyed window over the net diff rows — never
     data-sized."""
     from columnar_analytics_engine_spark.deletes import (
-        _dv,
         applied_commit_ids,
+        dv_table,
     )
     from columnar_analytics_engine_spark.evolution import read_evolved
     from columnar_analytics_engine_spark.manifest import dv_commits
@@ -238,17 +230,13 @@ def read_changes(
     if use_dv and diff["both"]:
         new_commits = sorted(set(ids_to or []) - set(ids_from or []))
         if new_commits:
-            both_set = set(diff["both"])
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            dv = dv_table(dv_path)
+            dv = dv.filter(pc.is_in(dv["_commit_id"], value_set=pa.array(new_commits)))
             dv_delta_files = sorted(
-                {
-                    r["file"]
-                    for r in _dv(spark, dv_path)
-                    .where(F.col("_commit_id").isin(new_commits))
-                    .select("file")
-                    .distinct()
-                    .collect()
-                }
-                & both_set
+                set(dv.column("file").to_pylist()) & set(diff["both"])
             )
 
     def side(files: list[str], as_of: int, cnt: int, ids) -> DataFrame | None:

@@ -281,36 +281,26 @@ def cmd_vacuum(args: argparse.Namespace) -> None:
 def cmd_history(args: argparse.Namespace) -> None:
     """Manifest version history: retained versions, the published one,
     and per-version file/row counts — what `as_of` can time-travel to."""
-    from pyspark.sql import functions as F
-
     from columnar_analytics_engine_spark.manifest import (
         current_version,
+        file_rows,
         list_versions,
         publish_log,
-        read_manifest,
     )
 
-    spark = get_spark(app_name="cae-history")
     cur = current_version(args.index)
     # publish journal: last publish instant per version (a version can
     # be re-published by a catalog roll; report the latest)
     published_at = {v: ts for v, ts in publish_log(args.index)}
     versions = []
     for v in list_versions(args.index):
-        m = read_manifest(spark, args.index, as_of=v)
-        agg = (
-            m.select("file", "file_rows")
-            .distinct()
-            .groupBy()
-            .agg(F.count("*").alias("files"), F.sum("file_rows").alias("rows"))
-            .first()
-        )
+        rows_of = file_rows(args.index, as_of=v)
         versions.append(
             {
                 "version": v,
                 "current": v == cur,
-                "files": agg["files"],
-                "rows": agg["rows"],
+                "files": len(rows_of),
+                "rows": sum(rows_of.values()) if rows_of else None,
                 "published_at": published_at.get(v),
             }
         )

@@ -100,38 +100,30 @@ def file_first_versions(spark: SparkSession, index_path: str) -> DataFrame:
     manifest: the earliest RETAINED manifest version that references
     it.  Files predating retained history surface at the oldest
     retained version — consistent with the retention contract (history
-    beyond the window is gone for time travel too).  One Spark plan
-    over the retained version dirs."""
+    beyond the window is gone for time travel too).  Resolved on the
+    driver from the retained manifests (an Arrow-backed local
+    relation)."""
+    import pyarrow as pa
+
     from columnar_analytics_engine_spark.manifest import (
         current_version,
         list_versions,
-        manifest_dir,
-        read_manifest,
+        manifest_files,
     )
 
     cur = current_version(index_path)
     versions = [v for v in list_versions(index_path) if cur is None or v <= cur]
-    if not versions:
-        # legacy flat index: single implicit version
-        return (
-            read_manifest(spark, index_path)
-            .select("file").distinct()
-            .withColumn("first_version", F.lit(1))
+    first: dict[str, int] = {}
+    for v in versions or [None]:  # None: a legacy flat index's one version
+        for f in manifest_files(index_path, v):
+            first.setdefault(f, v or 1)
+    live = [f for f in manifest_files(index_path) if f in first]
+    return spark.createDataFrame(
+        pa.table(
+            {"file": live, "first_version": [first[f] for f in live]},
+            schema=pa.schema([("file", pa.string()), ("first_version", pa.int32())]),
         )
-    parts = [
-        spark.read.parquet(manifest_dir(index_path, v))
-        .select("file").distinct()
-        .withColumn("v", F.lit(v))
-        for v in versions
-    ]
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    first = u.groupBy("file").agg(F.min("v").alias("first_version"))
-    live = (
-        read_manifest(spark, index_path).select("file").distinct()
     )
-    return first.join(live, "file", "left_semi")
 
 
 def file_cohorts(spark: SparkSession, index_path: str) -> DataFrame:

@@ -11,18 +11,25 @@ that layer on plain Parquet, built on Spark's ``_metadata.row_index``
 (the stable position of a row within its immutable file):
 
 * :func:`delete_where` — one scan of the matching files turns a SQL
-  predicate into (file, row_index) tombstones appended to the DV
-  table.  Write cost is proportional to the DELETED rows, not the
-  table.
+  predicate into (file, row_index) tombstones; the commit appends ONE
+  Parquet file holding only the new tombstones to the DV table (a
+  directory of such files).  Write cost is proportional to the
+  DELETED rows, not the table.
 * :func:`read_with_deletes` — the merge-on-read path: scan minus a
   broadcast anti-join against the DV table.  Exact; costs one
   broadcast of the (delete-count-sized) DV.
 * :func:`compact_deletes` — the fold: rewrite ONLY the files that
   carry tombstones (dropping those rows), publish the next stats-index
-  manifest version, clear the folded tombstones — the same stage →
+  manifest version, clear the folded tombstones (the rest rewritten as
+  one DV file, then the old DV files removed) — the same stage →
   rename-in → versioned-manifest-publish discipline as
   ``layout.cluster_compact``; originals persist for in-flight readers
   until ``layout.vacuum_unindexed`` reclaims them.
+
+The DV table and the manifests are metadata, read and written on the
+driver with ``pyarrow.parquet`` (:func:`dv_table`,
+``manifest.manifest_table``); Spark sees them only as Arrow-backed
+local relations, so a delete commit runs one Spark job: the scan.
 
 Versioned delete commits (round 14): on a MAINTAINED table (pass
 ``index_path``), every :func:`delete_where` / :func:`delete_keys` is a
@@ -64,12 +71,11 @@ over the survivors.
 from __future__ import annotations
 
 import os
-from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DV_SCHEMA = "file string, row_index long, _commit_id string"
 # commit id for tombstones written outside the versioned-commit
 # protocol (no index_path, or a pre-r14 DV file): ALWAYS applied
 LEGACY_COMMIT = "__legacy__"
@@ -81,28 +87,77 @@ def _strip_scheme(c: Column) -> Column:
     return F.regexp_replace(c, "^file:(//)?", "")
 
 
-def _rewrite_small_table(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Staging rewrite for manifest-sized tables (same shape as
-    ``skipping.update_stats_index``: never clobber the input of the
-    plan being read)."""
-    import shutil
-
-    staging = path.rstrip("/") + "._staging"
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).coalesce(1).write.mode("overwrite").parquet(path)
-    shutil.rmtree(staging, ignore_errors=True)
+DV_ARROW_SCHEMA = pa.schema(
+    [("file", pa.string()), ("row_index", pa.int64()), ("_commit_id", pa.string())]
+)
 
 
-def _dv(spark: SparkSession, dv_path: str) -> DataFrame:
-    """The DV table, normalized to the 3-column schema: pre-r14 DV
-    files lack ``_commit_id`` and read as :data:`LEGACY_COMMIT`
-    (always applied)."""
-    if os.path.exists(dv_path):
-        df = spark.read.parquet(dv_path)
-        if "_commit_id" not in df.columns:
-            df = df.withColumn("_commit_id", F.lit(LEGACY_COMMIT))
-        return df
-    return spark.createDataFrame([], DV_SCHEMA)
+def dv_table(dv_path: str, commit_ids: list[str] | None = None):
+    """The DV table as a ``pyarrow.Table`` read on the driver (DV tables
+    are delete-count-sized), normalized to the 3-column schema: rows of
+    pre-r14 DV files lack ``_commit_id`` and read as
+    :data:`LEGACY_COMMIT` (always applied).  With ``commit_ids`` only
+    legacy rows plus those commits are kept; ``None`` keeps everything
+    (all-apply)."""
+    import pyarrow.compute as pc
+
+    from columnar_analytics_engine_spark.manifest import read_parquet_parts
+
+    tbl = read_parquet_parts(dv_path, schema=DV_ARROW_SCHEMA)
+    tbl = tbl.set_column(
+        2, "_commit_id", pc.fill_null(tbl["_commit_id"], LEGACY_COMMIT)
+    )
+    if commit_ids is None:
+        return tbl
+    keep = pa.array([LEGACY_COMMIT, *commit_ids], pa.string())
+    return tbl.filter(pc.is_in(tbl["_commit_id"], value_set=keep))
+
+
+def _dv(
+    spark: SparkSession, dv_path: str, commit_ids: list[str] | None = None
+) -> DataFrame:
+    """:func:`dv_table` as an Arrow-backed local relation (the broadcast
+    side of every tombstone anti-join).  The commit filter runs in
+    Spark, not Arrow: a local relation prints no rows, so only the
+    filter keeps plans over different commit sets distinguishable."""
+    dv = spark.createDataFrame(dv_table(dv_path))
+    if commit_ids is None:
+        return dv
+    return dv.where(F.col("_commit_id").isin([LEGACY_COMMIT, *commit_ids]))
+
+
+def _dv_lock(dv_path: str):
+    """The DV read-modify-write lock — separate from the manifest
+    publish lock, so there is no re-entrancy."""
+    from columnar_analytics_engine_spark.manifest import mkdir_lock
+
+    return mkdir_lock(
+        f"{dv_path.rstrip('/')}.lock", stale_sec=600.0, timeout_sec=600.0
+    )
+
+
+def _clear_tombstones(dv_path: str, files: list[str]) -> int:
+    """Drop every tombstone on ``files``: the rest is written as ONE new
+    DV file, then the old DV files are removed (a reader in between
+    sees duplicate tombstones, which no anti-join minds — never missing
+    ones).  Returns the number of tombstones dropped."""
+    import pyarrow.compute as pc
+
+    from columnar_analytics_engine_spark.manifest import parquet_parts, write_parquet_part
+
+    with _dv_lock(dv_path):
+        old = parquet_parts(dv_path)
+        tbl = dv_table(dv_path)
+        keep = tbl.filter(
+            pc.invert(pc.is_in(tbl["file"], value_set=pa.array(files, pa.string())))
+        )
+        if keep.num_rows == tbl.num_rows:
+            return 0
+        # written even when empty: the dir stays a readable Parquet table
+        write_parquet_part(dv_path, keep)
+        for f in old:
+            os.remove(f)
+    return tbl.num_rows - keep.num_rows
 
 
 def applied_commit_ids(
@@ -128,29 +183,6 @@ def applied_commit_ids(
     return list(side.get("commits", []))
 
 
-def filter_dv_commits(dv: DataFrame, commit_ids: list[str] | None) -> DataFrame:
-    """Restrict a (normalized) DV frame to legacy rows plus the given
-    commits; ``None`` keeps everything (all-apply)."""
-    if commit_ids is None:
-        return dv
-    return dv.where(F.col("_commit_id").isin([LEGACY_COMMIT] + commit_ids))
-
-
-def committed_dv(
-    spark: SparkSession,
-    dv_path: str,
-    index_path: str | None,
-    as_of: int | None = None,
-) -> DataFrame:
-    """The tombstones that APPLY at a version: legacy rows always,
-    commit-tagged rows only when the resolved version's ``_DV_COMMITS``
-    sidecar names their commit.  A table with no sidecar (never did a
-    versioned delete) applies everything — the legacy contract."""
-    return filter_dv_commits(
-        _dv(spark, dv_path), applied_commit_ids(index_path, as_of)
-    )
-
-
 def _raw_scan(spark: SparkSession, data_path: str, index_path: str | None):
     """Raw (un-projected, ``_metadata``-addressable) scan of the table:
     the manifest's file list when an index is given — a maintained
@@ -162,12 +194,9 @@ def _raw_scan(spark: SparkSession, data_path: str, index_path: str | None):
     physically carries, e.g. the primary key)."""
     if index_path is None:
         return spark.read.parquet(data_path)
-    from columnar_analytics_engine_spark.manifest import read_manifest
+    from columnar_analytics_engine_spark.manifest import manifest_files
 
-    files = sorted(
-        r["file"]
-        for r in read_manifest(spark, index_path).select("file").distinct().collect()
-    )
+    files = manifest_files(index_path)
     if not files:
         return spark.read.parquet(data_path).where(F.lit(False))
     reader = spark.read
@@ -183,64 +212,58 @@ def _commit_tombstones(
     index_path: str | None,
 ) -> int:
     """Shared commit step for :func:`delete_where` / :func:`delete_keys`:
-    append the new (file, row_index) tombstones and — on a VERSIONED
-    table — publish the delete as a manifest version whose
-    ``_DV_COMMITS`` sidecar names the fresh commit id (see the module
-    docstring's crash-safety / feed contract).  Idempotent: pairs
-    already tombstoned are not re-added, and a no-op delete publishes
-    no version.  Returns the number of NEW tombstones."""
+    append ONE DV file holding the new (file, row_index) tombstones and
+    — on a VERSIONED table — publish the delete as a manifest version
+    whose ``_DV_COMMITS`` sidecar names the fresh commit id (see the
+    module docstring's crash-safety / feed contract).  Idempotent:
+    pairs already tombstoned are not re-added, and a no-op delete
+    publishes no version.  Returns the number of NEW tombstones."""
     import uuid
 
     from columnar_analytics_engine_spark.manifest import (
+        copy_manifest,
         current_version,
         dv_commits,
         publish_version,
-        read_manifest,
         write_dv_commits,
-        write_manifest,
+        write_parquet_part,
     )
-
-    from columnar_analytics_engine_spark.manifest import mkdir_lock
 
     expected = current_version(index_path) if index_path is not None else None
     commit_id = uuid.uuid4().hex if expected is not None else LEGACY_COMMIT
-    # the DV read-merge-rewrite is a lost-update window under
-    # concurrent deleters — serialize it with a sibling lock (long
-    # stale window: the section runs Spark jobs, not microseconds).
-    # This is a SEPARATE lock from the manifest publish lock (taken
-    # inside publish_version below), so there is no re-entrancy.
-    with mkdir_lock(
-        f"{dv_path.rstrip('/')}.lock", stale_sec=600.0, timeout_sec=600.0
-    ):
-        existing = _dv(spark, dv_path)
+    keys = ["file", "row_index"]
+    # the one Spark job: the scan of the matching files
+    found = (
+        hits.select(*keys).toArrow()
+        .cast(DV_ARROW_SCHEMA.remove(2))
+        .group_by(keys).aggregate([])
+    )
+    # the DV read-check-append is a lost-update window under
+    # concurrent deleters — serialize it with a sibling lock
+    with _dv_lock(dv_path):
         # idempotency is judged against the APPLYING tombstones only:
         # a pair left by a crashed/conflicted commit (id in no sidecar)
         # is inert and must not suppress a live re-delete of the same
         # row — it is re-added under the new commit id (duplicate
         # pairs across commit ids are harmless to every anti-join)
-        applied = committed_dv(spark, dv_path, index_path)
-        fresh = (
-            hits.select("file", "row_index")
-            .distinct()
-            .join(
-                applied.select("file", "row_index"),
-                ["file", "row_index"],
-                "left_anti",
+        applied = dv_table(dv_path, applied_commit_ids(index_path)).select(keys)
+        fresh = found.join(applied, keys=keys, join_type="left anti")
+        n_new = fresh.num_rows
+        if n_new:
+            os.makedirs(dv_path, exist_ok=True)
+            write_parquet_part(
+                dv_path,
+                fresh.select(keys).append_column(
+                    "_commit_id", pa.array([commit_id] * n_new, pa.string())
+                ),
             )
-            .withColumn("_commit_id", F.lit(commit_id))
-        )
-        merged = existing.unionByName(fresh).distinct()
-        n_before = existing.count()
-        _rewrite_small_table(spark, merged, dv_path)
-        n_new = spark.read.parquet(dv_path).count() - n_before
     if expected is not None and n_new > 0:
         # stage a same-file-set manifest version, add the commit to its
         # sidecar, publish under the OCC check — tombstones are durable
         # BEFORE the flip, so a reader resolving the new version always
         # sees its deletes (a crash in between leaves the commit id
         # unreferenced and the tombstones inert)
-        snapshot = read_manifest(spark, index_path)
-        version = write_manifest(spark, index_path, snapshot, publish=False)
+        version = copy_manifest(index_path, expected)
         prior = dv_commits(index_path, expected) or {"commits": []}
         write_dv_commits(
             index_path, version,
@@ -387,9 +410,16 @@ def read_with_deletes(
         base = read_indexed(spark, data_path, index_path, as_of=as_of)
     else:
         base = spark.read.parquet(data_path)
-    dv = filter_dv_commits(_dv(spark, dv_path), dv_ids)
-    cols = base.columns
-    tagged = base.select(
+    dv = _dv(spark, dv_path, dv_ids)
+    return subtract_tombstones(base, dv)
+
+
+def subtract_tombstones(df: DataFrame, dv: DataFrame) -> DataFrame:
+    """``df`` (a raw, ``_metadata``-addressable file scan) minus the
+    rows the DV frame ``dv`` tombstones: a broadcast anti-join on
+    (file, row_index)."""
+    cols = df.columns
+    tagged = df.select(
         "*",
         _strip_scheme(F.col("_metadata.file_path")).alias("__dv_file"),
         F.col("_metadata.row_index").alias("__dv_ri"),
@@ -438,51 +468,38 @@ def compact_deletes(
     from columnar_analytics_engine_spark.manifest import (
         current_version,
         dv_commits,
-        read_manifest,
+        manifest_files,
         referenced_files,
     )
 
     expected = current_version(index_path)
-    dv_all = _dv(spark, dv_path)
+    dv_all = dv_table(dv_path)
     # versioned-delete tables fold only COMMITTED tombstones (an
     # in-flight or crashed commit's rows must not fold) and clear a
     # tombstone only once NO retained version references its file —
     # pre-fold as_of reads and feed intervals still need it; legacy
     # tables keep the original fold-and-clear contract
     versioned = dv_commits(index_path) is not None
-    dv = committed_dv(spark, dv_path, index_path) if versioned else dv_all
-    manifest_files = {
-        r["file"]
-        for r in read_manifest(spark, index_path).select("file").distinct().collect()
-    }
-    dv_files = sorted(r["file"] for r in dv.select("file").distinct().collect())
+    dv = dv_table(dv_path, applied_commit_ids(index_path)) if versioned else dv_all
+    current = set(manifest_files(index_path))
+    dv_files = sorted(set(dv.column("file").to_pylist()))
     if versioned:
-        retained_refs = referenced_files(spark, index_path)
         clearable = sorted(
-            {
-                r["file"]
-                for r in dv_all.select("file").distinct().collect()
-            }
-            - retained_refs
+            set(dv_all.column("file").to_pylist())
+            - referenced_files(spark, index_path)
         )
     else:
         # tombstones on files the CURRENT manifest no longer lists are
         # dead weight (those rows are invisible to every read path; the
         # files may already be vacuumed) — cleared without any rewrite
-        clearable = [f for f in dv_files if f not in manifest_files]
-    affected = [f for f in dv_files if f in manifest_files][:max_files]
+        clearable = [f for f in dv_files if f not in current]
+    affected = [f for f in dv_files if f in current][:max_files]
     if not affected and not clearable:
         return {"folded_files": 0, "new_files": 0, "tombstones_cleared": 0}
     if not affected:
-        remaining = dv_all.join(
-            F.broadcast(
-                spark.createDataFrame([(f,) for f in clearable], "file string")
-            ),
-            "file", "left_anti",
-        )
-        cleared = dv_all.count() - remaining.count()
-        _rewrite_small_table(spark, remaining, dv_path)
+        cleared = _clear_tombstones(dv_path, clearable)
         return {"folded_files": 0, "new_files": 0, "tombstones_cleared": cleared}
+    dv = spark.createDataFrame(dv)
     groups = group_by_partition_dir(affected, data_path)
     # evolved tables: schema-homogeneous rewrite groups only (mixing
     # cohorts in one read would drop the wider cohort's bytes)
@@ -490,17 +507,7 @@ def compact_deletes(
     new_files: list[str] = []
     for dest, files in sorted(groups.items()):
         dest = dest.split("\x00", 1)[0]  # strip cohort tag
-        tagged = spark.read.parquet(*files).select(
-            "*",
-            _strip_scheme(F.col("_metadata.file_path")).alias("__dv_file"),
-            F.col("_metadata.row_index").alias("__dv_ri"),
-        )
-        survivors = tagged.join(
-            F.broadcast(dv),
-            (tagged["__dv_file"] == dv["file"])
-            & (tagged["__dv_ri"] == dv["row_index"]),
-            "left_anti",
-        ).drop("__dv_file", "__dv_ri")
+        survivors = subtract_tombstones(spark.read.parquet(*files), dv)
         group_files, expected = publish_rewrite(
             spark, data_path, index_path, files,
             survivors.coalesce(max(1, len(files) // 4)),
@@ -512,13 +519,7 @@ def compact_deletes(
     # folded ones stay until their files leave every retained version);
     # legacy tables clear folded + dead as before
     drop = clearable if versioned else affected + clearable
-    if drop:
-        drop_df = spark.createDataFrame([(f,) for f in drop], "file string")
-        remaining = dv_all.join(F.broadcast(drop_df), "file", "left_anti")
-        cleared = dv_all.count() - remaining.count()
-        _rewrite_small_table(spark, remaining, dv_path)
-    else:
-        cleared = 0
+    cleared = _clear_tombstones(dv_path, drop) if drop else 0
     return {
         "folded_files": len(affected),
         "new_files": len(new_files),

@@ -255,34 +255,14 @@ def read_evolved(
     to legacy tombstones plus those commits (the versioned-delete
     snapshot contract, ``deletes.applied_commit_ids``); ``None``
     subtracts everything."""
-    from columnar_analytics_engine_spark.deletes import (
-        _dv,
-        _strip_scheme,
-        filter_dv_commits,
-    )
-    from columnar_analytics_engine_spark.manifest import read_manifest
+    from columnar_analytics_engine_spark.deletes import _dv, subtract_tombstones
+    from columnar_analytics_engine_spark.layout import columns_by_file
     from columnar_analytics_engine_spark.skipping import read_indexed
 
-    dv = (
-        filter_dv_commits(_dv(spark, dv_path), dv_commit_ids)
-        if dv_path is not None
-        else None
-    )
+    dv = _dv(spark, dv_path, dv_commit_ids) if dv_path is not None else None
 
     def minus_dv(df: DataFrame) -> DataFrame:
-        if dv is None:
-            return df
-        tagged = df.select(
-            "*",
-            _strip_scheme(F.col("_metadata.file_path")).alias("__dv_file"),
-            F.col("_metadata.row_index").alias("__dv_ri"),
-        )
-        return tagged.join(
-            F.broadcast(dv),
-            (tagged["__dv_file"] == dv["file"])
-            & (tagged["__dv_ri"] == dv["row_index"]),
-            "left_anti",
-        ).drop("__dv_file", "__dv_ri")
+        return df if dv is None else subtract_tombstones(df, dv)
 
     spec = read_schema_spec(index_path)
     if spec is None:
@@ -293,17 +273,12 @@ def read_evolved(
             if os.path.isdir(data_path):
                 reader = reader.option("basePath", data_path)
             base = reader.parquet(*sorted(files))
-        cols = base.columns
-        return minus_dv(base).select(*cols)
-    m = read_manifest(spark, index_path, as_of=as_of).select("file", "column")
-    if files is not None:
-        fdf = spark.createDataFrame([(f,) for f in files], "file string")
-        m = m.join(F.broadcast(fdf), "file", "left_semi")
+        return minus_dv(base)
+    wanted = set(files) if files is not None else None
     cohorts: dict[frozenset, list[str]] = {}
-    for r in (
-        m.groupBy("file").agg(F.collect_set("column").alias("cols")).collect()
-    ):
-        cohorts.setdefault(frozenset(r["cols"]), []).append(r["file"])
+    for f, cs in columns_by_file(index_path, as_of).items():
+        if wanted is None or f in wanted:
+            cohorts.setdefault(frozenset(cs), []).append(f)
     if not cohorts:
         fields = ", ".join(
             f"{c['name']} {c['type']}" for c in spec["columns"]

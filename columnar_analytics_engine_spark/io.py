@@ -36,13 +36,13 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# stat identity -> ns-column list.  ``read_table`` runs on every query
-# INVOCATION (the bench times 3 runs per query), and the pyarrow footer
-# open below is driver-side, single-threaded work paid per call; for
-# the fixed benchmark tables the answer only changes when the file
-# changes, so key the memo on the stat identity (guide §5: keep the
-# driver out of the per-run path).
-_NS_FIELDS_CACHE: dict[tuple, list[str]] = {}
+# path -> (stat identity, ns-column list).  ``read_table`` runs on every
+# query INVOCATION (the bench times 3 runs per query), and the pyarrow
+# footer open below is driver-side, single-threaded work paid per call;
+# the answer only changes when a file changes, so the memo is checked
+# against the stat identity.  One entry per path: a new identity
+# replaces the superseded one.
+_NS_FIELDS_CACHE: dict[str, tuple[tuple, list[str]]] = {}
 
 
 def _first_part(p: str) -> str | None:
@@ -60,22 +60,24 @@ def _first_part(p: str) -> str | None:
 
 def _stat_identity(path: str) -> tuple | None:
     """Stat-based identity of a parquet file/directory: the path stat
-    plus the first part FILE's stat, so both dirent changes (files
-    added/removed/renamed — every Spark-style rewrite) and an in-place
-    rewrite of the inspected part file invalidate memo entries keyed
-    on it (ADVICE r14)."""
+    plus every part file's ``(name, mtime_ns, size)``, so both dirent
+    changes (files added/removed/renamed — every Spark-style rewrite)
+    and an in-place rewrite of ANY part file change it (None: missing
+    path or no part file)."""
     try:
         st = os.stat(path)
-        fp = _first_part(path)
-        if fp is None:
-            return None
-        stf = os.stat(fp)
-        return (
-            os.path.abspath(path), st.st_mtime_ns, st.st_size,
-            os.path.abspath(fp), stf.st_mtime_ns, stf.st_size,
+        if not os.path.isdir(path):
+            return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+        parts = tuple(
+            (e.name, e.stat().st_mtime_ns, e.stat().st_size)
+            for e in sorted(os.scandir(path), key=lambda e: e.name)
+            if e.name.endswith(".parquet") and not e.name.startswith(("_", "."))
         )
     except OSError:
         return None
+    if not parts:
+        return None
+    return (os.path.abspath(path), st.st_mtime_ns, st.st_size, parts)
 
 
 def _ns_timestamp_fields(path: str) -> list[str]:
@@ -88,14 +90,10 @@ def _ns_timestamp_fields(path: str) -> list[str]:
     import pyarrow.parquet as pq
     import pyarrow.types as pat
 
-    # key on the stat of the FILE actually inspected (via
-    # _stat_identity), not just the directory: a part file rewritten in
-    # place (same name) leaves the directory dirents — and thus the
-    # directory stat — unchanged, so a directory-keyed memo could serve
-    # a stale column list (ADVICE r14)
-    cache_key = _stat_identity(path)
-    if cache_key is not None and cache_key in _NS_FIELDS_CACHE:
-        return _NS_FIELDS_CACHE[cache_key]
+    ident = _stat_identity(path)
+    hit = _NS_FIELDS_CACHE.get(os.path.abspath(path))
+    if ident is not None and hit is not None and hit[0] == ident:
+        return hit[1]
 
     def _compute() -> list[str]:
         file_path = _first_part(path)
@@ -122,12 +120,12 @@ def _ns_timestamp_fields(path: str) -> list[str]:
         return sorted(ns_names & int64_cols)
 
     result = _compute()
-    if cache_key is not None:
-        _NS_FIELDS_CACHE[cache_key] = result
+    if ident is not None:
+        _NS_FIELDS_CACHE[os.path.abspath(path)] = (ident, result)
     return result
 
 
-# (applicationId, table stat identity) -> resolved source DataFrame.
+# path -> ((applicationId, table stat identity), resolved DataFrame).
 # ``spark.read.parquet`` lists the directory and infers the schema from
 # a footer on EVERY call — ~80 ms of driver-side work per table per
 # invocation (measured round 15: join_star_tpch_q5 re-resolved its six
@@ -137,8 +135,9 @@ def _ns_timestamp_fields(path: str) -> list[str]:
 # caching: no rows are materialized, every action recomputes from the
 # parquet files, and the memo invalidates when the table's stat
 # identity changes (file added/removed/rewritten) or the session is a
-# different application.
-_TABLE_DF_CACHE: dict[tuple, DataFrame] = {}
+# different application.  One entry per path (a new identity replaces
+# the superseded one): the memo is bounded by the table paths read.
+_TABLE_DF_CACHE: dict[str, tuple[tuple, DataFrame]] = {}
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -150,6 +149,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     projection pushdown happen when the caller filters/selects.
     Nanosecond timestamps are truncated to Spark's microsecond
     resolution on read.
+
+    The resolved DataFrame is memoized per path and re-resolved when
+    any part file is added, removed or rewritten, so repeated calls
+    return the SAME DataFrame object.  Callers share it: a self-join
+    must alias the two sides (``df.alias("a")``) or rename columns
+    first, as a join condition built from ``df["col"]`` on both sides
+    of one shared object is ambiguous.
     """
     from pyspark.sql import functions as F
 
@@ -158,9 +164,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cache_key = None
     if ident is not None:
         cache_key = (spark.sparkContext.applicationId,) + ident
-        cached = _TABLE_DF_CACHE.get(cache_key)
-        if cached is not None:
-            return cached
+        hit = _TABLE_DF_CACHE.get(os.path.abspath(path))
+        if hit is not None and hit[0] == cache_key:
+            return hit[1]
     ns_cols = _ns_timestamp_fields(path)
     # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) would otherwise be
     # inferred as TIMESTAMP_NTZ, which Spark's epoch/tz functions reject;
@@ -186,7 +192,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
     if cache_key is not None:
-        _TABLE_DF_CACHE[cache_key] = df
+        _TABLE_DF_CACHE[os.path.abspath(path)] = (cache_key, df)
     return df
 
 

@@ -77,7 +77,16 @@ def morton_expr(bins: list[Column], bits: int) -> Column:
 # equal (the repeated bin text collapses under codegen subexpression
 # elimination exactly like the shared Column references did).
 
+def quote_ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backtick-quoted, with any
+    embedded backtick doubled — safe for names holding dots, spaces or
+    reserved words."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _sql_scaled_bin(c: str, mn: str, mx: str, levels: int) -> str:
+    """:func:`scaled_bin` over the columns NAMED ``c``, ``mn``, ``mx``."""
+    c, mn, mx = quote_ident(c), quote_ident(mn), quote_ident(mx)
     return (
         f"least({levels}, greatest(0, cast(floor(((cast({c} as double) - {mn})"
         f" / greatest({mx} - {mn}, 1e-300)) * {float(levels)!r}D) as bigint)))"
@@ -85,6 +94,8 @@ def _sql_scaled_bin(c: str, mn: str, mx: str, levels: int) -> str:
 
 
 def _sql_morton(bins: list[str], bits: int) -> str:
+    """:func:`morton_expr` over the SQL expressions ``bins`` (built by
+    :func:`_sql_scaled_bin`, which quotes the column names)."""
     terms = " + ".join(
         f"shiftleft((shiftright(({b}), {bit}) & 1), {bit * len(bins) + i})"
         for bit in range(bits)
@@ -97,8 +108,8 @@ def _with_minmax(df: DataFrame, cols: list[str]) -> DataFrame:
     """Join the exact per-column min/max (as double) alongside every
     row: one 1-row aggregate, broadcast in-plan — no driver collect."""
     stats = df.agg(
-        *[F.min(c).cast("double").alias(f"_mn_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"_mx_{c}") for c in cols],
+        *[F.min(F.col(quote_ident(c))).cast("double").alias(f"_mn_{c}") for c in cols],
+        *[F.max(F.col(quote_ident(c))).cast("double").alias(f"_mx_{c}") for c in cols],
     )
     return df.join(F.broadcast(stats))
 
@@ -201,7 +212,7 @@ def zorder_frame(
             raise ValueError("quantile binning caps bits at 8 (256 bins)")
         cuts = quantile_cuts(df, cols, bits)
         j = df
-        z = morton_expr([rank_bin(F.col(c), cuts[c]) for c in cols], bits)
+        z = morton_expr([rank_bin(F.col(quote_ident(c)), cuts[c]) for c in cols], bits)
         drop = []
     else:
         raise ValueError(f"unknown binning method {method!r}")
@@ -245,22 +256,21 @@ def index_extents(
     :func:`bucket_extents` — the metric over what was actually
     written, file granularity.  Only int/num columns carry comparable
     bounds; files without stats contribute no row (they would read as
-    depth-unknown, not as well-clustered)."""
+    depth-unknown, not as well-clustered).  A projection of the
+    manifest's local relation: collecting it runs no Spark job."""
     from columnar_analytics_engine_spark.manifest import read_manifest
 
-    idx = read_manifest(spark, index_path)
-    cols_df = spark.createDataFrame(
-        [(c,) for c in probe_cols], "probe_col string"
-    )
     return (
-        idx.join(
-            F.broadcast(cols_df), idx["column"] == cols_df["probe_col"]
+        read_manifest(spark, index_path)
+        .filter(
+            F.col("column").isin(*probe_cols)
+            & F.col("has_stats")
+            & F.col("kind").isin("int", "num")
         )
-        .filter(F.col("has_stats") & F.col("kind").isin("int", "num"))
         .select(
             F.lit(layout).alias("layout"),
             F.col("file").alias("bucket"),
-            "probe_col",
+            F.col("column").alias("probe_col"),
             F.coalesce(F.col("min_int").cast("double"), F.col("min_num")).alias("mn"),
             F.coalesce(F.col("max_int").cast("double"), F.col("max_num")).alias("mx"),
         )
@@ -335,25 +345,31 @@ def overlap_candidates(
 ) -> list[str]:
     """Files whose ``col`` extent overlaps at least ``min_overlaps``
     OTHER files' extents, worst first, capped at ``max_files`` — the
-    rewrite set.  Computed entirely on the (file-count-sized) index;
-    ties broken by file name so the selection is deterministic."""
-    e = index_extents(spark, index_path, [col])
-    a, b = e.alias("a"), F.broadcast(e.alias("b"))
-    counts = (
-        a.join(
-            b,
-            (F.col("a.probe_col") == F.col("b.probe_col"))
-            & (F.col("a.bucket") != F.col("b.bucket"))
-            & (F.col("a.mn") <= F.col("b.mx"))
-            & (F.col("b.mn") <= F.col("a.mx")),
-        )
-        .groupBy(F.col("a.bucket").alias("file"))
-        .agg(F.count(F.lit(1)).alias("n_overlaps"))
-        .filter(F.col("n_overlaps") >= min_overlaps)
-        .orderBy(F.desc("n_overlaps"), "file")
-        .limit(max_files)
+    rewrite set.  Computed on the driver from the (file-count-sized)
+    extents: with both bound arrays sorted, a file's overlap count is
+    ``#{mn <= its mx} - #{mx < its mn}`` minus itself, so the whole
+    count is two binary searches per file.  Ties broken by file name
+    so the selection is deterministic."""
+    import numpy as np
+
+    ext = [
+        (r["bucket"], r["mn"], r["mx"])
+        for r in index_extents(spark, index_path, [col]).collect()
+        if r["mn"] is not None and r["mx"] is not None
+    ]
+    mn = np.array([e[1] for e in ext], dtype=float)
+    mx = np.array([e[2] for e in ext], dtype=float)
+    n = (
+        np.searchsorted(np.sort(mn), mx, side="right")
+        - np.searchsorted(np.sort(mx), mn, side="left")
+        - 1
     )
-    return [r["file"] for r in counts.collect()]
+    ranked = sorted(
+        (-int(k), f)
+        for (f, _, _), k in zip(ext, n)
+        if k >= max(1, min_overlaps)
+    )
+    return [f for _, f in ranked[:max_files]]
 
 
 def group_by_partition_dir(
@@ -379,6 +395,18 @@ def group_by_partition_dir(
     return groups
 
 
+def columns_by_file(index_path: str, as_of: int | None = None) -> dict[str, set[str]]:
+    """Each manifest file's indexed column set (its physical schema
+    cohort on an evolved table)."""
+    from columnar_analytics_engine_spark.manifest import manifest_table
+
+    m = manifest_table(index_path, as_of, columns=["file", "column"])
+    out: dict[str, set[str]] = {}
+    for f, c in zip(m.column("file").to_pylist(), m.column("column").to_pylist()):
+        out.setdefault(f, set()).add(c)
+    return out
+
+
 def split_groups_by_cohort(
     spark: SparkSession,
     index_path: str,
@@ -392,18 +420,11 @@ def split_groups_by_cohort(
     groups preserve every byte; the evolved view reconciles at read
     time as always.  No-op (identity) when the table never evolved."""
     from columnar_analytics_engine_spark.evolution import read_schema_spec
-    from columnar_analytics_engine_spark.manifest import read_manifest
 
     if read_schema_spec(index_path) is None:
         return groups
-    from pyspark.sql import functions as _F
-
     cols_of = {
-        r["file"]: frozenset(r["cols"])
-        for r in read_manifest(spark, index_path)
-        .groupBy("file")
-        .agg(_F.collect_set("column").alias("cols"))
-        .collect()
+        f: frozenset(cs) for f, cs in columns_by_file(index_path).items()
     }
     out: dict[str, list[str]] = {}
     for dest, files in groups.items():
@@ -451,12 +472,10 @@ def _swap_index(
     multi-table transaction commit.  Returns the version number."""
     from columnar_analytics_engine_spark.manifest import (
         current_version,
-        read_manifest,
+        manifest_table,
         write_manifest,
     )
-    from columnar_analytics_engine_spark.skipping import _stats_df
-
-    from columnar_analytics_engine_spark.evolution import read_schema_spec
+    from columnar_analytics_engine_spark.skipping import _rebase_index
 
     # the conflict check runs against the version this change was
     # computed FROM: the caller's plan-time base when supplied (a
@@ -466,33 +485,15 @@ def _swap_index(
         expected_current if expected_current is not None
         else current_version(index_path)
     )
-    idx = read_manifest(spark, index_path)
-    # evolved tables: new files may carry columns no prior file has —
-    # index ALL their columns (cohort detection in read_evolved keys
-    # off per-file manifest rows).  Un-evolved tables keep the index's
-    # original column restriction.
-    if read_schema_spec(index_path) is not None:
-        columns = None
-    else:
-        columns = sorted(
-            {r["column"] for r in idx.select("column").distinct().collect()}
-        )
-    kept = idx
-    if drop_files:
-        drop_df = spark.createDataFrame(
-            [(f,) for f in drop_files], "file string"
-        )
-        kept = idx.join(F.broadcast(drop_df), "file", "left_anti")
-    out = kept
-    if add_files:
-        out = kept.unionByName(
-            _stats_df(spark, sorted(add_files), columns, base_path=base_path)
-        )
     # optimistic concurrency: this new version was computed FROM
     # base_version; refuse to publish over someone else's newer one
     return write_manifest(
-        spark, index_path, out, publish=publish,
-        expected_current=base_version,
+        spark, index_path,
+        _rebase_index(
+            spark, index_path, manifest_table(index_path),
+            drop_files, add_files, base_path,
+        ),
+        publish=publish, expected_current=base_version,
     )
 
 
@@ -853,10 +854,9 @@ def compact_small_files(
     publish discipline, originals persist until vacuum)."""
     import os
 
-    from columnar_analytics_engine_spark.manifest import read_manifest
+    from columnar_analytics_engine_spark.manifest import manifest_files
 
-    m = read_manifest(spark, index_path)
-    files = sorted({r["file"] for r in m.select("file").distinct().collect()})
+    files = manifest_files(index_path)
     cutoff = small_bytes if small_bytes is not None else target_file_bytes // 2
     from columnar_analytics_engine_spark.manifest import current_version
 
@@ -929,25 +929,22 @@ def table_health(
     in the index, zero data-file I/O."""
     import os
 
+    from columnar_analytics_engine_spark.deletes import dv_table
     from columnar_analytics_engine_spark.evolution import read_schema_spec
     from columnar_analytics_engine_spark.manifest import (
         current_version,
+        file_rows,
         list_versions,
-        read_manifest,
     )
 
-    m = read_manifest(spark, index_path)
-    per_file = m.select("file", "file_rows").distinct()
-    agg = per_file.groupBy().agg(
-        F.count("*").alias("files"), F.sum("file_rows").alias("rows")
-    ).first()
-    files = [r["file"] for r in per_file.select("file").collect()]
-    total_bytes = sum(os.path.getsize(f) for f in files if os.path.exists(f))
+    rows_of = file_rows(index_path)
+    n_files = len(rows_of)
+    total_bytes = sum(os.path.getsize(f) for f in rows_of if os.path.exists(f))
     report: dict = {
-        "files": agg["files"],
-        "rows": agg["rows"],
+        "files": n_files,
+        "rows": sum(rows_of.values()) if rows_of else None,
         "total_mb": round(total_bytes / 1e6, 2),
-        "avg_file_mb": round(total_bytes / 1e6 / max(1, agg["files"]), 2),
+        "avg_file_mb": round(total_bytes / 1e6 / max(1, n_files), 2),
         "current_version": current_version(index_path),
         "retained_versions": list_versions(index_path),
         "reclaimable_files": len(
@@ -956,13 +953,9 @@ def table_health(
             )
         ),
     }
-    if dv_path is not None and os.path.exists(dv_path):
-        dv = spark.read.parquet(dv_path)
-        report["tombstones"] = dv.count()
-        report["tombstoned_files"] = dv.select("file").distinct().count()
-    else:
-        report["tombstones"] = 0
-        report["tombstoned_files"] = 0
+    dv_files = dv_table(dv_path).column("file").to_pylist() if dv_path else []
+    report["tombstones"] = len(dv_files)
+    report["tombstoned_files"] = len(set(dv_files))
     from columnar_analytics_engine_spark.clusterspec import (
         read_spec_history,
     )
@@ -973,12 +966,8 @@ def table_health(
         report["active_cluster_cols"] = cluster_hist[-1]["cols"]
     spec = read_schema_spec(index_path)
     report["evolved"] = spec is not None
-    report["cohorts"] = (
-        m.groupBy("file")
-        .agg(F.sort_array(F.collect_set("column")).alias("cols"))
-        .select("cols")
-        .distinct()
-        .count()
+    report["cohorts"] = len(
+        {frozenset(cs) for cs in columns_by_file(index_path).values()}
     )
     if probe_cols:
         depth = {

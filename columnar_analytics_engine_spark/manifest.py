@@ -35,6 +35,11 @@ structure on plain Parquet:
 * Multi-table transactions build on the ``publish=False`` staging mode:
   stage versions for several tables, then flip one catalog pointer
   (``transaction.py``).
+* Driver-side metadata: a manifest is file-count-sized and every reader
+  already holds its file list on the driver, so manifests are read
+  (:func:`manifest_table`) and written (:func:`write_manifest`) with
+  ``pyarrow.parquet`` — no Spark job.  :func:`read_manifest` wraps the
+  Arrow table as a local relation; filters over it collect job-free.
 
 Legacy layout (a flat Parquet directory at ``index_path`` with no
 ``_CURRENT``) is read transparently and upgraded to version 1 on the
@@ -99,12 +104,7 @@ def current_version(index_path: str) -> int | None:
 
 
 def _is_legacy_flat(index_path: str) -> bool:
-    if not os.path.isdir(index_path):
-        return False
-    return any(
-        f.endswith(".parquet") and not f.startswith(("_", "."))
-        for f in os.listdir(index_path)
-    )
+    return bool(parquet_parts(index_path))
 
 
 def manifest_dir(index_path: str, as_of: int | None = None) -> str:
@@ -127,12 +127,63 @@ def manifest_dir(index_path: str, as_of: int | None = None) -> str:
     raise FileNotFoundError(f"no manifest at {index_path}")
 
 
+def parquet_parts(d: str) -> list[str]:
+    """The visible Parquet files directly under ``d``, sorted: Spark's
+    ``_SUCCESS`` / ``.crc``, in-flight ``.tmp`` files and subdirs (a
+    legacy flat index's ``ver-*``) are skipped."""
+    if not os.path.isdir(d):
+        return []
+    return sorted(
+        os.path.join(d, f)
+        for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def read_parquet_parts(d: str, columns: list[str] | None = None, schema=None):
+    """One Arrow table from :func:`parquet_parts` of ``d``.  With
+    ``schema``, columns a part lacks read as nulls (an older file
+    written before a column existed)."""
+    import pyarrow.parquet as pq
+
+    parts = parquet_parts(d)
+    if not parts and schema is not None:
+        return schema.empty_table()
+    return pq.read_table(
+        parts, columns=columns, schema=schema, partitioning=None
+    )
+
+
+def manifest_table(
+    index_path: str, as_of: int | None = None, columns: list[str] | None = None
+):
+    """The manifest snapshot (current, or ``as_of`` a retained version)
+    as a ``pyarrow.Table``, read on the driver with no Spark job.
+    Reads Spark-written version dirs (part file + ``_SUCCESS`` +
+    ``.crc``), Arrow-written ones and legacy flat indexes alike."""
+    return read_parquet_parts(manifest_dir(index_path, as_of), columns=columns)
+
+
+def manifest_files(index_path: str, as_of: int | None = None) -> list[str]:
+    """The distinct data files a manifest snapshot lists, sorted."""
+    files = manifest_table(index_path, as_of, columns=["file"]).column("file")
+    return sorted(set(files.to_pylist()))
+
+
+def file_rows(index_path: str, as_of: int | None = None) -> dict[str, int]:
+    """Each file's footer row count (``file_rows``) in a stats-index
+    manifest snapshot."""
+    m = manifest_table(index_path, as_of, columns=["file", "file_rows"])
+    return dict(zip(m.column("file").to_pylist(), m.column("file_rows").to_pylist()))
+
+
 def read_manifest(
     spark: SparkSession, index_path: str, as_of: int | None = None
 ) -> DataFrame:
     """The manifest snapshot as a DataFrame (current, or ``as_of`` a
-    retained version)."""
-    return spark.read.parquet(manifest_dir(index_path, as_of))
+    retained version): :func:`manifest_table` as an Arrow-backed local
+    relation, for callers that join metadata with data."""
+    return spark.createDataFrame(manifest_table(index_path, as_of))
 
 
 def _publish_pointer(index_path: str, version: int) -> None:
@@ -377,15 +428,30 @@ def _allocate_version(index_path: str) -> int:
             version += 1
 
 
+def write_parquet_part(d: str, table) -> None:
+    """Write ``table`` as one Parquet file into dir ``d`` (dot-prefixed
+    tmp + ``os.replace``: readers see all of it or none).  Schema
+    metadata is dropped: Spark trusts a copied Spark row-schema key
+    over the file's real columns."""
+    import pyarrow.parquet as pq
+
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(table.replace_schema_metadata(None), tmp)
+    os.replace(tmp, os.path.join(d, name))
+
+
 def write_manifest(
     spark: SparkSession,
     index_path: str,
-    df: DataFrame,
+    df,
     publish: bool = True,
     expected_current: int | None = None,
 ) -> int:
-    """Write ``df`` as the next manifest version and (by default)
-    publish it with an atomic pointer flip.  Returns the version
+    """Write ``df`` (a ``pyarrow.Table``, or a DataFrame, collected once
+    with ``toArrow``) as the next manifest version — one Parquet file
+    written on the driver — and (by default) publish it with an atomic
+    pointer flip.  Returns the version
     number.  With ``publish=False`` the version is STAGED only —
     invisible to readers until :func:`publish_version` (or a
     ``transaction.Catalog`` commit) flips a pointer; a crash before
@@ -404,12 +470,13 @@ def write_manifest(
     A legacy flat index is upgraded in place: its rows become
     ``ver-<n>`` and the flat files are removed after the pointer exists
     (a crash in between leaves both readable states consistent)."""
+    table = df if not isinstance(df, DataFrame) else df.toArrow()
     os.makedirs(index_path, exist_ok=True)
     legacy = current_version(index_path) is None and _is_legacy_flat(index_path)
     version = _allocate_version(index_path)
-    # append into the freshly CLAIMED (empty) dir: overwrite would
-    # delete-and-recreate it, reopening the mkdir race window
-    df.coalesce(1).write.mode("append").parquet(_ver_dir(index_path, version))
+    # write into the freshly CLAIMED (empty) dir: recreating it would
+    # reopen the mkdir race window
+    write_parquet_part(_ver_dir(index_path, version), table)
     if publish:
         # check + flip under the publish lock: two writers from the
         # same base must serialize, or both pass the check and the
@@ -426,10 +493,23 @@ def write_manifest(
                     )
             _publish_pointer(index_path, version)
         if legacy:
-            for f in os.listdir(index_path):
-                if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                    os.remove(os.path.join(index_path, f))
+            for f in parquet_parts(index_path):
+                os.remove(f)
     return version
+
+
+def copy_manifest(index_path: str, version: int) -> int:
+    """Stage (never publish) a new version whose manifest is a byte copy
+    of ``version``'s — the same-file-set version a delete commit
+    publishes with a new ``_DV_COMMITS`` sidecar.  Returns the staged
+    version number."""
+    new = _allocate_version(index_path)
+    for src in parquet_parts(_ver_dir(index_path, version)):
+        name = os.path.basename(src)
+        tmp = os.path.join(_ver_dir(index_path, new), f".{name}.tmp")
+        shutil.copyfile(src, tmp)
+        os.replace(tmp, os.path.join(_ver_dir(index_path, new), name))
+    return new
 
 
 def publish_version(
@@ -531,17 +611,11 @@ def referenced_files(
 ) -> set[str]:
     """Union of data files referenced by the given manifest versions
     (default: every retained version — the set vacuum must NOT
-    delete).  All version dirs are read in ONE Spark job (identical
-    schemas), so the cost is one distinct over the union, not one job
-    per retained version — at a streaming sink's per-batch cadence
-    with an 8-version window that is 1 plan instead of 8."""
+    delete).  Read on the driver, one small Parquet file per version
+    (``spark`` is unused; kept for callers)."""
     if versions is None:
-        versions = list_versions(index_path)
-        if not versions and _is_legacy_flat(index_path):
-            df = read_manifest(spark, index_path)
-            return {r["file"] for r in df.select("file").distinct().collect()}
-    if not versions:
-        return set()
-    dirs = [manifest_dir(index_path, v) for v in versions]
-    df = spark.read.parquet(*dirs)
-    return {r["file"] for r in df.select("file").distinct().collect()}
+        # a legacy flat index is its own single (current) version
+        versions = list_versions(index_path) or (
+            [None] if _is_legacy_flat(index_path) else []
+        )
+    return {f for v in versions for f in manifest_files(index_path, v)}

@@ -52,6 +52,13 @@ _DEFAULT_CONFS: dict[str, str] = {
 }
 
 
+def _default_driver_mem() -> str:
+    """48 GiB, capped at half the physical memory: a JVM whose max heap
+    exceeds RAM grows instead of collecting until the OS kills it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, min(48 * 1024, phys_mb // 2))}m"
+
+
 def get_spark(
     app_name: str = "columnar_analytics_engine_spark",
     master: str | None = None,
@@ -72,7 +79,10 @@ def get_spark(
 
     builder = SparkSession.builder.appName(app_name).master(master)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+    builder = builder.config(
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+    )
     # Whole-stage codegen emits very large methods for wide plans (k=32
     # MinHash aggregates, 48-bit SimHash sums, deep CASE towers); the JVM
     # default 240 MB code cache fills after a few such plans, the JIT shuts

@@ -13,17 +13,18 @@ opening the file).  This module is that layer for plain Parquet
 directories:
 
 * :func:`build_stats_index` — one small Parquet table, one row per
-  (file, column) with min/max/null_count read from footers.  The
-  footer reads run IN EXECUTORS (``mapInPandas`` over the file list),
-  so the build is a parallel metadata scan, not a driver loop.
+  (file, column) with min/max/null_count read from footers (on the
+  driver for small file lists, else in executors — ``_stats_table``),
+  written as a manifest version on the driver.
 * :func:`update_stats_index` — incremental: only footers of files not
   yet indexed are read (an appending corpus never re-reads old
   footers), and rows for vanished files are dropped.
 * :func:`plan_skipping` / :func:`read_skipping` — evaluate a
   conjunctive predicate against the index (interval logic per clause,
-  conservative wherever stats are missing), collect the SURVIVING file
-  list (driver memory bounded by the file list — the same planning
-  shape as Iceberg manifest pruning), and read only those files.  The
+  conservative wherever stats are missing) on the driver, with no
+  Spark job (driver memory bounded by the file list — the same
+  planning shape as Iceberg manifest pruning), and read only the
+  surviving files.  The
   predicate is still applied exactly on top of the pruned scan, so
   skipping is a pure superset optimization: it can never change
   results, only skip I/O.
@@ -51,6 +52,7 @@ import os
 import re
 from typing import Any, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,6 +62,13 @@ INDEX_SCHEMA = (
     "min_str string, max_str string, "
     "null_count long, file_rows long, has_stats boolean"
 )
+# the same schema in Arrow: manifests are written on the driver
+INDEX_ARROW_SCHEMA = pa.schema([
+    (n, {"string": pa.string(), "long": pa.int64(), "double": pa.float64(),
+         "boolean": pa.bool_()}[t])
+    for n, t in (f.split() for f in INDEX_SCHEMA.split(", "))
+])
+
 
 _OPS = {
     "eq": "eq", "=": "eq", "==": "eq",
@@ -268,69 +277,61 @@ def _make_footer_scanner(columns: list[str] | None, base_path: str | None = None
     return _footer_stats_rows
 
 
-def _stats_df(
+def _stats_table(
     spark: SparkSession,
     files: list[str],
     columns: list[str] | None,
     base_path: str | None = None,
-) -> DataFrame:
-    """Footer scan → index rows.
+):
+    """Footer scan → index rows, as a ``pyarrow.Table`` in
+    :data:`INDEX_ARROW_SCHEMA`.
 
     Footer reads are pure metadata (no data pages), so the executor is
     chosen by FILE COUNT, not data size (round 15, guide §5):
 
     * ``len(files)`` ≤ ``SPARK_GRAFT_INDEX_DRIVER_MAX`` (default 64):
-      the driver scans the footers itself and ships the rows as one
-      Arrow-backed local relation.  Measured on the bench fixture
-      (16 files): 0.004 s driver-side vs 0.6 s warm / 9 s cold for the
-      distributed path — the distributed cost is Python-worker spin-up
-      and per-task dispatch, not footer I/O.  The driver already holds
-      the file list, so this adds no new driver data dependency.
+      the driver scans the footers itself.  Measured on the bench
+      fixture (16 files): 0.004 s driver-side vs 0.6 s warm / 9 s cold
+      for the distributed path — the distributed cost is Python-worker
+      spin-up and per-task dispatch, not footer I/O.  An ``OSError``
+      (a data path only executors can reach) falls back to the
+      distributed path; set ``SPARK_GRAFT_INDEX_DRIVER_MAX=0`` on such
+      clusters to skip the attempt.  The INDEX path must be
+      driver-reachable either way.
     * larger file lists keep the distributed ``mapInPandas`` scan (one
-      task per slice) — at 100 TB the index covers thousands of files
-      on object storage and per-footer latency dominates, exactly the
-      regime the distributed path exists for.
+      task per slice), collected once with ``toArrow`` — at 100 TB
+      per-footer latency on object storage dominates.
 
     Both paths run the SAME scanner closure, so the row set is
-    identical; only file-list parallelization differs.  The file-list
-    frame itself is created Arrow-backed (pandas) rather than from
-    Python tuples: a tuple-list ``createDataFrame`` is Python-RDD
-    backed, and every downstream action (including the manifest's
-    ``coalesce(1)`` write) re-runs Python workers per partition —
-    measured ~3.5 s per 48-row manifest write, pure dispatch.
+    identical; only file-list parallelization differs.
     """
-    import pandas as pd
-
     cols = list(columns) if columns is not None else None
-
-    field_order = [
-        "file", "column", "kind", "min_int", "max_int", "min_num",
-        "max_num", "min_str", "max_str", "null_count", "file_rows",
-        "has_stats",
-    ]
-
     footer_stats_rows = _make_footer_scanner(cols, base_path)
 
     driver_max = int(os.environ.get("SPARK_GRAFT_INDEX_DRIVER_MAX", "64"))
     if len(files) <= driver_max:
-        import pyarrow as pa
+        try:
+            rows = list(footer_stats_rows(files))
+        except OSError:
+            pass  # not reachable from the driver: scan on executors
+        else:
+            return pa.table(
+                {k: [r[k] for r in rows] for k in INDEX_ARROW_SCHEMA.names},
+                schema=INDEX_ARROW_SCHEMA,
+            )
+    scan = _scan_files(spark, files, footer_stats_rows, INDEX_SCHEMA)
+    return scan.toArrow().cast(INDEX_ARROW_SCHEMA)
 
-        rows = list(footer_stats_rows(files))
-        tbl = pa.table(
-            {k: [r[k] for r in rows] for k in field_order},
-            schema=pa.schema(
-                [
-                    ("file", pa.string()), ("column", pa.string()),
-                    ("kind", pa.string()), ("min_int", pa.int64()),
-                    ("max_int", pa.int64()), ("min_num", pa.float64()),
-                    ("max_num", pa.float64()), ("min_str", pa.string()),
-                    ("max_str", pa.string()), ("null_count", pa.int64()),
-                    ("file_rows", pa.int64()), ("has_stats", pa.bool_()),
-                ]
-            ),
-        )
-        return spark.createDataFrame(tbl)
 
+def _scan_files(spark: SparkSession, files: list[str], rows_fn, schema: str) -> DataFrame:
+    """``rows_fn`` (a scanner closure: file list → row dicts) run over
+    ``files`` in executors, one task per slice.  The file list is an
+    Arrow-backed (pandas) frame, not Python tuples: a tuple-list
+    ``createDataFrame`` is Python-RDD backed and re-runs Python workers
+    on every action over it."""
+    import pandas as pd
+
+    fields = [f.split()[0] for f in schema.split(", ")]
     n_slices = max(1, min(len(files), spark.sparkContext.defaultParallelism))
     files_df = spark.createDataFrame(
         pd.DataFrame({"file": files})
@@ -338,14 +339,10 @@ def _stats_df(
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows = list(footer_stats_rows(list(b["file"])))
-            yield pd.DataFrame(
-                {k: [r[k] for r in rows] for k in field_order}
-                if rows
-                else {k: [] for k in field_order}
-            )
+            rows = list(rows_fn(list(b["file"])))
+            yield pd.DataFrame({k: [r[k] for r in rows] for k in fields})
 
-    return files_df.mapInPandas(scan, schema=INDEX_SCHEMA)
+    return files_df.mapInPandas(scan, schema=schema)
 
 
 def build_stats_index(
@@ -367,9 +364,42 @@ def build_stats_index(
     if not files:
         raise FileNotFoundError(f"no parquet files under {data_path}")
     write_manifest(
-        spark, index_path, _stats_df(spark, files, columns, base_path=data_path)
+        spark, index_path, _stats_table(spark, files, columns, base_path=data_path)
     )
     return len(files)
+
+
+def _rebase_index(
+    spark: SparkSession,
+    index_path: str,
+    idx,
+    drop_files: list[str],
+    add_files: list[str],
+    base_path: str,
+):
+    """Manifest rows ``idx`` minus the rows of ``drop_files`` plus
+    footer-scanned rows for ``add_files`` — the next version's table,
+    computed on the driver (shared by ``update_stats_index`` and
+    ``layout._swap_index``)."""
+    import pyarrow.compute as pc
+
+    from columnar_analytics_engine_spark.evolution import read_schema_spec
+
+    out = idx.select(INDEX_ARROW_SCHEMA.names).cast(INDEX_ARROW_SCHEMA)
+    if drop_files:
+        gone = pc.is_in(out["file"], value_set=pa.array(drop_files, pa.string()))
+        out = out.filter(pc.invert(gone))
+    if add_files:
+        # new files are indexed on the columns the index already carries
+        # — except on a schema-evolved table, where they may carry new
+        # columns that cohort detection (read_evolved) must see
+        columns = (
+            None if read_schema_spec(index_path) is not None
+            else sorted(set(idx.column("column").to_pylist()))
+        )
+        new = _stats_table(spark, sorted(add_files), columns, base_path=base_path)
+        out = pa.concat_tables([out, new])
+    return out
 
 
 def update_stats_index(
@@ -389,14 +419,15 @@ def update_stats_index(
     referenced."""
     from columnar_analytics_engine_spark.manifest import (
         current_version as _manifest_current,
-        read_manifest,
+        manifest_table,
         referenced_files,
+        write_manifest,
     )
 
     base_version = _manifest_current(index_path)
     current = set(list_parquet_files(data_path))
-    idx = read_manifest(spark, index_path)
-    indexed = {r["file"] for r in idx.select("file").distinct().collect()}
+    idx = manifest_table(index_path)
+    indexed = set(idx.column("file").to_pylist())
     known = referenced_files(spark, index_path)
     added = sorted(current - indexed - known)
     # layout guard: on a hive-partitioned table, a candidate file whose
@@ -422,30 +453,11 @@ def update_stats_index(
     removed = sorted(indexed - current)
     if not added and not removed:
         return {"added": 0, "removed": 0}
-    # indexed columns = whatever the existing index carries — unless
-    # the table has a schema-evolution spec, where new files may carry
-    # brand-new columns that cohort detection must see
-    from columnar_analytics_engine_spark.evolution import read_schema_spec
-
-    if read_schema_spec(index_path) is not None:
-        columns = None
-    else:
-        columns = sorted(
-            {r["column"] for r in idx.select("column").distinct().collect()}
-        )
-    if removed:
-        removed_df = spark.createDataFrame([(f,) for f in removed], "file string")
-        kept = idx.join(F.broadcast(removed_df), "file", "left_anti")
-    else:
-        kept = idx
-    out = (
-        kept.unionByName(_stats_df(spark, added, columns, base_path=data_path))
-        if added
-        else kept
+    write_manifest(
+        spark, index_path,
+        _rebase_index(spark, index_path, idx, removed, added, data_path),
+        expected_current=base_version,
     )
-    from columnar_analytics_engine_spark.manifest import write_manifest
-
-    write_manifest(spark, index_path, out, expected_current=base_version)
     return {"added": len(added), "removed": len(removed)}
 
 
@@ -556,29 +568,29 @@ def plan_skipping(
 ) -> dict[str, Any]:
     """Prune the file manifest with the stats index.  Returns
     ``{"files": [...kept...], "files_total": n, "files_pruned": m,
-    "clauses": [...]}``.  The pruning query runs ON the (tiny) index
-    in Spark; only the surviving file LIST is collected — driver
-    memory is bounded by the manifest, exactly like Iceberg planning.
+    "clauses": [...]}``.  The manifest is read on the driver with Arrow
+    (``manifest.manifest_table``) and the prune rule
+    (:func:`_prune_condition`, one OR over the clauses) is evaluated
+    over it as an Arrow-backed local relation, which Spark folds on the
+    driver: planning runs no Spark job.  Driver memory is bounded by
+    the manifest, exactly like Iceberg planning.
     With ``bloom_path``, eq clauses additionally prune through the
     Bloom index (``build_bloom_index``) — effective even on columns
     the layout does not cluster.
     """
-    from columnar_analytics_engine_spark.manifest import read_manifest
+    from columnar_analytics_engine_spark.manifest import manifest_table
 
     clauses = parse_predicate(predicate)
-    idx = read_manifest(spark, index_path, as_of=as_of)
-    all_files = [r["file"] for r in idx.select("file").distinct().collect()]
-    pruned = None
-    for col, op, val in clauses:
-        p = (
-            idx.filter(F.col("column") == col)
-            .filter(_prune_condition(op, val))
-            .select("file")
-        )
-        pruned = p if pruned is None else pruned.unionByName(p)
-    pruned_files = (
-        {r["file"] for r in pruned.distinct().collect()} if pruned is not None else set()
-    )
+    tbl = manifest_table(index_path, as_of=as_of)
+    all_files = list(dict.fromkeys(tbl.column("file").to_pylist()))
+    pruned_files: set[str] = set()
+    if clauses:
+        cond = None
+        for col, op, val in clauses:
+            c = (F.col("column") == col) & _prune_condition(op, val)
+            cond = c if cond is None else (cond | c)
+        pruned = spark.createDataFrame(tbl).filter(cond).select("file")
+        pruned_files = {r["file"] for r in pruned.collect()}
     if bloom_path is not None:
         for col, op, val in clauses:
             if op == "eq":
@@ -680,14 +692,13 @@ def read_indexed(
     and silently drop/null the others' columns."""
     as_of = _resolve_as_of(index_path, as_of, as_of_ts)
     from columnar_analytics_engine_spark.evolution import read_schema_spec
-    from columnar_analytics_engine_spark.manifest import read_manifest
+    from columnar_analytics_engine_spark.manifest import manifest_files
 
     if read_schema_spec(index_path) is not None:
         from columnar_analytics_engine_spark.evolution import read_evolved
 
         return read_evolved(spark, data_path, index_path, as_of=as_of)
-    idx = read_manifest(spark, index_path, as_of=as_of)
-    files = sorted({r["file"] for r in idx.select("file").distinct().collect()})
+    files = manifest_files(index_path, as_of=as_of)
     if not files:
         return spark.read.parquet(data_path).where(F.lit(False))
     reader = spark.read
@@ -725,6 +736,26 @@ def _key_kind(dtype: str) -> str | None:
     return None
 
 
+def _files_holding_a_key(rows, keys: list, kind: str) -> set[str]:
+    """Files of ``rows`` (file, lo, hi) whose [lo, hi] holds at least
+    one of ``keys`` — a binary search per file over the sorted keys, in
+    Spark's value order (for doubles NaN sorts above +inf and equals
+    itself), so the result is what ``key BETWEEN lo AND hi`` keeps.
+    Rows with a null bound hold no key."""
+    from bisect import bisect_left
+
+    def order(v):
+        return ((1, 0.0) if v != v else (0, v)) if kind == "num" else v
+
+    ks = sorted(map(order, keys))
+
+    def holds(lo, hi) -> bool:
+        i = bisect_left(ks, order(lo))
+        return i < len(ks) and ks[i] <= order(hi)
+
+    return {f for f, lo, hi in rows if lo is not None and hi is not None and holds(lo, hi)}
+
+
 def plan_skipping_join(
     spark: SparkSession,
     index_path: str,
@@ -741,10 +772,10 @@ def plan_skipping_join(
 
     * ``keys`` has ≤ ``max_keys`` distinct non-null values → exact
       membership: a file survives iff SOME key lands inside its
-      [min, max] (a broadcast ``left_semi`` of index rows against the
-      key set — the pruning query is index-sized, the key set is the
-      filtered-dim side that a broadcast join was going to ship
-      anyway).
+      [min, max] (the key set is collected once — it is the
+      filtered-dim side a broadcast join was going to ship anyway —
+      and tested against the index rows on the driver; with a bloom
+      index the per-(file, key) test runs in Spark).
     * more keys → interval envelope: a file survives iff its interval
       intersects [min(keys), max(keys)] (two 1-row aggregates; key
       count never collects).
@@ -762,11 +793,11 @@ def plan_skipping_join(
     """
     if len(keys.columns) != 1:
         raise ValueError("keys must be a one-column DataFrame of join keys")
-    from columnar_analytics_engine_spark.manifest import read_manifest
+    from columnar_analytics_engine_spark.manifest import manifest_table
 
     kind = _key_kind(dict(keys.dtypes)[keys.columns[0]])
-    idx = read_manifest(spark, index_path)
-    all_files = [r["file"] for r in idx.select("file").distinct().collect()]
+    tbl = manifest_table(index_path)
+    all_files = list(dict.fromkeys(tbl.column("file").to_pylist()))
     if kind is None:
         # non-comparable key type: nothing prunable, keep everything
         return {
@@ -776,13 +807,16 @@ def plan_skipping_join(
     k = keys.select(F.col(keys.columns[0]).alias("_k")).where(
         F.col("_k").isNotNull()
     ).distinct()
-    rows = idx.filter(F.col("column") == column)
+    rows = spark.createDataFrame(tbl).filter(F.col("column") == column)
     lo_c, hi_c = _KIND_BOUNDS[kind]
     # rows this key type can prune: matching kind with usable stats
     prunable = rows.filter(
         F.col("has_stats") & (F.col("kind") == F.lit(kind))
     )
-    n_keys = k.limit(max_keys + 1).count()
+    # one collect of at most max_keys + 1 distinct keys: it both counts
+    # them and, under the cap, feeds the driver-side membership test
+    sample = [r["_k"] for r in k.limit(max_keys + 1).collect()]
+    n_keys = len(sample)
     if n_keys == 0:
         # inner/semi join against an empty dim matches nothing
         survivors: set[str] = set()
@@ -794,15 +828,12 @@ def plan_skipping_join(
             # key hashes are computed once driver-side (the key set is
             # max_keys-bounded — the same size a broadcast ships)
             key_rows = [
-                (r["_k"], *_bloom_hash_pair(_bloom_canon(r["_k"])))
-                for r in k.collect()
+                (v, *_bloom_hash_pair(_bloom_canon(v))) for v in sample
             ]
             # Arrow-backed local relation (round 15): a tuple-list
             # createDataFrame is Python-RDD backed and re-runs Python
             # workers on every action over the broadcast build — pure
             # dispatch cost in the per-run query path (guide §5)
-            import pyarrow as pa
-
             _k_type = pa.int64() if kind == "int" else pa.string()
             k2 = spark.createDataFrame(
                 pa.table(
@@ -833,14 +864,12 @@ def plan_skipping_join(
                 F.col("m").isNull() | _bloom_member_expr("_h1", "_h2")
             )
             mode = "keys+bloom"
+            survivors = {r["file"] for r in hit.select("file").distinct().collect()}
         else:
-            hit = prunable.join(
-                F.broadcast(k),
-                F.col("_k").between(F.col(lo_c), F.col(hi_c)),
-                "left_semi",
+            survivors = _files_holding_a_key(
+                prunable.select("file", lo_c, hi_c).collect(), sample, kind
             )
             mode = "keys"
-        survivors = {r["file"] for r in hit.select("file").distinct().collect()}
     else:
         b = k.agg(F.min("_k").alias("lo"), F.max("_k").alias("hi")).first()
         excluded = prunable.filter(
@@ -853,7 +882,7 @@ def plan_skipping_join(
         } - dropped
         mode = "interval"
     # files with no prunable stats row for the column are always kept
-    covered = {r["file"] for r in prunable.select("file").distinct().collect()}
+    covered = {r["file"] for r in prunable.select("file").collect()}
     kept = [f for f in all_files if f not in covered or f in survivors]
     return {
         "files": kept,
@@ -1055,31 +1084,13 @@ def build_bloom_index(
     column DATA — a one-pass distributed scan of the indexed columns
     (``mapInPandas`` over the file list), priced like any other full
     read of those columns.  Returns the number of bloom rows written."""
-    import pandas as pd
-
     files = list_parquet_files(data_path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {data_path}")
-    n_slices = max(1, min(len(files), spark.sparkContext.defaultParallelism))
-    # Arrow-backed file list (not Python tuples): keeps the scan stage
-    # free of the Python-RDD source so only the mapInPandas data scan
-    # pays the Python boundary (round 15, see _stats_df)
-    files_df = spark.createDataFrame(
-        pd.DataFrame({"file": files})
-    ).repartition(n_slices)
-    bloom_rows = _make_bloom_scanner(list(columns), fpp, max_bits)
-    field_order = ["file", "column", "kind", "m", "k", "n_values", "words"]
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = list(bloom_rows(list(b["file"])))
-            yield pd.DataFrame(
-                {kk: [r[kk] for r in rows] for kk in field_order}
-                if rows
-                else {kk: [] for kk in field_order}
-            )
-
-    out = files_df.mapInPandas(scan, schema=BLOOM_SCHEMA)
+    out = _scan_files(
+        spark, files, _make_bloom_scanner(list(columns), fpp, max_bits),
+        BLOOM_SCHEMA,
+    )
     # repartition(1), not coalesce(1): coalesce would collapse the
     # mapInPandas stage into the single write task, serializing the
     # per-file DATA scans one Python round trip at a time; the tiny
@@ -1095,53 +1106,36 @@ def update_bloom_index(
 ) -> dict[str, int]:
     """Incremental bloom maintenance, same contract as
     ``update_stats_index``: scan only files missing from the bloom
-    table, drop rows for vanished files; cost bounded by the change."""
-    import shutil
+    table, drop rows for vanished files; cost bounded by the change.
+    Rewritten on the driver with Arrow: one new file, then the old
+    files removed (a reader in between sees rows twice, never none)."""
+    import pyarrow.compute as pc
+
+    from columnar_analytics_engine_spark.manifest import (
+        parquet_parts,
+        read_parquet_parts,
+        write_parquet_part,
+    )
 
     current = set(list_parquet_files(data_path))
-    bl = spark.read.parquet(bloom_path)
-    indexed = {r["file"] for r in bl.select("file").distinct().collect()}
+    old = parquet_parts(bloom_path)
+    bl = read_parquet_parts(bloom_path)
+    indexed = set(bl.column("file").to_pylist())
     added = sorted(current - indexed)
     removed = sorted(indexed - current)
     if not added and not removed:
         return {"added": 0, "removed": 0}
-    columns = sorted(
-        {r["column"] for r in bl.select("column").distinct().collect()}
-    )
-    kept = bl
-    if removed:
-        removed_df = spark.createDataFrame([(f,) for f in removed], "file string")
-        kept = bl.join(F.broadcast(removed_df), "file", "left_anti")
-    out = kept
+    gone = pc.is_in(bl["file"], value_set=pa.array(removed, pa.string()))
+    out = bl.filter(pc.invert(gone))
     if added:
-        import pandas as pd
-
-        n_slices = max(
-            1, min(len(added), spark.sparkContext.defaultParallelism)
+        columns = sorted(set(bl.column("column").to_pylist()))
+        rows = _scan_files(
+            spark, added, _make_bloom_scanner(columns, fpp, 1 << 22), BLOOM_SCHEMA
         )
-        # Arrow-backed file list (round 15, see build_bloom_index)
-        files_df = spark.createDataFrame(
-            pd.DataFrame({"file": added})
-        ).repartition(n_slices)
-        bloom_rows = _make_bloom_scanner(columns, fpp, 1 << 22)
-        field_order = ["file", "column", "kind", "m", "k", "n_values", "words"]
-
-        def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for b in batches:
-                rows = list(bloom_rows(list(b["file"])))
-                yield pd.DataFrame(
-                    {kk: [r[kk] for r in rows] for kk in field_order}
-                    if rows
-                    else {kk: [] for kk in field_order}
-                )
-
-        out = kept.unionByName(files_df.mapInPandas(scan, schema=BLOOM_SCHEMA))
-    staging = bloom_path.rstrip("/") + "._staging"
-    out.coalesce(1).write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).coalesce(1).write.mode("overwrite").parquet(
-        bloom_path
-    )
-    shutil.rmtree(staging, ignore_errors=True)
+        out = pa.concat_tables([out, rows.toArrow().cast(out.schema)])
+    write_parquet_part(bloom_path, out)
+    for f in old:
+        os.remove(f)
     return {"added": len(added), "removed": len(removed)}
 
 
@@ -1223,14 +1217,10 @@ def verify_stats_index(
     """
     import pyarrow.parquet as pq
 
-    from columnar_analytics_engine_spark.manifest import read_manifest
+    from columnar_analytics_engine_spark.manifest import file_rows
 
     disk = set(list_parquet_files(data_path))
-    idx = read_manifest(spark, index_path)
-    indexed_rows = {
-        r["file"]: r["file_rows"]
-        for r in idx.select("file", "file_rows").distinct().collect()
-    }
+    indexed_rows = file_rows(index_path)
     indexed = set(indexed_rows)
     drift = []
     for f in sorted(indexed & disk):

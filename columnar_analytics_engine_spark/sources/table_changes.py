@@ -61,14 +61,9 @@ def _require_plain_table(index_path: str) -> None:
 
 
 def _manifest_files(index_path: str, version: int) -> list[str]:
-    import pyarrow.parquet as pq
+    from columnar_analytics_engine_spark.manifest import manifest_files
 
-    from columnar_analytics_engine_spark.manifest import manifest_dir
-
-    d = manifest_dir(index_path, version)
-    files = sorted(
-        set(pq.read_table(d, columns=["file"]).column("file").to_pylist())
-    )
+    files = manifest_files(index_path, version)
     for f in files:
         if "=" in os.path.basename(os.path.dirname(f)):
             raise NotImplementedError(
@@ -82,34 +77,21 @@ def _dv_pairs(
     index_path: str, version: int
 ) -> dict[str, set[int]]:
     """(file → deleted row positions) applying at ``version`` — the
-    committed tombstones, resolved exactly as ``deletes.committed_dv``
-    but with pyarrow (driver-side, DV tables are delete-count-sized)."""
-    import pyarrow.parquet as pq
-
+    committed tombstones, resolved by ``deletes.applied_commit_ids``
+    and read with pyarrow (driver-side, DV tables are delete-count-sized)."""
     from columnar_analytics_engine_spark.deletes import (
-        LEGACY_COMMIT,
         applied_commit_ids,
+        dv_table,
     )
     from columnar_analytics_engine_spark.manifest import dv_commits
 
     side = dv_commits(index_path, version)
     if side is None or not os.path.exists(side.get("dv_path", "")):
         return {}
-    ids = applied_commit_ids(index_path, version)
-    tbl = pq.read_table(side["dv_path"])
-    names = tbl.column_names
-    files = tbl.column("file").to_pylist()
-    idxs = tbl.column("row_index").to_pylist()
-    commits = (
-        tbl.column("_commit_id").to_pylist()
-        if "_commit_id" in names
-        else [LEGACY_COMMIT] * len(files)
-    )
-    allowed = None if ids is None else {LEGACY_COMMIT, *ids}
+    tbl = dv_table(side["dv_path"], applied_commit_ids(index_path, version))
     out: dict[str, set[int]] = {}
-    for f, i, c in zip(files, idxs, commits):
-        if allowed is None or c in allowed:
-            out.setdefault(f, set()).add(i)
+    for f, i in zip(tbl.column("file").to_pylist(), tbl.column("row_index").to_pylist()):
+        out.setdefault(f, set()).add(i)
     return out
 
 

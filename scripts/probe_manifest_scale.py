@@ -1,16 +1,19 @@
 #!/usr/bin/env python
-"""Scale probe for the versioned-manifest tier (round 12).
+"""Scale probe for the versioned-manifest tier.
 
 Three questions a 100 TB operator asks, answered with measurements
-(recorded in BASELINE.md "Round-12 manifest-tier probe"):
+(recorded in BASELINE.md "Manifest-tier scale probe"):
 
 1. Does PLAN cost grow with retained history?  It must not: a reader
    resolves _CURRENT once and reads ONE version dir, so plan_skipping
    wall time should be flat in the number of retained versions.
-2. What does a maintenance PUBLISH cost as the table grows?  The new
-   manifest version is a full snapshot (rows = files x columns), so
-   publish cost is linear in FILE COUNT, metadata-scale, and
-   independent of data bytes — the Delta-checkpoint shape.
+2. What do planning and a maintenance PUBLISH cost as the table
+   grows, and what does the driver hold?  Manifests are read and
+   written on the driver with Arrow (``manifest.manifest_table``), and
+   each version is a full snapshot (rows = files x columns), so both
+   costs are linear in FILE COUNT, metadata-scale, and independent of
+   data bytes — the Delta-checkpoint shape.  The driver's peak RSS at
+   the largest size bounds what the driver path needs.
 3. What does schema-evolution cohort reading cost?  read_evolved adds
    one scan branch per distinct physical schema; with K cohorts the
    plan holds K scans over disjoint file sets — same total I/O, so
@@ -70,24 +73,73 @@ def probe_plan_vs_versions(spark, src, tmp: str) -> dict:
 
 
 def probe_publish_vs_files(spark, src, tmp: str) -> dict:
-    """Manifest publish wall time at 16 vs 128 vs 512 files."""
+    """At 16 / 128 / 512 / 4096 files: manifest read, plan_skipping
+    (best-of-5 wall and Spark jobs), a no-op update_stats_index and one
+    merge_upsert_files publish, then the driver's peak RSS."""
+    import resource
+
     from columnar_analytics_engine_spark.layout import merge_upsert_files
     from columnar_analytics_engine_spark.io import write_sorted
-    from columnar_analytics_engine_spark.skipping import build_stats_index
+    from columnar_analytics_engine_spark.manifest import (
+        manifest_dir,
+        manifest_table,
+    )
+    from columnar_analytics_engine_spark.skipping import (
+        build_stats_index,
+        plan_skipping,
+        update_stats_index,
+    )
 
-    out = {"experiment": "publish_vs_file_count"}
-    for n_files in (16, 128, 512):
+    sc = spark.sparkContext
+
+    def best_ms(fn, reps: int = 5) -> float:
+        best = float("inf")
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            fn()
+            best = min(best, time.perf_counter() - t0)
+        return round(best * 1000, 1)
+
+    def jobs(fn) -> int:
+        group = f"probe-{time.perf_counter_ns()}"
+        sc.setJobGroup(group, "probe")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    out = {"experiment": "metadata_vs_file_count"}
+    for n_files in (16, 128, 512, 4096):
         data, index = f"{tmp}/pf_data_{n_files}", f"{tmp}/pf_idx_{n_files}"
         write_sorted(src, data, ["o_orderkey"], n_files=n_files)
         build_stats_index(spark, data, index)
+        k = f"{n_files}f"
+        d = manifest_dir(index)
+        out[f"manifest_rows_{k}"] = manifest_table(index).num_rows
+        out[f"manifest_bytes_{k}"] = sum(
+            os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
+        )
+        out[f"manifest_read_{k}_ms"] = best_ms(lambda: manifest_table(index))
+        pred = "o_orderkey le 500"
+        out[f"plan_{k}_ms"] = best_ms(lambda: plan_skipping(spark, index, pred))
+        out[f"plan_{k}_jobs"] = jobs(lambda: plan_skipping(spark, index, pred))
+        out[f"update_noop_{k}_ms"] = best_ms(
+            lambda: update_stats_index(spark, data, index), reps=3
+        )
         upd = src.filter(F.col("o_orderkey") <= 50).withColumn(
             "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
         )
         t0 = time.perf_counter()
         merge_upsert_files(spark, data, index, upd, "o_orderkey")
-        out[f"merge_publish_{n_files}f_ms"] = round(
+        out[f"merge_publish_{k}_ms"] = round(
             (time.perf_counter() - t0) * 1000, 1
         )
+    # ru_maxrss is in KiB on Linux: the driver process's peak so far
+    out["driver_peak_rss_mb"] = round(
+        resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, 1
+    )
     return out
 
 

@@ -357,3 +357,28 @@ def test_atomic_build_dir_crash_leaves_no_half_index(tmp_path):
         atomic_build_dir(final, crash)
     assert not os.path.exists(final)
     assert [d for d in os.listdir(tmp_path) if ".build-" in d] == []
+
+
+def test_read_table_reresolves_after_non_first_part_rewrite(spark, tmp_path):
+    """Rewriting a part file other than the first, in place under the
+    same name, leaves the directory's dirents untouched; the memo must
+    still notice it and re-resolve the table, and keep one entry for
+    the path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from columnar_analytics_engine_spark import io as engine_io
+
+    path = tmp_path / "t.parquet"
+    path.mkdir()
+    pq.write_table(pa.table({"id": [1, 2]}), str(path / "part-0.parquet"))
+    pq.write_table(pa.table({"id": [3]}), str(path / "part-1.parquet"))
+    first = read_table(spark, str(tmp_path), "t")
+    assert first.count() == 3
+    dir_mtime = os.stat(path).st_mtime_ns
+    pq.write_table(pa.table({"id": [3, 4, 5, 6]}), str(path / "part-1.parquet"))
+    assert os.stat(path).st_mtime_ns == dir_mtime  # same dirents
+    again = read_table(spark, str(tmp_path), "t")
+    assert again is not first
+    assert again.count() == 6
+    assert [k for k in engine_io._TABLE_DF_CACHE if k == str(path)] == [str(path)]

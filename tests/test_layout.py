@@ -600,3 +600,49 @@ def test_compact_small_files_merges_sorted_sink_output(spark, tmp_path):
     # path-encoded sort columns rejected
     with pytest.raises(ValueError, match="path-encoded"):
         compact_small_files(spark, data, index, cols=["batch_id"])
+
+
+def test_sql_builders_quote_awkward_column_names(spark):
+    """The SQL-text bucket builders quote column names, so a name with a
+    dot and a space, or a reserved word, gives the Column-builder
+    result."""
+    from columnar_analytics_engine_spark.layout import (
+        morton_expr,
+        quote_ident,
+        scaled_bin,
+        with_linear_bucket,
+        with_zorder_bucket,
+        zorder_frame,
+    )
+
+    assert quote_ident("a`b") == "`a``b`"
+    odd, kw = "a.b c", "order"
+    df = spark.range(0, 500).select(
+        F.col("id"),
+        ((F.col("id") * 37) % 101).alias(odd),
+        ((F.col("id") * 13) % 97).cast("double").alias(kw),
+    )
+    c_odd, c_kw = F.col(quote_ident(odd)), F.col(quote_ident(kw))
+    bounds = df.agg(
+        F.min(c_odd).cast("double"), F.max(c_odd).cast("double"),
+        F.min(c_kw).cast("double"), F.max(c_kw).cast("double"),
+    ).first()
+    lo_o, hi_o, lo_k, hi_k = (F.lit(v) for v in bounds)
+
+    def by_id(frame, col="_bucket"):
+        return {r["id"]: r[col] for r in frame.select("id", col).collect()}
+
+    lin = by_id(with_linear_bucket(df, odd, 8))
+    assert lin == by_id(df.withColumn("_bucket", scaled_bin(c_odd, lo_o, hi_o, 7)))
+    bits = 4
+    z = morton_expr(
+        [scaled_bin(c_odd, lo_o, hi_o, 15), scaled_bin(c_kw, lo_k, hi_k, 15)], bits
+    )
+    want_z = by_id(df.withColumn("_z", z), "_z")
+    zb = by_id(with_zorder_bucket(df, [odd, kw], 4, bits=bits))
+    assert zb == {i: v >> (2 * bits - 2) for i, v in want_z.items()}
+    out = zorder_frame(df, [odd, kw], 1, bits=bits)
+    assert out.columns == df.columns
+    order = [want_z[r["id"]] for r in out.select("id").collect()]
+    assert sorted(want_z) == sorted(r["id"] for r in out.select("id").collect())
+    assert order == sorted(order)
