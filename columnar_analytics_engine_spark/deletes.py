@@ -76,6 +76,8 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_analytics_engine_spark.io import read_files
+
 # commit id for tombstones written outside the versioned-commit
 # protocol (no index_path, or a pre-r14 DV file): ALWAYS applied
 LEGACY_COMMIT = "__legacy__"
@@ -196,13 +198,7 @@ def _raw_scan(spark: SparkSession, data_path: str, index_path: str | None):
         return spark.read.parquet(data_path)
     from columnar_analytics_engine_spark.manifest import manifest_files
 
-    files = manifest_files(index_path)
-    if not files:
-        return spark.read.parquet(data_path).where(F.lit(False))
-    reader = spark.read
-    if os.path.isdir(data_path):
-        reader = reader.option("basePath", data_path)
-    return reader.parquet(*files)
+    return read_files(spark, data_path, manifest_files(index_path))
 
 
 def _commit_tombstones(
@@ -360,58 +356,41 @@ def read_with_deletes(
     then, INCLUDING its deletes — only tombstones whose commit is in
     that version's ``_DV_COMMITS`` sidecar apply (versioned deletes
     compose with time travel; see the module docstring)."""
-    if as_of_ts is not None:
-        if index_path is None:
-            raise ValueError("as_of_ts requires index_path")
-        if as_of is not None:
-            raise ValueError("pass as_of or as_of_ts, not both")
-        from columnar_analytics_engine_spark.manifest import version_at
+    from columnar_analytics_engine_spark.evolution import read_evolved, read_schema_spec
+    from columnar_analytics_engine_spark.skipping import (
+        _resolve_as_of,
+        _row_filter,
+        plan_skipping,
+        read_indexed,
+        read_skipping,
+    )
 
-        as_of = version_at(index_path, as_of_ts)
+    if as_of_ts is not None and index_path is None:
+        raise ValueError("as_of_ts requires index_path")
+    as_of = _resolve_as_of(index_path, as_of, as_of_ts)
     dv_ids = applied_commit_ids(index_path, as_of)
-    if index_path is not None:
-        from columnar_analytics_engine_spark.evolution import (
-            read_evolved,
-            read_schema_spec,
+    if index_path is not None and read_schema_spec(index_path) is not None:
+        files = cond = None
+        if predicate is not None:
+            plan = plan_skipping(
+                spark, index_path, predicate, bloom_path=bloom_path, as_of=as_of
+            )
+            files, cond = plan["files"], _row_filter(plan["clauses"])
+        df = read_evolved(
+            spark, data_path, index_path, as_of=as_of, files=files,
+            dv_path=dv_path, dv_commit_ids=dv_ids,
         )
-
-        if read_schema_spec(index_path) is not None:
-            from columnar_analytics_engine_spark.skipping import (
-                _clause_column,
-                plan_skipping,
-            )
-
-            files = None
-            cond = None
-            if predicate is not None:
-                plan = plan_skipping(
-                    spark, index_path, predicate, bloom_path=bloom_path,
-                    as_of=as_of,
-                )
-                files = plan["files"]
-                for col, op, val in plan["clauses"]:
-                    c = _clause_column(col, op, val)
-                    cond = c if cond is None else (cond & c)
-            df = read_evolved(
-                spark, data_path, index_path, as_of=as_of, files=files,
-                dv_path=dv_path, dv_commit_ids=dv_ids,
-            )
-            return df.where(cond) if cond is not None else df
-    if index_path is not None and predicate is not None:
-        from columnar_analytics_engine_spark.skipping import read_skipping
-
+        return df if cond is None else df.where(cond)
+    if index_path is None:
+        base = spark.read.parquet(data_path)
+    elif predicate is None:
+        base = read_indexed(spark, data_path, index_path, as_of=as_of)
+    else:
         base = read_skipping(
             spark, data_path, index_path, predicate, bloom_path=bloom_path,
             as_of=as_of,
         )
-    elif index_path is not None:
-        from columnar_analytics_engine_spark.skipping import read_indexed
-
-        base = read_indexed(spark, data_path, index_path, as_of=as_of)
-    else:
-        base = spark.read.parquet(data_path)
-    dv = _dv(spark, dv_path, dv_ids)
-    return subtract_tombstones(base, dv)
+    return subtract_tombstones(base, _dv(spark, dv_path, dv_ids))
 
 
 def subtract_tombstones(df: DataFrame, dv: DataFrame) -> DataFrame:
@@ -507,7 +486,9 @@ def compact_deletes(
     new_files: list[str] = []
     for dest, files in sorted(groups.items()):
         dest = dest.split("\x00", 1)[0]  # strip cohort tag
-        survivors = subtract_tombstones(spark.read.parquet(*files), dv)
+        survivors = subtract_tombstones(
+            read_files(spark, data_path, files, base_path=False), dv
+        )
         group_files, expected = publish_rewrite(
             spark, data_path, index_path, files,
             survivors.coalesce(max(1, len(files) // 4)),

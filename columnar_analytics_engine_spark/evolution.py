@@ -53,6 +53,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_analytics_engine_spark.io import read_files
+
 _SCHEMA_FILE = "_SCHEMA"
 
 # widenings that are exact value-preserving casts in Spark AND DuckDB
@@ -269,10 +271,7 @@ def read_evolved(
         if files is None:
             base = read_indexed(spark, data_path, index_path, as_of=as_of)
         else:
-            reader = spark.read
-            if os.path.isdir(data_path):
-                reader = reader.option("basePath", data_path)
-            base = reader.parquet(*sorted(files))
+            base = read_files(spark, data_path, sorted(files))
         return minus_dv(base)
     wanted = set(files) if files is not None else None
     cohorts: dict[frozenset, list[str]] = {}
@@ -286,11 +285,8 @@ def read_evolved(
         return spark.createDataFrame([], fields)
     parts = []
     for physical, flist in sorted(cohorts.items(), key=lambda kv: sorted(kv[1])):
-        reader = spark.read
-        if os.path.isdir(data_path):
-            reader = reader.option("basePath", data_path)
         parts.append(
-            minus_dv(reader.parquet(*sorted(flist))).select(
+            minus_dv(read_files(spark, data_path, sorted(flist))).select(
                 *_cohort_projection(spec, set(physical))
             )
         )

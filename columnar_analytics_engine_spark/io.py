@@ -210,6 +210,45 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
     return out
 
 
+def read_files(
+    spark: SparkSession, data_path: str, files: list[str], base_path: bool = True
+) -> DataFrame:
+    """Read the Parquet ``files`` of the table at ``data_path`` (none:
+    its schema, no rows).  ``base_path`` keeps hive partition columns
+    alive; rewrites pass ``False`` so partition values stay out of the
+    rewritten files.  The schema Spark's inference would take verbatim
+    — the row-metadata key in the lexicographically first file's footer
+    — is read on the driver and passed to ``.schema(...)``, saving the
+    inference job; without that key (pandas/DuckDB writers), a footer
+    the driver cannot read, or ``mergeSchema`` on, Spark infers."""
+    if not files:
+        return spark.read.parquet(data_path).where("false")
+    reader = spark.read
+    if base_path and os.path.isdir(data_path):
+        reader = reader.option("basePath", data_path)
+    schema = _spark_footer_schema(min(files))
+    if schema and spark.conf.get("spark.sql.parquet.mergeSchema").lower() != "true":
+        reader = reader.schema(schema)
+    return reader.parquet(*files)
+
+
+def _spark_footer_schema(path: str):
+    """The ``StructType`` Spark stored in ``path``'s footer, or None."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    try:
+        meta = pq.read_metadata(path).metadata or {}
+        raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+        return StructType.fromJson(json.loads(raw)) if raw else None
+    except (OSError, ValueError, KeyError):
+        # unreadable from the driver, or a pre-JSON (Spark 1.x) schema
+        # string: Spark infers it as before
+        return None
+
+
 def write_table(
     df: DataFrame,
     path: str,

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_analytics_engine_spark.io import read_files
+
 
 def scaled_bin(c: Column, mn: Column, mx: Column, levels: int) -> Column:
     """Range-bin ``c`` into ``0..levels`` (inclusive) given exact
@@ -652,7 +654,7 @@ def cluster_compact(
         )
         # leaf-file read WITHOUT basePath: partition columns stay
         # path-encoded and out of the rewritten files
-        df = spark.read.parquet(*files)
+        df = read_files(spark, data_path, files, base_path=False)
         if len(cols) == 1:
             arranged = df.repartitionByRange(n_files, *cols).sortWithinPartitions(
                 *cols
@@ -884,7 +886,7 @@ def compact_small_files(
             continue
         total = sum(os.path.getsize(f) for f in flist)
         n_out = max(1, int((total + target_file_bytes - 1) // target_file_bytes))
-        df = spark.read.parquet(*flist)
+        df = read_files(spark, data_path, flist, base_path=False)
         if cols:
             arranged = df.repartitionByRange(n_out, *cols).sortWithinPartitions(
                 *cols

@@ -38,8 +38,9 @@ structure on plain Parquet:
 * Driver-side metadata: a manifest is file-count-sized and every reader
   already holds its file list on the driver, so manifests are read
   (:func:`manifest_table`) and written (:func:`write_manifest`) with
-  ``pyarrow.parquet`` — no Spark job.  :func:`read_manifest` wraps the
-  Arrow table as a local relation; filters over it collect job-free.
+  ``pyarrow.parquet`` — no Spark job — and planners filter them with
+  ``pyarrow.compute``.  :func:`read_manifest` wraps the Arrow table as
+  a local relation for callers that join metadata with data.
 
 Legacy layout (a flat Parquet directory at ``index_path`` with no
 ``_CURRENT``) is read transparently and upgraded to version 1 on the

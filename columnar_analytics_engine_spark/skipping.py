@@ -21,11 +21,14 @@ directories:
   footers), and rows for vanished files are dropped.
 * :func:`plan_skipping` / :func:`read_skipping` — evaluate a
   conjunctive predicate against the index (interval logic per clause,
-  conservative wherever stats are missing) on the driver, with no
-  Spark job (driver memory bounded by the file list — the same
-  planning shape as Iceberg manifest pruning), and read only the
-  surviving files.  The
-  predicate is still applied exactly on top of the pruned scan, so
+  conservative wherever stats are missing) on the driver with
+  ``pyarrow.compute`` — one definition of the rule (:func:`_prune_mask`),
+  shared by the join planner, touching no Spark object (driver memory
+  bounded by the file list — the same planning shape as Iceberg
+  manifest pruning) — and read only the surviving files through
+  ``io.read_files``, which takes the read schema from a footer instead
+  of a Spark inference job.  Constructing the read runs no Spark job.
+  The predicate is still applied exactly on top of the pruned scan, so
   skipping is a pure superset optimization: it can never change
   results, only skip I/O.
 
@@ -48,13 +51,18 @@ never pruned — correct, just not accelerated.
 
 from __future__ import annotations
 
+import operator
 import os
 import re
+from functools import reduce
 from typing import Any, Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from columnar_analytics_engine_spark.io import read_files
 
 INDEX_SCHEMA = (
     "file string, column string, kind string, "
@@ -381,8 +389,6 @@ def _rebase_index(
     footer-scanned rows for ``add_files`` — the next version's table,
     computed on the driver (shared by ``update_stats_index`` and
     ``layout._swap_index``)."""
-    import pyarrow.compute as pc
-
     from columnar_analytics_engine_spark.evolution import read_schema_spec
 
     out = idx.select(INDEX_ARROW_SCHEMA.names).cast(INDEX_ARROW_SCHEMA)
@@ -465,23 +471,26 @@ _TWO53 = 1 << 53  # |int| bounds exact in IEEE double up to here
 _I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
 
 
-def _interval_excludes(op: str, lo: F.Column, hi: F.Column, lit: F.Column) -> F.Column:
+def _interval_excludes(op: str, lo, hi, lit):
     """TRUE iff [lo, hi] provably contains no value satisfying
     ``x op lit`` — the zone-map rule, per file instead of per page
-    (reference: ``src/execution.cpp`` ``Predicate::canSkipPage``)."""
-    return {
-        "eq": (lit < lo) | (lit > hi),
-        "ne": (lo == hi) & (lo == lit),
-        "lt": lo >= lit,
-        "le": lo > lit,
-        "gt": hi <= lit,
-        "ge": hi < lit,
-    }[op]
+    (reference: ``src/execution.cpp`` ``Predicate::canSkipPage``).
+    ``lo``/``hi`` are Arrow arrays, ``lit`` a scalar; a null bound
+    yields null, which never prunes."""
+    if op == "eq":
+        return pc.or_kleene(pc.less(lit, lo), pc.greater(lit, hi))
+    if op == "ne":
+        return pc.and_kleene(pc.equal(lo, hi), pc.equal(lo, lit))
+    cmp = {"lt": pc.greater_equal, "le": pc.greater, "gt": pc.less_equal, "ge": pc.less}
+    return cmp[op](lo if op in ("lt", "le") else hi, lit)
 
 
-def _prune_condition(op: str, val: Any) -> F.Column:
-    """Column expression over index rows: TRUE iff the file provably
-    contains no matching row for ``col op val``.
+def _prune_mask(tbl: pa.Table, op: str, val: Any):
+    """Boolean mask over manifest rows ``tbl``: TRUE iff the file
+    provably contains no matching row for ``col op val`` (the caller
+    restricts to the clause's column).  Evaluated with Kleene logic, so
+    a null result — a missing bound — is not selected and the file is
+    kept, exactly as a Spark ``filter`` would treat it.
 
     Soundness at the type seams: integer bounds are compared as LONG
     when the literal is an int (exact), and as double only when both
@@ -489,74 +498,77 @@ def _prune_condition(op: str, val: Any) -> F.Column:
     are compared with an int literal only when that literal is itself
     exact in double.  Every guard failure yields "keep", never a wrong
     prune.  NULLs satisfy no comparison, so an all-null file prunes
-    under every op.
+    under every op.  A NaN bound compares false (IEEE), so it never
+    prunes — conservative against Spark, which orders NaN above every
+    double.
     """
     if op == "in":
         # an eq-set: the file is excludable iff EVERY member is
-        cond = _prune_condition("eq", val[0])
-        for v in val[1:]:
-            cond = cond & _prune_condition("eq", v)
-        return cond
-    if isinstance(val, str):
-        cond = (F.col("kind") == "str") & _interval_excludes(
-            op, F.col("min_str"), F.col("max_str"), F.lit(val)
+        return reduce(pc.and_kleene, [_prune_mask(tbl, "eq", v) for v in val])
+    kind = tbl["kind"]
+
+    def bounded(k: str, lo, hi, lit):
+        return pc.and_kleene(
+            pc.equal(kind, k), _interval_excludes(op, lo, hi, lit)
         )
-    else:
+
+    if isinstance(val, str):
+        branches = [bounded("str", tbl["min_str"], tbl["max_str"], pa.scalar(val))]
+    elif isinstance(val, int):
         branches = []
-        if isinstance(val, int):
-            if _I64_MIN <= val <= _I64_MAX:
-                branches.append(
-                    (F.col("kind") == "int")
-                    & _interval_excludes(
-                        op, F.col("min_int"), F.col("max_int"),
-                        F.lit(val).cast("long"),
-                    )
-                )
-            if abs(val) <= _TWO53:
-                branches.append(
-                    (F.col("kind") == "num")
-                    & _interval_excludes(
-                        op, F.col("min_num"), F.col("max_num"), F.lit(float(val))
-                    )
-                )
-        else:
-            exact_in_double = (F.abs(F.col("min_int")) <= F.lit(_TWO53)) & (
-                F.abs(F.col("max_int")) <= F.lit(_TWO53)
-            )
-            branches.append(
-                (F.col("kind") == "int")
-                & exact_in_double
-                & _interval_excludes(
-                    op,
-                    F.col("min_int").cast("double"),
-                    F.col("max_int").cast("double"),
-                    F.lit(val),
-                )
-            )
-            branches.append(
-                (F.col("kind") == "num")
-                & _interval_excludes(
-                    op, F.col("min_num"), F.col("max_num"), F.lit(val)
-                )
-            )
+        if _I64_MIN <= val <= _I64_MAX:
+            branches.append(bounded(
+                "int", tbl["min_int"], tbl["max_int"], pa.scalar(val, pa.int64())
+            ))
+        if abs(val) <= _TWO53:
+            branches.append(bounded(
+                "num", tbl["min_num"], tbl["max_num"], pa.scalar(float(val))
+            ))
         if not branches:
-            return F.lit(False)
-        cond = branches[0]
-        for b in branches[1:]:
-            cond = cond | b
-    all_null = F.col("null_count") >= F.col("file_rows")
-    return F.col("has_stats") & ((F.col("kind") != "other") & all_null | cond)
+            return pa.array([False] * tbl.num_rows, pa.bool_())
+    else:
+        lo_i, hi_i = tbl["min_int"], tbl["max_int"]
+        exact_in_double = pc.and_kleene(
+            pc.greater_equal(pc.min_element_wise(lo_i, hi_i, skip_nulls=False), -_TWO53),
+            pc.less_equal(pc.max_element_wise(lo_i, hi_i, skip_nulls=False), _TWO53),
+        )
+        as_double = [pc.cast(b, pa.float64(), safe=False) for b in (lo_i, hi_i)]
+        lit = pa.scalar(float(val))
+        branches = [
+            pc.and_kleene(exact_in_double, bounded("int", *as_double, lit)),
+            bounded("num", tbl["min_num"], tbl["max_num"], lit),
+        ]
+    all_null = pc.and_kleene(
+        pc.not_equal(kind, "other"),
+        pc.greater_equal(tbl["null_count"], tbl["file_rows"]),
+    )
+    return pc.and_kleene(
+        tbl["has_stats"], pc.or_kleene(all_null, reduce(pc.or_kleene, branches))
+    )
 
 
-def _clause_column(col: str, op: str, val: Any) -> F.Column:
-    c = F.col(col)
-    if op == "in":
-        return c.isin(*val)
-    return {
-        "eq": c == F.lit(val), "ne": c != F.lit(val),
-        "lt": c < F.lit(val), "le": c <= F.lit(val),
-        "gt": c > F.lit(val), "ge": c >= F.lit(val),
-    }[op]
+def _pruned_files(tbl: pa.Table, clauses: list[tuple[str, str, Any]]) -> set[str]:
+    """Files of manifest ``tbl`` that some clause of the conjunction
+    provably excludes: the OR over clauses of :func:`_prune_mask`,
+    each restricted to its column's rows."""
+    if not clauses or not tbl.num_rows:
+        return set()
+    mask = reduce(pc.or_kleene, [
+        pc.and_kleene(pc.equal(tbl["column"], col), _prune_mask(tbl, op, val))
+        for col, op, val in clauses
+    ])
+    return set(tbl["file"].filter(mask).to_pylist())
+
+
+def _row_filter(clauses: list[tuple[str, str, Any]]) -> F.Column | None:
+    """The exact row predicate of the conjunction (None for no clause).
+    Only the comparisons used are built: each costs py4j round trips."""
+    cond = None
+    for col, op, val in clauses:
+        c = F.col(col)
+        c = c.isin(*val) if op == "in" else getattr(operator, op)(c, F.lit(val))
+        cond = c if cond is None else (cond & c)
+    return cond
 
 
 def plan_skipping(
@@ -570,12 +582,12 @@ def plan_skipping(
     ``{"files": [...kept...], "files_total": n, "files_pruned": m,
     "clauses": [...]}``.  The manifest is read on the driver with Arrow
     (``manifest.manifest_table``) and the prune rule
-    (:func:`_prune_condition`, one OR over the clauses) is evaluated
-    over it as an Arrow-backed local relation, which Spark folds on the
-    driver: planning runs no Spark job.  Driver memory is bounded by
-    the manifest, exactly like Iceberg planning.
-    With ``bloom_path``, eq clauses additionally prune through the
-    Bloom index (``build_bloom_index``) — effective even on columns
+    (:func:`_prune_mask`, one OR over the clauses) is evaluated over it
+    with ``pyarrow.compute``: planning touches no Spark object and runs
+    no Spark job.  Driver memory is bounded by the manifest, exactly
+    like Iceberg planning.
+    With ``bloom_path``, eq and in clauses additionally prune through
+    the Bloom index (``build_bloom_index``) — effective even on columns
     the layout does not cluster.
     """
     from columnar_analytics_engine_spark.manifest import manifest_table
@@ -583,29 +595,18 @@ def plan_skipping(
     clauses = parse_predicate(predicate)
     tbl = manifest_table(index_path, as_of=as_of)
     all_files = list(dict.fromkeys(tbl.column("file").to_pylist()))
-    pruned_files: set[str] = set()
-    if clauses:
-        cond = None
-        for col, op, val in clauses:
-            c = (F.col("column") == col) & _prune_condition(op, val)
-            cond = c if cond is None else (cond | c)
-        pruned = spark.createDataFrame(tbl).filter(cond).select("file")
-        pruned_files = {r["file"] for r in pruned.collect()}
+    pruned_files = _pruned_files(tbl, clauses)
     if bloom_path is not None:
         for col, op, val in clauses:
-            if op == "eq":
-                bp = bloom_prune(spark, bloom_path, col, val)
-            elif op == "in":
-                bp = bloom_prune_many(spark, bloom_path, col, val)
-            else:
-                continue
-            if bp:
-                pruned_files |= bp
+            if op in ("eq", "in"):
+                pruned_files |= bloom_prune_many(
+                    spark, bloom_path, col, val if op == "in" else [val]
+                ) or set()
     kept = [f for f in all_files if f not in pruned_files]
     return {
         "files": kept,
         "files_total": len(all_files),
-        "files_pruned": len(pruned_files),
+        "files_pruned": len(all_files) - len(kept),
         "clauses": clauses,
     }
 
@@ -630,11 +631,7 @@ def read_skipping(
     plan = plan_skipping(
         spark, index_path, predicate, bloom_path=bloom_path, as_of=as_of
     )
-    cond = None
-    for col, op, val in plan["clauses"]:
-        c = _clause_column(col, op, val)
-        cond = c if cond is None else (cond & c)
-    from columnar_analytics_engine_spark.evolution import read_schema_spec
+    from columnar_analytics_engine_spark.evolution import read_evolved, read_schema_spec
 
     if read_schema_spec(index_path) is not None:
         # evolved table: per-cohort reconciling scans over the pruned
@@ -642,22 +639,13 @@ def read_skipping(
         # Pruning stays sound: clauses on added/renamed columns find no
         # stats row under the logical name for pre-evolution files, so
         # those files are conservatively kept.
-        from columnar_analytics_engine_spark.evolution import read_evolved
-
         df = read_evolved(
             spark, data_path, index_path, as_of=as_of, files=plan["files"]
         )
-        return df.where(cond) if cond is not None else df
-    if not plan["files"]:
-        # schema-only read: no row groups are materialized under lit(false)
-        return spark.read.parquet(data_path).where(F.lit(False))
-    # basePath keeps hive partition columns alive when reading an
-    # explicit leaf-file list out of a partitioned layout
-    reader = spark.read
-    if os.path.isdir(data_path):
-        reader = reader.option("basePath", data_path)
-    df = reader.parquet(*plan["files"])
-    return df.where(cond) if cond is not None else df
+    else:
+        df = read_files(spark, data_path, plan["files"])
+    cond = _row_filter(plan["clauses"])
+    return df if cond is None else df.where(cond)
 
 
 def _resolve_as_of(
@@ -698,13 +686,7 @@ def read_indexed(
         from columnar_analytics_engine_spark.evolution import read_evolved
 
         return read_evolved(spark, data_path, index_path, as_of=as_of)
-    files = manifest_files(index_path, as_of=as_of)
-    if not files:
-        return spark.read.parquet(data_path).where(F.lit(False))
-    reader = spark.read
-    if os.path.isdir(data_path):
-        reader = reader.option("basePath", data_path)
-    return reader.parquet(*files)
+    return read_files(spark, data_path, manifest_files(index_path, as_of=as_of))
 
 
 # ---------------------------------------------------------------------------
@@ -754,6 +736,36 @@ def _files_holding_a_key(rows, keys: list, kind: str) -> set[str]:
         return i < len(ks) and ks[i] <= order(hi)
 
     return {f for f, lo, hi in rows if lo is not None and hi is not None and holds(lo, hi)}
+
+
+def _bloom_join_survivors(
+    spark: SparkSession,
+    bloom_path: str,
+    column: str,
+    kind: str,
+    prunable: pa.Table,
+    sample: list,
+) -> set[str]:
+    """Files of ``prunable`` (file, lo, hi) holding a key of ``sample``
+    in [lo, hi] that their Bloom filter does not refute (no Bloom row
+    keeps); key hashes are computed once on the driver."""
+    if not prunable.num_rows:
+        return set()
+    _, lo_c, hi_c = prunable.column_names
+    h1, h2 = zip(*(_bloom_hash_pair(_bloom_canon(v)) for v in sample))
+    k2 = spark.createDataFrame(pa.table({
+        "_k": pa.array(sample, pa.int64() if kind == "int" else pa.string()),
+        "_h1": pa.array(h1, pa.int64()),
+        "_h2": pa.array(h2, pa.int64()),
+    }))
+    pairs = spark.createDataFrame(prunable).join(
+        F.broadcast(k2), F.col("_k").between(F.col(lo_c), F.col(hi_c))
+    ).select("file", "_h1", "_h2")
+    bl = spark.createDataFrame(_bloom_table(bloom_path, column, kind))
+    hit = pairs.join(bl, "file", "left").filter(
+        F.col("m").isNull() | F.expr(_bloom_member_sql("_h1", "_h2"))
+    )
+    return {r["file"] for r in hit.select("file").distinct().collect()}
 
 
 def plan_skipping_join(
@@ -807,12 +819,14 @@ def plan_skipping_join(
     k = keys.select(F.col(keys.columns[0]).alias("_k")).where(
         F.col("_k").isNotNull()
     ).distinct()
-    rows = spark.createDataFrame(tbl).filter(F.col("column") == column)
     lo_c, hi_c = _KIND_BOUNDS[kind]
-    # rows this key type can prune: matching kind with usable stats
-    prunable = rows.filter(
-        F.col("has_stats") & (F.col("kind") == F.lit(kind))
-    )
+    # rows this key type can prune: the column's rows of matching kind
+    # with usable stats
+    prunable = tbl.filter(pc.and_kleene(
+        pc.and_kleene(pc.equal(tbl["column"], column), tbl["has_stats"]),
+        pc.equal(tbl["kind"], kind),
+    )).select(["file", lo_c, hi_c])
+    covered = set(prunable["file"].to_pylist())
     # one collect of at most max_keys + 1 distinct keys: it both counts
     # them and, under the cap, feeds the driver-side membership test
     sample = [r["_k"] for r in k.limit(max_keys + 1).collect()]
@@ -823,66 +837,26 @@ def plan_skipping_join(
         mode = "empty"
     elif n_keys <= max_keys:
         if bloom_path is not None and kind in ("int", "str"):
-            # per-(file, key) test: inside the file's interval AND not
-            # refuted by the file's bloom (missing bloom row keeps);
-            # key hashes are computed once driver-side (the key set is
-            # max_keys-bounded — the same size a broadcast ships)
-            key_rows = [
-                (v, *_bloom_hash_pair(_bloom_canon(v))) for v in sample
-            ]
-            # Arrow-backed local relation (round 15): a tuple-list
-            # createDataFrame is Python-RDD backed and re-runs Python
-            # workers on every action over the broadcast build — pure
-            # dispatch cost in the per-run query path (guide §5)
-            _k_type = pa.int64() if kind == "int" else pa.string()
-            k2 = spark.createDataFrame(
-                pa.table(
-                    {
-                        "_k": [r[0] for r in key_rows],
-                        "_h1": [r[1] for r in key_rows],
-                        "_h2": [r[2] for r in key_rows],
-                    },
-                    schema=pa.schema(
-                        [("_k", _k_type), ("_h1", pa.int64()), ("_h2", pa.int64())]
-                    ),
-                )
-            )
-            pairs = prunable.join(
-                F.broadcast(k2),
-                F.col("_k").between(F.col(lo_c), F.col(hi_c)),
-            ).select("file", "_h1", "_h2")
-            bl = (
-                spark.read.parquet(bloom_path)
-                .filter(
-                    (F.col("column") == column)
-                    & (F.col("kind") == F.lit(kind))
-                    & (F.col("m") > 0)
-                )
-                .select("file", "m", "k", "words")
-            )
-            hit = pairs.join(bl, "file", "left").filter(
-                F.col("m").isNull() | _bloom_member_expr("_h1", "_h2")
+            survivors = _bloom_join_survivors(
+                spark, bloom_path, column, kind, prunable, sample
             )
             mode = "keys+bloom"
-            survivors = {r["file"] for r in hit.select("file").distinct().collect()}
         else:
             survivors = _files_holding_a_key(
-                prunable.select("file", lo_c, hi_c).collect(), sample, kind
+                zip(*(prunable[c].to_pylist() for c in ("file", lo_c, hi_c))),
+                sample, kind,
             )
             mode = "keys"
     else:
         b = k.agg(F.min("_k").alias("lo"), F.max("_k").alias("hi")).first()
-        excluded = prunable.filter(
-            _interval_excludes("ge", F.col(lo_c), F.col(hi_c), F.lit(b["lo"]))
-            | _interval_excludes("le", F.col(lo_c), F.col(hi_c), F.lit(b["hi"]))
+        lo, hi = prunable[lo_c], prunable[hi_c]
+        excluded = pc.or_kleene(
+            _interval_excludes("ge", lo, hi, pa.scalar(b["lo"])),
+            _interval_excludes("le", lo, hi, pa.scalar(b["hi"])),
         )
-        dropped = {r["file"] for r in excluded.select("file").collect()}
-        survivors = {
-            r["file"] for r in prunable.select("file").collect()
-        } - dropped
+        survivors = covered - set(prunable["file"].filter(excluded).to_pylist())
         mode = "interval"
     # files with no prunable stats row for the column are always kept
-    covered = {r["file"] for r in prunable.select("file").collect()}
     kept = [f for f in all_files if f not in covered or f in survivors]
     return {
         "files": kept,
@@ -910,12 +884,7 @@ def read_skipping_for_join(
     plan = plan_skipping_join(
         spark, index_path, column, keys, max_keys, bloom_path=bloom_path
     )
-    if not plan["files"]:
-        return spark.read.parquet(data_path).where(F.lit(False))
-    reader = spark.read
-    if os.path.isdir(data_path):
-        reader = reader.option("basePath", data_path)
-    return reader.parquet(*plan["files"])
+    return read_files(spark, data_path, plan["files"])
 
 
 def broadcast_join_skipping(
@@ -1098,7 +1067,9 @@ def build_bloom_index(
     # (round 15, guide §2.6 — don't let the sink's 1 task starve the
     # scan)
     out.repartition(1).write.mode(mode).parquet(bloom_path)
-    return spark.read.parquet(bloom_path).count()
+    from columnar_analytics_engine_spark.manifest import read_parquet_parts
+
+    return read_parquet_parts(bloom_path, columns=["file"]).num_rows
 
 
 def update_bloom_index(
@@ -1109,8 +1080,6 @@ def update_bloom_index(
     table, drop rows for vanished files; cost bounded by the change.
     Rewritten on the driver with Arrow: one new file, then the old
     files removed (a reader in between sees rows twice, never none)."""
-    import pyarrow.compute as pc
-
     from columnar_analytics_engine_spark.manifest import (
         parquet_parts,
         read_parquet_parts,
@@ -1152,8 +1121,16 @@ def _bloom_member_sql(h1: str, h2: str) -> str:
     )
 
 
-def _bloom_member_expr(h1_col: str, h2_col: str) -> F.Column:
-    return F.expr(_bloom_member_sql(h1_col, h2_col))
+def _bloom_table(bloom_path: str, column: str, kind: str) -> pa.Table:
+    """(file, m, k, words) of the Bloom table's usable rows (a real
+    filter, ``m > 0``) for ``column`` of ``kind``, read on the driver."""
+    from columnar_analytics_engine_spark.manifest import read_parquet_parts
+
+    bl = read_parquet_parts(bloom_path)
+    return bl.filter(pc.and_kleene(
+        pc.and_kleene(pc.equal(bl["column"], column), pc.equal(bl["kind"], kind)),
+        pc.greater(bl["m"], 0),
+    )).select(["file", "m", "k", "words"])
 
 
 def bloom_prune(
@@ -1181,14 +1158,15 @@ def bloom_prune_many(
     if len(kinds) != 1:
         return None
     (kind,) = kinds
+    bl = _bloom_table(bloom_path, column, kind)
+    if not bl.num_rows:
+        return set()
     pairs = ", ".join(
         "named_struct('h1', {0}L, 'h2', {1}L)".format(*_bloom_hash_pair(c))
         for c in canons
     )
-    bl = spark.read.parquet(bloom_path).filter(
-        (F.col("column") == column) & (F.col("kind") == kind) & (F.col("m") > 0)
-    )
-    miss = bl.filter(
+    # a filter over a local relation: Spark folds it on the driver
+    miss = spark.createDataFrame(bl).filter(
         F.expr(
             f"forall(array({pairs}),"
             f" q -> NOT ({_bloom_member_sql('q.h1', 'q.h2')}))"

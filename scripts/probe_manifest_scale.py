@@ -7,13 +7,17 @@ Three questions a 100 TB operator asks, answered with measurements
 1. Does PLAN cost grow with retained history?  It must not: a reader
    resolves _CURRENT once and reads ONE version dir, so plan_skipping
    wall time should be flat in the number of retained versions.
-2. What do planning and a maintenance PUBLISH cost as the table
-   grows, and what does the driver hold?  Manifests are read and
-   written on the driver with Arrow (``manifest.manifest_table``), and
-   each version is a full snapshot (rows = files x columns), so both
+2. What do planning, read construction and a maintenance PUBLISH
+   cost as the table grows, and what does the driver hold?  Manifests
+   are read and written on the driver with Arrow
+   (``manifest.manifest_table``), pruned with ``pyarrow.compute``, and
+   each version is a full snapshot (rows = files x columns), so these
    costs are linear in FILE COUNT, metadata-scale, and independent of
-   data bytes — the Delta-checkpoint shape.  The driver's peak RSS at
-   the largest size bounds what the driver path needs.
+   data bytes — the Delta-checkpoint shape.  Constructing
+   ``read_skipping`` / ``read_indexed`` (plan plus a footer-declared
+   schema) should run no Spark job below Spark's parallel-listing
+   threshold.  The driver's peak RSS at the largest size bounds what
+   the driver path needs.
 3. What does schema-evolution cohort reading cost?  read_evolved adds
    one scan branch per distinct physical schema; with K cohorts the
    plan holds K scans over disjoint file sets — same total I/O, so
@@ -73,9 +77,10 @@ def probe_plan_vs_versions(spark, src, tmp: str) -> dict:
 
 
 def probe_publish_vs_files(spark, src, tmp: str) -> dict:
-    """At 16 / 128 / 512 / 4096 files: manifest read, plan_skipping
-    (best-of-5 wall and Spark jobs), a no-op update_stats_index and one
-    merge_upsert_files publish, then the driver's peak RSS."""
+    """At 16 / 128 / 512 / 4096 files: manifest read, plan_skipping and
+    read_skipping / read_indexed construction (best-of-5 wall and Spark
+    jobs each), a no-op update_stats_index and one merge_upsert_files
+    publish, then the driver's peak RSS."""
     import resource
 
     from columnar_analytics_engine_spark.layout import merge_upsert_files
@@ -87,6 +92,8 @@ def probe_publish_vs_files(spark, src, tmp: str) -> dict:
     from columnar_analytics_engine_spark.skipping import (
         build_stats_index,
         plan_skipping,
+        read_indexed,
+        read_skipping,
         update_stats_index,
     )
 
@@ -125,6 +132,12 @@ def probe_publish_vs_files(spark, src, tmp: str) -> dict:
         pred = "o_orderkey le 500"
         out[f"plan_{k}_ms"] = best_ms(lambda: plan_skipping(spark, index, pred))
         out[f"plan_{k}_jobs"] = jobs(lambda: plan_skipping(spark, index, pred))
+        for name, fn in (
+            ("read_skipping", lambda: read_skipping(spark, data, index, pred)),
+            ("read_indexed", lambda: read_indexed(spark, data, index)),
+        ):
+            out[f"{name}_{k}_ms"] = best_ms(fn)
+            out[f"{name}_{k}_jobs"] = jobs(fn)
         out[f"update_noop_{k}_ms"] = best_ms(
             lambda: update_stats_index(spark, data, index), reps=3
         )

@@ -10,7 +10,14 @@ import os
 
 import pytest
 
-from columnar_analytics_engine_spark.io import describe, read_table, write_table
+from columnar_analytics_engine_spark.io import (
+    _spark_footer_schema,
+    describe,
+    read_files,
+    read_table,
+    write_table,
+)
+from columnar_analytics_engine_spark.skipping import list_parquet_files
 from columnar_analytics_engine_spark.sources.synthetic import bench_table, cli_table
 
 
@@ -382,3 +389,114 @@ def test_read_table_reresolves_after_non_first_part_rewrite(spark, tmp_path):
     assert again is not first
     assert again.count() == 6
     assert [k for k in engine_io._TABLE_DF_CACHE if k == str(path)] == [str(path)]
+
+
+# ---------------------------------------------------------------------------
+# read_files: the schema Spark stored in the first file's footer stands in
+# for Spark's own inference, so it must be exactly the schema (and the
+# rows) that inference gives.
+# ---------------------------------------------------------------------------
+
+_READ_FILES_CASES = {
+    "long": "IF(id = 3, NULL, id)",
+    "int": "CAST(id AS INT)",
+    "double": "CAST(id AS DOUBLE) / 3",
+    "string": "IF(id = 2, NULL, CAST(id AS STRING))",
+    "boolean": "id % 2 = 0",
+    "date": "DATE_ADD(DATE'2024-01-01', CAST(id AS INT))",
+    "timestamp": "timestamp_seconds(id * 86400)",
+    "timestamp_ntz": "TIMESTAMP_NTZ'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, id)",
+    "decimal": "CAST(id / 7 AS DECIMAL(12, 3))",
+    "binary": "CAST(CAST(id AS STRING) AS BINARY)",
+    "array": "array(id, IF(id = 1, NULL, id + 1))",
+    "map": "map(CAST(id AS STRING), id)",
+    "struct": "named_struct('a', id, 'b', CAST(id AS STRING))",
+    "not_null": "id * 2",
+}
+
+
+def _same_read(spark, data, files, base_path=True):
+    got = read_files(spark, data, files, base_path=base_path)
+    reader = spark.read.option("basePath", data) if base_path else spark.read
+    want = reader.parquet(*files)
+    assert got.schema == want.schema
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
+
+@pytest.mark.parametrize("case", sorted(_READ_FILES_CASES))
+def test_read_files_schema_matches_spark_inference(spark, tmp_path, case):
+    data = str(tmp_path / case)
+    spark.range(9).selectExpr("id", f"{_READ_FILES_CASES[case]} AS v").repartition(
+        3
+    ).write.parquet(data)
+    files = list_parquet_files(data)
+    assert len(files) > 1
+    # Spark-written: the footer carries the schema, so no inference runs
+    assert _spark_footer_schema(min(files)) is not None
+    _same_read(spark, data, files)
+    _same_read(spark, data, files[1:], base_path=False)
+
+
+def test_read_files_hive_layout_keeps_partition_columns(spark, tmp_path):
+    data = str(tmp_path / "hive")
+    spark.range(12).selectExpr("id", "CAST(id % 3 AS INT) AS p", "id * 1.5 AS x").write.partitionBy(
+        "p"
+    ).parquet(data)
+    files = list_parquet_files(data)
+    _same_read(spark, data, files)
+    _same_read(spark, data, files, base_path=False)
+    assert "p" in read_files(spark, data, files).columns
+    assert "p" not in read_files(spark, data, files, base_path=False).columns
+
+
+def test_read_files_without_spark_key_or_footer_access(spark, tmp_path, monkeypatch):
+    """A pandas-written file has no Spark schema key, and a footer the
+    driver cannot read raises: both leave the schema to Spark."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    data = tmp_path / "pandas"
+    data.mkdir()
+    for i in range(2):
+        pd.DataFrame({
+            "id": [i, i + 10], "x": [0.5 * i, None], "s": ["a", None],
+        }).to_parquet(data / f"part-{i}.parquet")
+    files = sorted(str(p) for p in data.iterdir())
+    assert _spark_footer_schema(files[0]) is None
+    _same_read(spark, str(data), files)
+
+    spark_data = str(tmp_path / "spark")
+    spark.range(6).selectExpr("id", "CAST(id AS STRING) AS s").repartition(2).write.parquet(
+        spark_data
+    )
+    spark_files = list_parquet_files(spark_data)
+
+    def unreachable(*a, **k):
+        raise PermissionError("driver cannot reach the data path")
+
+    monkeypatch.setattr(pq, "read_metadata", unreachable)
+    assert _spark_footer_schema(spark_files[0]) is None
+    _same_read(spark, spark_data, spark_files)
+
+
+def test_read_files_takes_the_first_footer_unless_merging(spark, tmp_path):
+    """Spark's inference reads the lexicographically first footer, so a
+    later file's extra column is not read; with ``mergeSchema`` on,
+    Spark unions every footer's schema and keeps it."""
+    data = tmp_path / "merged"
+    data.mkdir()
+    # the narrower schema sorts first: it is the footer read_files reads
+    for name, df in (("a", spark.range(3)), ("b", spark.range(3).selectExpr("id", "id * 2 AS extra"))):
+        df.coalesce(1).write.parquet(str(tmp_path / name))
+        (part,) = list_parquet_files(str(tmp_path / name))
+        os.rename(part, data / f"{name}.parquet")
+    data = str(data)
+    files = list_parquet_files(data)
+    _same_read(spark, data, files)
+    assert "extra" not in read_files(spark, data, files).columns
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        _same_read(spark, data, files)
+        assert "extra" in read_files(spark, data, files).columns
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")

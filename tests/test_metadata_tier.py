@@ -71,6 +71,14 @@ def test_maintenance_ops_run_few_jobs(spark, table):
     n, plan = _jobs(spark, lambda: skipping.plan_skipping(spark, index, pred))
     assert n == 0
     assert 0 < len(plan["files"]) < plan["files_total"] == 8
+    # the read schema comes from a footer on the driver: constructing an
+    # index-planned read runs no Spark job, materializing it runs one
+    n, df = _jobs(spark, lambda: skipping.read_skipping(spark, data, index, pred))
+    assert n == 0
+    n, rows = _jobs(spark, df.collect)
+    assert n == 1 and rows
+    n, _ = _jobs(spark, lambda: skipping.read_indexed(spark, data, index))
+    assert n == 0
 
     budget = 6
     n, tomb = _jobs(spark, lambda: deletes.delete_where(
@@ -91,7 +99,24 @@ def test_maintenance_ops_run_few_jobs(spark, table):
 
     # the index-planned view is still exact: 8000 - deleted + 200 + 100
     want = 8_000 - tomb + 200 + 100
-    assert deletes.read_with_deletes(spark, data, dv, index_path=index).count() == want
+    n, df = _jobs(spark, lambda: deletes.read_with_deletes(
+        spark, data, dv, index_path=index))
+    assert n == 0
+    assert df.count() == want
+
+
+def test_bloom_planning_runs_no_job(spark, table, tmp_path):
+    """With a Bloom index, planning reads the Bloom table on the driver
+    and folds the membership filter over a local relation: no job."""
+    data, index, _dv = table
+    bloom = str(tmp_path / "bloom")
+    assert skipping.build_bloom_index(spark, data, bloom, ["id", "region"]) == 16
+    for pred in ("id eq 4321", "id in (17, 4321, 99999)", "region eq 'nowhere'"):
+        skipping.plan_skipping(spark, index, pred, bloom_path=bloom)
+        n, plan = _jobs(spark, lambda: skipping.plan_skipping(
+            spark, index, pred, bloom_path=bloom))
+        assert n == 0
+        assert plan["files_pruned"] > 0
 
 
 def test_spark_written_version_and_legacy_flat_read_through_arrow(spark, tmp_path):

@@ -184,6 +184,120 @@ def test_ne_prunes_constant_file_only(spark, tmp_path):
     assert read_skipping(spark, data, index, "v ne 7").count() == 10
 
 
+_TWO53 = 1 << 53
+
+# one file per row list: (num double, n long); the edge each file
+# probes is noted beside it
+_SEAM_FILES = [
+    [(float(_TWO53), _TWO53 + 1)],  # bounds just past 2^53
+    [(float(_TWO53 + 2), 1 << 60), (float(_TWO53 + 2), 1 << 61)],
+    [(1.0, 1), (float("nan"), 2)],  # a NaN max
+    [(float("nan"), None), (float("nan"), None)],  # NaN bounds, all-null n
+    [(None, 7), (5.0, 7)],  # constant n
+    [(None, 7), (None, None)],  # constant n with a null; all-null num
+    [(-float(_TWO53 + 2), -(_TWO53 + 1)), (-1.0, -(1 << 60))],
+]
+
+# predicate -> the same clause in Spark SQL, with the literal typed as
+# the reader types it (an int literal is a LONG, a float one a DOUBLE)
+_SEAM_PREDICATES = {
+    # int literal beyond 2^53 against num stats (compared as double)
+    f"num eq {_TWO53 + 1}": f"num = {_TWO53 + 1}L",
+    f"num gt {_TWO53 + 1}": f"num > {_TWO53 + 1}L",
+    f"num le {_TWO53 + 1}": f"num <= {_TWO53 + 1}L",
+    # float literal against int stats beyond ±2^53 (n cast to double)
+    f"n eq {_TWO53}.0": f"n = {_TWO53}.0D",
+    f"n ge {_TWO53}.0": f"n >= {_TWO53}.0D",
+    f"n lt -{_TWO53}.0": f"n < -{_TWO53}.0D",
+    # NaN and null bounds
+    "num gt 2.0": "num > 2.0D",
+    "num lt 0.5": "num < 0.5D",
+    "num eq 1.0": "num = 1.0D",
+    "num ne 5.0": "num != 5.0D",
+    "n gt 0": "n > 0L",
+    # ne on a constant file, and in lists
+    "n ne 7": "n != 7L",
+    "n in (1, 7, 123)": "n IN (1L, 7L, 123L)",
+    f"num in (5, 2.0, {_TWO53 + 1})": f"num IN (5L, 2.0D, {_TWO53 + 1}L)",
+}
+
+
+@pytest.fixture(scope="module")
+def seam_table(spark, tmp_path_factory):
+    """One Spark-written file per edge of :data:`_SEAM_FILES`, plus one
+    pyarrow-written file with statistics off (``has_stats = false``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = tmp_path_factory.mktemp("seams")
+    data, index = str(base / "data"), str(base / "idx")
+    for rows in _SEAM_FILES:
+        spark.createDataFrame(rows, "num double, n long").coalesce(1).write.mode(
+            "append"
+        ).parquet(data)
+    pq.write_table(
+        pa.table({"num": [2.0, 1e300], "n": [7, _TWO53 + 1]}),
+        f"{data}/zz-no-stats.parquet", write_statistics=False,
+    )
+    build_stats_index(spark, data, index)
+    return data, index
+
+
+@pytest.mark.parametrize("pred", list(_SEAM_PREDICATES))
+def test_prune_rule_type_seams_are_sound(spark, seam_table, pred):
+    """Every file the rule prunes holds no row matching the clause
+    under Spark's own comparison semantics, and the pruned read equals
+    the unpruned filter."""
+    from columnar_analytics_engine_spark.manifest import manifest_files
+
+    data, index = seam_table
+    sql = _SEAM_PREDICATES[pred]
+    files = manifest_files(index)
+    plan = plan_skipping(spark, index, pred)
+    assert plan["files_total"] == len(_SEAM_FILES) + 1
+    no_stats = next(f for f in files if f.endswith("zz-no-stats.parquet"))
+    assert no_stats in plan["files"]
+    for f in set(files) - set(plan["files"]):
+        assert spark.read.parquet(f).where(sql).count() == 0, (pred, f)
+    want = spark.read.parquet(*files).where(sql)
+    got = read_skipping(spark, data, index, pred)
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
+
+def test_prune_rule_type_seams_still_prune(spark, seam_table):
+    """The guards keep only what they must: clauses inside the exact
+    range still prune, on both sides of each seam."""
+    _data, index = seam_table
+    pruned = {
+        pred: plan_skipping(spark, index, pred)["files_pruned"]
+        for pred in ("n ne 7", "n gt 0", "num lt 0.5", "n in (1, 7, 123)", "n eq 3.0")
+    }
+    # n ne 7: the two constant-7 files (a null satisfies no clause)
+    # and the all-null one
+    assert pruned["n ne 7"] == 3
+    # n gt 0: the all-null file and the all-negative file
+    assert pruned["n gt 0"] == 2
+    assert all(v > 0 for v in pruned.values()), pruned
+
+
+def test_has_stats_false_never_prunes(spark, seam_table, tmp_path):
+    """A manifest row marked ``has_stats = false`` keeps its file even
+    when its recorded bounds and null count would exclude it."""
+    import pyarrow as pa
+
+    from columnar_analytics_engine_spark.manifest import manifest_table, write_manifest
+
+    _data, index = seam_table
+    tbl = manifest_table(index)
+    unmarked = str(tmp_path / "unmarked")
+    write_manifest(spark, unmarked, tbl.set_column(
+        tbl.schema.get_field_index("has_stats"), "has_stats",
+        pa.array([False] * tbl.num_rows),
+    ))
+    for pred in _SEAM_PREDICATES:
+        assert plan_skipping(spark, unmarked, pred)["files_pruned"] == 0, pred
+
+
 def test_hive_partition_clause_prunes(spark, tmp_path):
     """Partition values live in paths, not footers: the index carries
     them as point intervals, so a partition clause prunes whole
