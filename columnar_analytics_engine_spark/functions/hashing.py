@@ -5,31 +5,42 @@ and (c) reproducible in the DuckDB oracle.  Spark's native ``xxhash64``
 has no DuckDB twin, so we derive a 60-bit integer from md5 — md5 is
 identical everywhere, and 15 hex chars (60 bits) fit a signed int64.
 
-    Spark :  conv(substr(md5(concat(prefix, x)), 1, 15), 16, 10) :: long
-    DuckDB:  CAST('0x' || substr(md5(prefix || x), 1, 15) AS BIGINT)
+Each formula here is written ONCE as a template over SQL text: pass
+SQL expressions and a dialect (``functions/dialect.py``), get SQL text
+back.  Spark call sites wrap it in ``F.expr``; the DuckDB oracles
+interpolate it.  The only dialect difference the hashes touch is the
+hex parse of the digest prefix (``dialect.hex_to_bigint``):
+
+    SPARK :  cast(conv(substring(md5(prefix || x), 1, 15), 16, 10) as bigint)
+    DUCKDB:  CAST('0x' || substring(md5(prefix || x), 1, 15) AS BIGINT)
 
 Both produce the same non-negative int64 for the same input (verified
-bit-for-bit).  The ``prefix`` acts as the hash-family seed (one prefix
-per MinHash permutation).  For throughput-critical paths that don't
-need oracle parity, swap in ``F.xxhash64`` — same API shape.
+bit-for-bit against ``hashlib.md5`` in tests/test_hashing.py).  The
+``prefix`` acts as the hash-family seed (one prefix per MinHash
+permutation).  For throughput-critical paths that don't need oracle
+parity, swap in ``F.xxhash64``.
+
+A whole family rendered as one SQL text costs one parse instead of
+~40·k py4j Column calls at plan construction; the repeated digest
+sub-expressions collapse under whole-stage codegen's subexpression
+elimination, so per-row digest work is one md5 per half.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import random as _random
+
+from columnar_analytics_engine_spark.functions.dialect import SPARK, Dialect
 
 
-def h60(prefix: str, col: Column) -> Column:
-    """60-bit keyed hash of a string column (seeded by ``prefix``)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(prefix), col)), 1, 15), 16, 10
-    ).cast("long")
+def _md5_bits(x: str, start: int, d: Dialect) -> str:
+    """60 bits of ``md5(x)`` from hex char ``start`` (1 or 16)."""
+    return d.hex_to_bigint(f"substring(md5({x}), {start}, 15)")
 
 
-def sql_h60(prefix: str, expr: str) -> str:
-    """DuckDB fragment matching :func:`h60` bit-for-bit."""
-    return f"CAST(CONCAT('0x', SUBSTR(md5(CONCAT('{prefix}', {expr})), 1, 15)) AS BIGINT)"
+def h60(prefix: str, x: str, d: Dialect = SPARK) -> str:
+    """60-bit keyed hash of the string expression ``x`` (seeded by ``prefix``)."""
+    return _md5_bits(f"{d.lit(prefix)} || ({x})", 1, d)
 
 
 # -- affine k-family: k hashes from ONE md5 -----------------------------------
@@ -44,11 +55,9 @@ def sql_h60(prefix: str, expr: str) -> str:
 # (a two-point universal family).  All intermediates stay < 2^62, so the
 # arithmetic is exact int64 on both engines and the DuckDB oracle
 # reproduces it bit-for-bit.  The a/b constants are fixed pseudorandom
-# ints — part of the operator definition, identical in the SQL twin.
+# ints — part of the operator definition.
 
 P31 = 2_147_483_647  # 2^31 − 1 (Mersenne prime)
-
-import random as _random
 
 _rng = _random.Random(0xC0FFEE)
 MINHASH_A = [_rng.randrange(1, P31) for _ in range(64)]
@@ -56,79 +65,20 @@ MINHASH_B = [_rng.randrange(1, P31) for _ in range(64)]
 del _rng
 
 
-def affine_hash_cols(col: Column, k: int) -> list[Column]:
-    """k int32-range hash Columns of a string column from one md5.
-
-    Prefer :func:`affine_hash_array` in plans: as k separate Columns the
-    shared ``md5(col)`` sub-expression is INLINED into every member
-    (codegen does not CSE across aggregate result expressions), so a
-    projection of all k costs 2·k digests per row instead of 2.
-    """
-    d = F.md5(col)
-    x1 = F.conv(F.substring(d, 1, 15), 16, 10).cast("long") % F.lit(P31)
-    x2 = F.conv(F.substring(d, 16, 15), 16, 10).cast("long") % F.lit(P31)
-    return [
-        (
-            ((F.lit(MINHASH_A[i]) * x1) % F.lit(P31))
-            + ((F.lit(MINHASH_B[i]) * x2) % F.lit(P31))
-            + F.lit(i)
-        )
-        % F.lit(P31)
-        for i in range(k)
-    ]
-
-
-def affine_hash_array(col: Column | str, k: int) -> Column:
-    """The k-family as ONE array<long> Column — same values as
-    :func:`affine_hash_cols` (element i == column i), but the md5 is
-    evaluated once per row for the whole family: a single array-valued
-    expression is one codegen unit, so the two digest sub-expressions
-    are shared across all k members instead of re-inlined per column.
-    At vocabulary scale (billions of distinct terms × k=32) that is the
-    difference between 2 and 64 digests per term.
-
-    Given a SQL expression STRING the whole family is built as one
-    parsed ``F.expr`` instead of ~40·k py4j Column calls: profiling the
-    bench (round 15) showed DataFrame CONSTRUCTION of the MinHash
-    family dominated by py4j round trips (~0.6 s per invocation just
-    for this function at k=32), pure driver-side stall per guide §5.
-    The parsed tree repeats the two digest sub-expressions textually,
-    but whole-stage codegen's subexpression elimination collapses them
-    inside the single Project, so per-row digest work is unchanged
-    (A/B'd: cold signature build equal within noise, plan shows one
-    md5 per half in the generated code's common-subexpr block)."""
-    if isinstance(col, str):
-        x1 = f"(cast(conv(substring(md5({col}), 1, 15), 16, 10) as bigint) % {P31})"
-        x2 = f"(cast(conv(substring(md5({col}), 16, 15), 16, 10) as bigint) % {P31})"
-        members = ",".join(
+def affine_hash_array(x: str, k: int, d: Dialect = SPARK) -> str:
+    """The k-family of the string expression ``x`` as ONE array of
+    int32-range longs (element i+1 is member i).  As one array-valued
+    expression the two digests are shared by all k members (k separate
+    columns re-inline them per member under codegen: 2·k digests per
+    term instead of 2)."""
+    x1 = f"({_md5_bits(x, 1, d)} % {P31})"
+    x2 = f"({_md5_bits(x, 16, d)} % {P31})"
+    return d.array(
+        [
             f"((({MINHASH_A[i]} * {x1}) % {P31}) + (({MINHASH_B[i]} * {x2}) % {P31}) + {i}) % {P31}"
-            for i in range(k)
-        )
-        return F.expr(f"array({members})")
-    d = F.md5(col)
-    x1 = F.conv(F.substring(d, 1, 15), 16, 10).cast("long") % F.lit(P31)
-    x2 = F.conv(F.substring(d, 16, 15), 16, 10).cast("long") % F.lit(P31)
-    return F.array(
-        *[
-            (
-                ((F.lit(MINHASH_A[i]) * x1) % F.lit(P31))
-                + ((F.lit(MINHASH_B[i]) * x2) % F.lit(P31))
-                + F.lit(i)
-            )
-            % F.lit(P31)
             for i in range(k)
         ]
     )
-
-
-def sql_affine_hash(expr: str, k: int) -> list[str]:
-    """DuckDB fragments matching :func:`affine_hash_cols` bit-for-bit."""
-    x1 = f"(CAST(CONCAT('0x', SUBSTR(md5({expr}), 1, 15)) AS BIGINT) % {P31})"
-    x2 = f"(CAST(CONCAT('0x', SUBSTR(md5({expr}), 16, 15)) AS BIGINT) % {P31})"
-    return [
-        f"((({MINHASH_A[i]} * {x1}) % {P31}) + (({MINHASH_B[i]} * {x2}) % {P31}) + {i}) % {P31}"
-        for i in range(k)
-    ]
 
 
 # -- numeric n-gram (shingle) hashing -----------------------------------------
@@ -149,84 +99,29 @@ ROLL_B1 = 1_000_003
 ROLL_B2 = 999_999_937
 
 
-def token_hash_structs(l: Column | str) -> Column:
-    """array<struct<a,b>> of per-token 31-bit hash pairs (one md5 each).
-
-    Given a SQL expression STRING, the whole transform is built as one
-    parsed ``F.expr`` (round 15, guide §5: the lambda-per-token Column
-    build cost ~0.1 s of py4j round trips per plan construction)."""
-    if isinstance(l, str):
-        a = f"cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint) % {P31}"
-        b = f"cast(conv(substring(md5(t), 16, 15), 16, 10) as bigint) % {P31}"
-        return F.expr(f"transform({l}, t -> named_struct('a', {a}, 'b', {b}))")
-
-    def per_tok(tok: Column) -> Column:
-        d = F.md5(tok)
-        a = F.conv(F.substring(d, 1, 15), 16, 10).cast("long") % F.lit(P31)
-        b = F.conv(F.substring(d, 16, 15), 16, 10).cast("long") % F.lit(P31)
-        return F.struct(a.alias("a"), b.alias("b"))
-
-    return F.transform(l, per_tok)
+def token_hash_structs(tokens: str, d: Dialect = SPARK) -> str:
+    """array<struct<a,b>> of per-token 31-bit hash pairs (one md5 each)
+    of the string-array expression ``tokens``."""
+    pair = d.struct(
+        {
+            "a": f"{_md5_bits('_t', 1, d)} % {P31}",
+            "b": f"{_md5_bits('_t', 16, d)} % {P31}",
+        }
+    )
+    return f"{d.transform}({tokens}, _t -> {pair})"
 
 
-def gram_hash_array(hl: Column | str, n: int) -> Column:
-    """62-bit rolling hash per n-gram position of a token-hash array.
-
-    String input builds the identical expression as one parsed
-    ``F.expr`` (round 15, same rationale as :func:`token_hash_structs`).
-    """
-    if isinstance(hl, str):
-        acc_a = f"element_at({hl}, i).a"
-        acc_b = f"element_at({hl}, i).b"
-        for j in range(1, n):
-            acc_a = f"(({acc_a}) * {ROLL_B1} + element_at({hl}, i + {j}).a) % {P31}"
-            acc_b = f"(({acc_b}) * {ROLL_B2} + element_at({hl}, i + {j}).b) % {P31}"
-        positions = (
-            f"CASE WHEN size({hl}) >= {n} "
-            f"THEN sequence(1, size({hl}) - {n - 1}) "
-            f"ELSE cast(array() as array<int>) END"
-        )
-        return F.expr(
-            f"transform({positions}, i -> ({acc_a}) * 2147483648 + ({acc_b}))"
-        )
-
-    def build(i: Column) -> Column:
-        acc_a = F.element_at(hl, i).getField("a")
-        acc_b = F.element_at(hl, i).getField("b")
-        for j in range(1, n):
-            acc_a = (acc_a * F.lit(ROLL_B1) + F.element_at(hl, i + j).getField("a")) % F.lit(P31)
-            acc_b = (acc_b * F.lit(ROLL_B2) + F.element_at(hl, i + j).getField("b")) % F.lit(P31)
-        return acc_a * F.lit(2_147_483_648) + acc_b
-
-    # Spark's sequence(1, stop) DESCENDS when stop < 1 (it never yields
-    # an empty array), so short inputs need an explicit empty branch —
-    # DuckDB's range() is empty there and the two must agree
-    positions = F.when(
-        F.size(hl) >= n, F.sequence(F.lit(1), F.size(hl) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(positions, build)
-
-
-def sql_token_hash_structs(expr: str) -> str:
-    """DuckDB fragment matching :func:`token_hash_structs` bit-for-bit."""
-    a = f"CAST(CONCAT('0x', SUBSTR(md5(t), 1, 15)) AS BIGINT) % {P31}"
-    b = f"CAST(CONCAT('0x', SUBSTR(md5(t), 16, 15)) AS BIGINT) % {P31}"
-    return f"list_transform({expr}, t -> {{'a': {a}, 'b': {b}}})"
-
-
-def sql_gram_hash_array(hl_expr: str, n: int) -> str:
-    """DuckDB fragment matching :func:`gram_hash_array` bit-for-bit.
-
-    Emits ``list_transform(range(1, len(hl) - (n-2)), i -> ...)`` — the
-    range upper bound is exclusive, so positions run 1..len-n+1 exactly
-    like the Spark ``sequence``.
-    """
+def gram_hash_array(pairs: str, n: int, d: Dialect = SPARK) -> str:
+    """62-bit rolling hash per n-gram position of the token-hash-pair
+    array expression ``pairs`` (see :func:`token_hash_structs`); empty
+    when it holds fewer than ``n`` pairs."""
 
     def roll(field: str, base: int) -> str:
-        acc = f"struct_extract({hl_expr}[i], '{field}')"
+        acc = f"{d.elem(pairs, '_i')}.{field}"
         for j in range(1, n):
-            acc = f"(({acc}) * {base} + struct_extract({hl_expr}[i+{j}], '{field}')) % {P31}"
+            acc = f"(({acc}) * {base} + {d.elem(pairs, f'_i + {j}')}.{field}) % {P31}"
         return acc
 
     gram = f"({roll('a', ROLL_B1)}) * 2147483648 + ({roll('b', ROLL_B2)})"
-    return f"list_transform(range(1, len({hl_expr}) - {n - 2}), i -> {gram})"
+    positions = d.positions(f"{d.size}({pairs}) - {n - 1}")
+    return f"{d.transform}({positions}, _i -> {gram})"

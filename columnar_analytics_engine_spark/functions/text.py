@@ -1,16 +1,26 @@
-"""Text-analysis primitives for large-scale training-data pipelines.
+r"""Text-analysis primitives for large-scale training-data pipelines.
 
-All functions are pure ``pyspark.sql.functions`` compositions — JVM-side,
-whole-stage-codegen'd, no Python UDFs — so they run at full scan speed on
-100 TB of documents.  Tokenization is the shared contract: whitespace
-split of the trimmed text, mirrored exactly by the DuckDB oracle
-(``regexp_split_to_array(trim(text), '\\s+')``).
+The tokenizer contract — whitespace split of the trimmed text — and
+the formulas built on it (token counts, stop-word hits, the language
+argmax, the document fingerprint) are each written ONCE as a template
+over SQL text: pass SQL expressions and a dialect
+(``functions/dialect.py``), get SQL text back.  Spark call sites wrap
+the result in ``F.expr``; the DuckDB oracles interpolate it.  The
+tokenizer renders as ``split(trim(x), '\\s+')`` for Spark and
+``regexp_split_to_array(trim(x), '\s+')`` for DuckDB — the same
+regex, so both engines produce the same token arrays.  Everything runs
+JVM-side, whole-stage-codegen'd, no Python UDFs.
+
+The remaining Column helpers (character, punctuation and subword
+counts) have no oracle twin to keep in step with.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from columnar_analytics_engine_spark.functions.dialect import SPARK, Dialect
 
 # Tiny deterministic stopword lists per language for the language-ID
 # heuristic and stopword-ratio quality signal.  Intentionally small: the
@@ -27,22 +37,24 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 # Deterministic tie-break priority for argmax (must match oracle SQL).
 LANG_PRIORITY: tuple[str, ...] = ("en", "fr", "es", "de", "zh")
 
+_WS = r"\s+"
 
-def tokens(text: Column) -> Column:
+
+def tokens(text: str, d: Dialect = SPARK) -> str:
     """Whitespace tokens of the trimmed text (the tokenizer contract)."""
-    return F.split(F.trim(text), r"\s+")
+    return f"{d.split}(trim({text}), {d.lit(_WS)})"
 
 
-def distinct_tokens(text: Column) -> Column:
-    return F.array_distinct(tokens(text))
+def distinct_tokens(text: str, d: Dialect = SPARK) -> str:
+    return f"{d.distinct}({tokens(text, d)})"
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text)).cast("long")
+def token_count(text: str, d: Dialect = SPARK) -> str:
+    return f"CAST({d.size}({tokens(text, d)}) AS BIGINT)"
 
 
-def distinct_token_count(text: Column) -> Column:
-    return F.size(distinct_tokens(text)).cast("long")
+def distinct_token_count(text: str, d: Dialect = SPARK) -> str:
+    return f"CAST({d.size}({distinct_tokens(text, d)}) AS BIGINT)"
 
 
 # GPT-2-style pretokenizer pattern, restricted to syntax with identical
@@ -70,27 +82,11 @@ def non_ws_char_count(text: Column) -> Column:
     return F.length(F.regexp_replace(F.trim(text), r"\s+", "")).cast("long")
 
 
-def _sql_stopword_hits(text: str, lang: str) -> str:
-    """Spark-SQL text of :func:`stopword_hits` (str-input fast path)."""
-    words = ", ".join("'" + w.replace("'", "\\'") + "'" for w in STOPWORDS[lang])
-    return (
-        f"cast(size(filter(split(trim({text}), '\\\\s+'), "
-        f"tok -> array_contains(array({words}), tok))) as bigint)"
-    )
-
-
-def stopword_hits(text: Column | str, lang: str) -> Column:
-    """Occurrences (not distinct) of ``lang`` stopwords among tokens.
-
-    String input builds the identical expression as one parsed
-    ``F.expr`` — the lambda-based Column build costs ~15 py4j round
-    trips per language per plan construction (round 15, guide §5)."""
-    if isinstance(text, str):
-        return F.expr(_sql_stopword_hits(text, lang))
-    stoplist = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(
-        F.filter(tokens(text), lambda tok: F.array_contains(stoplist, tok))
-    ).cast("long")
+def stopword_hits(text: str, lang: str, d: Dialect = SPARK) -> str:
+    """Occurrences (not distinct) of ``lang`` stopwords among tokens."""
+    stoplist = d.array([d.lit(w) for w in STOPWORDS[lang]])
+    hits = f"{d.filter}({tokens(text, d)}, _w -> {d.contains}({stoplist}, _w))"
+    return f"CAST({d.size}({hits}) AS BIGINT)"
 
 
 def punct_count(text: Column) -> Column:
@@ -98,47 +94,30 @@ def punct_count(text: Column) -> Column:
     return F.length(F.regexp_replace(text, r"[^.,;:!?]", "")).cast("long")
 
 
-def language_scores(text: Column | str) -> dict[str, Column]:
-    return {lang: stopword_hits(text, lang) for lang in LANG_PRIORITY}
-
-
-def predict_language(text: Column | str) -> Column:
-    """Argmax of per-language stopword evidence with the fixed
-    LANG_PRIORITY tie-break — a deterministic n-gram-style language-ID
-    heuristic (lexicon-based; oracle replicates the same CASE chain).
-
-    String input assembles the whole CASE chain as one parsed
-    ``F.expr`` (round 15, guide §5).  The text repeats each score
-    expression per comparison, exactly as the Column build repeats the
-    shared Column references; whole-stage codegen's subexpression
-    elimination collapses both the same way."""
+def language_argmax(scores: dict[str, str]) -> str:
+    """Argmax over per-language score expressions with the fixed
+    LANG_PRIORITY tie-break: a CASE chain (dialect-neutral SQL)."""
     langs = list(LANG_PRIORITY)
-    if isinstance(text, str):
-        s = {lang: _sql_stopword_hits(text, lang) for lang in langs}
-        arms = []
-        for i, lang in enumerate(langs[:-1]):
-            cond = " AND ".join(
-                f"({s[lang]}) >= ({s[other]})" for other in langs[i + 1 :]
-            )
-            arms.append(f"WHEN {cond} THEN '{lang}'")
-        return F.expr(
-            "CASE " + " ".join(arms) + f" ELSE '{langs[-1]}' END"
-        )
-    scores = language_scores(text)
-    expr = None
+    arms = []
     for i, lang in enumerate(langs[:-1]):
-        rest = langs[i + 1 :]
-        cond = None
-        for other in rest:
-            c = scores[lang] >= scores[other]
-            cond = c if cond is None else (cond & c)
-        expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
-    return expr.otherwise(langs[-1])
+        cond = " AND ".join(
+            f"({scores[lang]}) >= ({scores[other]})" for other in langs[i + 1 :]
+        )
+        arms.append(f"WHEN {cond} THEN '{lang}'")
+    return "CASE " + " ".join(arms) + f" ELSE '{langs[-1]}' END"
 
 
-def fingerprint(text: Column) -> Column:
+def predict_language(text: str, d: Dialect = SPARK) -> str:
+    """Argmax of per-language stopword evidence — a deterministic
+    lexicon-based language-ID heuristic.  The CASE chain repeats each
+    score expression per comparison; whole-stage codegen's
+    subexpression elimination evaluates each once."""
+    return language_argmax({lang: stopword_hits(text, lang, d) for lang in LANG_PRIORITY})
+
+
+def fingerprint(text: str, d: Dialect = SPARK) -> str:
     """Canonical document fingerprint: md5 of the lowercased,
     whitespace-collapsed text.  Identical duplicates (modulo case and
     spacing) collide; stable across engines for oracle checks."""
-    normalized = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    return F.md5(normalized)
+    collapsed = d.replace_all(f"lower(trim({text}))", d.lit(_WS), "' '")
+    return f"md5({collapsed})"

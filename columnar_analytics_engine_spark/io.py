@@ -418,11 +418,11 @@ def write_shuffled(
     """
     from pyspark.sql import functions as F
 
+    from columnar_analytics_engine_spark.functions.dialect import SPARK
     from columnar_analytics_engine_spark.functions.hashing import h60
 
-    rk = h60(
-        f"shuffle{seed}:", F.coalesce(F.col(key_col).cast("string"), F.lit("\x00"))
-    )
+    key = f"coalesce(CAST({SPARK.quote(key_col)} AS STRING), {SPARK.lit(chr(0))})"
+    rk = F.expr(h60(f"shuffle{seed}:", key))
     out = (
         df.withColumn("_shuffle_rank", rk)
         .withColumn("shard_id", F.pmod(F.col("_shuffle_rank"), F.lit(n_files)).cast("int"))

@@ -39,81 +39,63 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_analytics_engine_spark.functions.dialect import SPARK, Dialect
 from columnar_analytics_engine_spark.io import read_files
 
 
-def scaled_bin(c: Column, mn: Column, mx: Column, levels: int) -> Column:
-    """Range-bin ``c`` into ``0..levels`` (inclusive) given exact
-    [``mn``, ``mx``] bounds: ``floor((c - mn) / (mx - mn) * levels)``,
-    clamped.  Every operation is a single IEEE-754 double op, so the
-    result is bit-identical across engines (the determinism the SQL
-    oracles rely on)."""
-    frac = (c.cast("double") - mn) / F.greatest(mx - mn, F.lit(1e-300))
-    return F.least(
-        F.lit(levels),
-        F.greatest(F.lit(0), F.floor(frac * F.lit(float(levels))).cast("long")),
-    )
-
-
-def morton_expr(bins: list[Column], bits: int) -> Column:
-    """Interleave the low ``bits`` bits of each bin (column i owns
-    output bit positions ``bit*len(bins) + i``) into one Z-order /
-    Morton value — pure shift/mask JVM expressions."""
-    z = F.lit(0).cast("long")
-    for bit in range(bits):
-        for i, b in enumerate(bins):
-            z = z + F.shiftleft(
-                F.shiftright(b, bit).bitwiseAND(F.lit(1)),
-                bit * len(bins) + i,
-            )
-    return z
-
-
-# -- Spark-SQL text twins of scaled_bin / morton_expr (round 15) --------------
-#
-# The Column builders above cost hundreds of py4j round trips per plan
-# construction (bits × cols shift/mask terms, each term re-referencing
-# a ~8-op bin subtree) — a per-invocation driver stall (guide §5).  The
-# bucket builders assemble the identical expressions as ONE parsed
-# F.expr from these text twins; values and schemas are A/B-verified
-# equal (the repeated bin text collapses under codegen subexpression
-# elimination exactly like the shared Column references did).
-
-def quote_ident(name: str) -> str:
-    """``name`` as a Spark SQL identifier: backtick-quoted, with any
-    embedded backtick doubled — safe for names holding dots, spaces or
-    reserved words."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_scaled_bin(c: str, mn: str, mx: str, levels: int) -> str:
-    """:func:`scaled_bin` over the columns NAMED ``c``, ``mn``, ``mx``."""
-    c, mn, mx = quote_ident(c), quote_ident(mn), quote_ident(mx)
+def scaled_bin(c: str, mn: str, mx: str, levels: int) -> str:
+    """Range-bin the expression ``c`` into ``0..levels`` (inclusive)
+    given exact [``mn``, ``mx``] bounds: ``floor((c - mn) / (mx - mn)
+    * levels)``, clamped.  Every operation is a single IEEE-754 double
+    op, so the result is bit-identical across engines (the determinism
+    the SQL oracles rely on); the text is the same in both dialects."""
+    frac = f"(CAST({c} AS DOUBLE) - {mn}) / greatest({mx} - {mn}, 1e-300)"
     return (
-        f"least({levels}, greatest(0, cast(floor(((cast({c} as double) - {mn})"
-        f" / greatest({mx} - {mn}, 1e-300)) * {float(levels)!r}D) as bigint)))"
+        f"least({levels}, greatest(0, CAST(floor(({frac})"
+        f" * CAST({levels} AS DOUBLE)) AS BIGINT)))"
     )
 
 
-def _sql_morton(bins: list[str], bits: int) -> str:
-    """:func:`morton_expr` over the SQL expressions ``bins`` (built by
-    :func:`_sql_scaled_bin`, which quotes the column names)."""
+def morton(bins: list[str], bits: int, d: Dialect = SPARK) -> str:
+    """Interleave the low ``bits`` bits of each bigint bin expression
+    (bin i owns output bit positions ``bit*len(bins) + i``) into one
+    Z-order / Morton value — pure shift/mask SQL."""
     terms = " + ".join(
-        f"shiftleft((shiftright(({b}), {bit}) & 1), {bit * len(bins) + i})"
+        f"(({d.shift_right(b, bit)} & 1) << {bit * len(bins) + i})"
         for bit in range(bits)
         for i, b in enumerate(bins)
     )
-    return f"cast(0 as bigint) + {terms}"
+    return f"(CAST(0 AS BIGINT) + {terms})"
+
+
+def rank_bin(c: str, cuts: list[float], d: Dialect = SPARK) -> str:
+    """Quantile-rank bin: the number of ``cuts`` at or below the
+    expression ``c`` — 0..len(cuts), one higher-order filter over a
+    literal cut array (JVM-side, no join).  With equi-probable cuts
+    every bin holds ~the same ROW COUNT regardless of the value
+    distribution — the skew-robust twin of :func:`scaled_bin` (whose
+    equal-WIDTH bins collapse to one hot bin under power-law columns,
+    destroying the interleave's balance)."""
+    arr = d.array([f"CAST('{float(x)!r}' AS DOUBLE)" for x in cuts])
+    hits = f"{d.filter}({arr}, _x -> CAST({c} AS DOUBLE) >= _x)"
+    return f"CAST({d.size}({hits}) AS BIGINT)"
 
 
 def _with_minmax(df: DataFrame, cols: list[str]) -> DataFrame:
     """Join the exact per-column min/max (as double) alongside every
     row: one 1-row aggregate, broadcast in-plan — no driver collect."""
     stats = df.agg(
-        *[F.min(F.col(quote_ident(c))).cast("double").alias(f"_mn_{c}") for c in cols],
-        *[F.max(F.col(quote_ident(c))).cast("double").alias(f"_mx_{c}") for c in cols],
+        *[F.min(F.col(SPARK.quote(c))).cast("double").alias(f"_mn_{c}") for c in cols],
+        *[F.max(F.col(SPARK.quote(c))).cast("double").alias(f"_mx_{c}") for c in cols],
     )
     return df.join(F.broadcast(stats))
+
+
+def _minmax_bin(c: str, levels: int) -> str:
+    """:func:`scaled_bin` of column ``c`` against the ``_with_minmax``
+    bounds, every name quoted."""
+    q = SPARK.quote
+    return scaled_bin(q(c), q(f"_mn_{c}"), q(f"_mx_{c}"), levels)
 
 
 def with_linear_bucket(df: DataFrame, col: str, n_buckets: int) -> DataFrame:
@@ -123,7 +105,7 @@ def with_linear_bucket(df: DataFrame, col: str, n_buckets: int) -> DataFrame:
     j = _with_minmax(df, [col])
     return j.withColumn(
         "_bucket",
-        F.expr(_sql_scaled_bin(col, f"_mn_{col}", f"_mx_{col}", n_buckets - 1)),
+        F.expr(_minmax_bin(col, n_buckets - 1)),
     ).drop(f"_mn_{col}", f"_mx_{col}")
 
 
@@ -143,26 +125,11 @@ def with_zorder_bucket(
     if width > 62:
         raise ValueError("bits * len(cols) must be <= 62")
     j = _with_minmax(df, cols)
-    bins = [
-        _sql_scaled_bin(c, f"_mn_{c}", f"_mx_{c}", (1 << bits) - 1)
-        for c in cols
-    ]
+    bins = [_minmax_bin(c, (1 << bits) - 1) for c in cols]
     return j.withColumn(
         "_bucket",
-        F.expr(f"shiftright({_sql_morton(bins, bits)}, {width - k})"),
+        F.expr(SPARK.shift_right(morton(bins, bits), width - k)),
     ).drop(*[f"_mn_{c}" for c in cols], *[f"_mx_{c}" for c in cols])
-
-
-def rank_bin(c: Column, cuts: list[float]) -> Column:
-    """Quantile-rank bin: the number of ``cuts`` at or below ``c`` —
-    0..len(cuts), evaluated as one higher-order filter over a literal
-    cut array (JVM-side, no join).  With equi-probable cuts every bin
-    holds ~the same ROW COUNT regardless of the value distribution —
-    the skew-robust twin of :func:`scaled_bin` (whose equal-WIDTH bins
-    collapse to one hot bin under power-law columns, destroying the
-    interleave's balance)."""
-    arr = F.array(*[F.lit(float(x)) for x in cuts])
-    return F.size(F.filter(arr, lambda x: c.cast("double") >= x)).cast("long")
 
 
 def quantile_cuts(
@@ -203,22 +170,18 @@ def zorder_frame(
         raise ValueError("bits * len(cols) must be <= 62")
     if method == "linear":
         j = _with_minmax(df, cols)
-        bins = [
-            _sql_scaled_bin(c, f"_mn_{c}", f"_mx_{c}", (1 << bits) - 1)
-            for c in cols
-        ]
+        bins = [_minmax_bin(c, (1 << bits) - 1) for c in cols]
         drop = [f"_mn_{c}" for c in cols] + [f"_mx_{c}" for c in cols]
-        z = F.expr(_sql_morton(bins, bits))
     elif method == "quantile":
         if bits > 8:
             raise ValueError("quantile binning caps bits at 8 (256 bins)")
         cuts = quantile_cuts(df, cols, bits)
         j = df
-        z = morton_expr([rank_bin(F.col(quote_ident(c)), cuts[c]) for c in cols], bits)
+        bins = [rank_bin(SPARK.quote(c), cuts[c]) for c in cols]
         drop = []
     else:
         raise ValueError(f"unknown binning method {method!r}")
-    out = j.withColumn("_z", z)
+    out = j.withColumn("_z", F.expr(morton(bins, bits)))
     if drop:
         out = out.drop(*drop)
     return (

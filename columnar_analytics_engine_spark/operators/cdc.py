@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from columnar_analytics_engine_spark.functions.dialect import SPARK
 from columnar_analytics_engine_spark.functions.hashing import h60
 from columnar_analytics_engine_spark.functions.text import tokens
 
@@ -49,13 +50,11 @@ def cdc_chunks(
     modulus = 1 << boundary_bits
     tok = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "token"),
+        F.posexplode(F.expr(tokens(SPARK.quote(text_col)))).alias("pos", "token"),
     )
     # a token whose hash fires ENDS its chunk: the chunk id of a token is
     # the number of boundary tokens strictly before it
-    flag = (F.pmod(h60(CDC_SEED_PREFIX, F.col("token")), F.lit(modulus)) == 0).cast(
-        "long"
-    )
+    flag = F.expr(f"CAST(pmod({h60(CDC_SEED_PREFIX, 'token')}, {modulus}) = 0 AS BIGINT)")
     w_prev = (
         W.partitionBy("doc_id")
         .orderBy("pos")

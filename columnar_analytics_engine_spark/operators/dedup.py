@@ -20,7 +20,7 @@ Hashing is md5-derived (functions/hashing.py) so the DuckDB oracle
 reproduces every stage bit-for-bit — including LSH's probabilistic
 misses, which are deterministic given the hash family.  MinHash's k
 values come from ONE md5 per vocabulary term via the affine family
-(``affine_hash_cols``); SimHash uses the 60-bit ``h60``.
+(``affine_hash_array``); SimHash uses the 60-bit ``h60``.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from columnar_analytics_engine_spark.functions.caching import persist_once
+from columnar_analytics_engine_spark.functions.dialect import SPARK
 from columnar_analytics_engine_spark.functions.hashing import affine_hash_array, h60
 from columnar_analytics_engine_spark.functions.text import distinct_tokens, tokens
 
@@ -70,7 +71,7 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 def _token_table(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(distinct_tokens(F.col(text_col))).alias("token"),
+        F.explode(F.expr(distinct_tokens(SPARK.quote(text_col)))).alias("token"),
     )
 
 
@@ -212,7 +213,7 @@ def ngram_jaccard_pairs(
     that token-set Jaccard can't distinguish from shuffles.
     """
     sh = (
-        docs.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("l"))
+        docs.select(F.col(id_col).alias("doc_id"), F.expr(tokens(SPARK.quote(text_col))).alias("l"))
         .filter(F.size("l") >= n)
         .select("doc_id", F.explode(word_shingles(F.col("l"), n)).alias("g"))
     )
@@ -258,7 +259,7 @@ def minhash_signatures(
     # per term instead of 2 (measured 1.7x whole-build slowdown even on
     # a 31-term vocabulary)
     vocab = tok.select("token").distinct().select(
-        "token", affine_hash_array("token", k).alias("vs")
+        "token", F.expr(affine_hash_array("token", k)).alias("vs")
     )
     # expr-built aggregates: the k Column-built min(element_at(...))
     # towers cost ~5 py4j round trips each at plan-construction time
@@ -372,8 +373,8 @@ def hashed_token_sets(
     store it once instead of re-deriving it from text at every probe."""
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.transform(
-            distinct_tokens(F.col(text_col)), lambda x: h60("j:", x)
+        F.expr(
+            f"transform({distinct_tokens(SPARK.quote(text_col))}, _x -> {h60('j:', '_x')})"
         ).alias("toks"),
     )
 
@@ -583,7 +584,7 @@ def _minhash_near_duplicates_collapsed(
     """
     from pyspark.sql import Window as W
 
-    toks = distinct_tokens(F.col(text_col))
+    toks = F.expr(distinct_tokens(SPARK.quote(text_col)))
     keyed = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("_text"),
@@ -656,13 +657,13 @@ def simhash(
     combinable.
     """
     tok = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("token")
+        F.col(id_col).alias("doc_id"), F.explode(F.expr(tokens(SPARK.quote(text_col)))).alias("token")
     )
     tokcnt = tok.groupBy("doc_id", "token").agg(F.count("*").alias("cnt"))
     # hash each vocabulary term once and join back — md5 work scales with
     # distinct tokens, not corpus size (same pattern as minhash_signatures;
     # inlining h60 into all `bits` sums would recompute it per bit per row)
-    vocab = tok.select("token").distinct().withColumn("h", h60("s:", F.col("token")))
+    vocab = tok.select("token").distinct().withColumn("h", F.expr(h60("s:", "token")))
     tokcnt = tokcnt.join(vocab, "token")
     bit_sums = [
         F.sum(
@@ -768,15 +769,11 @@ def containment_pairs(
     num, den = _rational_threshold(threshold)
     if candidates is not None:
         sets = docs.select(
-            F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("l")
+            F.col(id_col).alias("doc_id"), F.expr(tokens(SPARK.quote(text_col))).alias("l")
         ).select(
-            "doc_id",
-            F.when(
-                F.size("l") >= n,
-                F.transform(word_shingles(F.col("l"), n), lambda x: h60("c:", x)),
-            )
-            .otherwise(F.array().cast("array<bigint>"))
-            .alias("toks"),
+            "doc_id", word_shingles(F.col("l"), n).alias("sh")
+        ).select(
+            "doc_id", F.expr(f"transform(sh, _x -> {h60('c:', '_x')})").alias("toks")
         )
         # plan-keyed memoization: the shingle-set table is linear and
         # small but its h60-per-shingle build is the fixed cost of every
@@ -799,7 +796,7 @@ def containment_pairs(
         )
         return _containment_directions(joined, num, den, min_shingles)
     tok = (
-        docs.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("l"))
+        docs.select(F.col(id_col).alias("doc_id"), F.expr(tokens(SPARK.quote(text_col))).alias("l"))
         .filter(F.size("l") >= n)
         .select("doc_id", F.explode(word_shingles(F.col("l"), n)).alias("token"))
     )

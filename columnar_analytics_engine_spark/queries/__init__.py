@@ -27,34 +27,10 @@ from columnar_analytics_engine_spark.queries import (
 )
 
 
-# Fallback list of driver-verified queries (CORRECTNESS_r01.json), used
-# when the CORRECTNESS_r*.json files are not on disk.  The driver checks
-# only the first 50 keys of ``all_queries()`` in insertion order, so
-# not-yet-verified queries are ordered FIRST; previously verified ones
-# keep their in-repo oracle tests as regression cover
-# (tests/test_oracle.py sweeps every SQL-expressible query).
-_DRIVER_VERIFIED_R01 = frozenset({
-    "scan_full_count", "scan_projection", "filter_conjunctive", "filter_six_ops",
-    "filter_count", "agg_global", "agg_group_by", "group_by_count_only",
-    "group_by_filtered", "group_by_multi_key", "join_broadcast_inner",
-    "join_star_tpch_q5", "join_left_count", "join_semi", "join_anti",
-    "join_full_outer", "window_topk_per_group", "window_running_sum",
-    "window_lag_lead", "window_rank_dense", "sort_limit_topk", "set_union",
-    "set_intersect", "set_except", "distinct_count", "rollup_agg", "cube_agg",
-    "pivot_agg", "tpch_q1", "tpch_q3_adapted", "tpch_q6", "tpch_q10_adapted",
-    "scalar_string_funcs", "scalar_date_funcs", "scalar_math_funcs",
-    "case_when_bucketing", "subquery_scalar_avg", "having_filter",
-    "string_aggregation", "array_functions", "json_functions",
-    "window_ntile_percent", "window_range_frame", "window_first_last",
-    "unpivot_metrics", "union_all_bag", "grouping_sets_agg",
-    "set_intersect_all", "set_except_all", "percentile_exact",
-})
-
-
 def _driver_verified() -> dict[str, int]:
     """Map of query name -> latest round in which the driver verified it,
-    read from every CORRECTNESS_r*.json in the repo root (fallback: the
-    round-1 list, all at round 1).
+    read from every CORRECTNESS_r*.json in the repo root (empty when
+    there are none).
 
     A query counts as verified when its row counts matched with no
     error and the value hash didn't mismatch (rows-only checks have no
@@ -79,7 +55,6 @@ def _driver_verified() -> dict[str, int]:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
     last_round: dict[str, int] = {}
-    found = False
     for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path))
         rnd = int(m.group(1)) if m else 0
@@ -89,7 +64,6 @@ def _driver_verified() -> dict[str, int]:
         except (OSError, ValueError):
             continue
         if isinstance(data, dict):
-            found = True
             for name, res in data.items():
                 if not isinstance(res, dict):
                     continue
@@ -105,8 +79,6 @@ def _driver_verified() -> dict[str, int]:
                 )
                 if ok:
                     last_round[name] = max(last_round.get(name, 0), rnd)
-    if not found:
-        return {n: 1 for n in _DRIVER_VERIFIED_R01}
     return last_round
 
 

@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_analytics_engine_spark.functions import text as X
+from columnar_analytics_engine_spark.functions.dialect import DUCKDB
+from columnar_analytics_engine_spark.layout import morton, scaled_bin
 from columnar_analytics_engine_spark.queries._util import (
     QuerySpec,
     exact_sum,
@@ -63,25 +66,6 @@ def layout_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clustering_depth(lin.unionByName(zo))
 
 
-def _bin_sql(col: str, mn: str, mx: str, levels: int) -> str:
-    """DuckDB twin of ``layout.scaled_bin`` (same IEEE ops, same
-    order)."""
-    return (
-        f"LEAST({levels}, GREATEST(0, CAST(FLOOR((CAST({col} AS DOUBLE) - {mn})"
-        f" / GREATEST({mx} - {mn}, 1e-300) * {float(levels)!r}) AS BIGINT)))"
-    )
-
-
-def _morton_sql(bins: list[str], bits: int) -> str:
-    """DuckDB twin of ``layout.morton_expr``."""
-    terms = [
-        f"((({b} >> {bit}) & 1) << {bit * len(bins) + i})"
-        for bit in range(bits)
-        for i, b in enumerate(bins)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def _clustering_depth_sql() -> str:
     lvl = (1 << _BITS) - 1
     k = _NB.bit_length() - 1
@@ -108,14 +92,14 @@ def _clustering_depth_sql() -> str:
     ),
     bins AS (
       SELECT o_custkey, o_orderkey,
-             {_bin_sql('o_custkey', 'mn0', 'mx0', lvl)} AS bin0,
-             {_bin_sql('o_orderkey', 'mn1', 'mx1', lvl)} AS bin1,
-             {_bin_sql('o_custkey', 'mn0', 'mx0', _NB - 1)} AS lb
+             {scaled_bin('o_custkey', 'mn0', 'mx0', lvl)} AS bin0,
+             {scaled_bin('o_orderkey', 'mn1', 'mx1', lvl)} AS bin1,
+             {scaled_bin('o_custkey', 'mn0', 'mx0', _NB - 1)} AS lb
       FROM orders, s
     ),
     bk AS (
       SELECT o_custkey, o_orderkey, lb,
-             ({_morton_sql(['bin0', 'bin1'], _BITS)} >> {shift}) AS zb
+             {DUCKDB.shift_right(morton(['bin0', 'bin1'], _BITS, DUCKDB), shift)} AS zb
       FROM bins
     ),
     ext AS ({ext}),
@@ -504,9 +488,7 @@ def deletes_dedup_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     data = f"{tempfile.gettempdir()}/cae_tomb_data_{tag}"
     dv = f"{tempfile.gettempdir()}/cae_tomb_dv_{tag}"
     write_sorted(docs, data, ["doc_id"], n_files=8)
-    fp = F.md5(
-        F.concat_ws(" ", F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 12))
-    )
+    fp = F.md5(F.concat_ws(" ", F.slice(F.expr(X.tokens("text")), 1, 12)))
     keyed = docs.select("doc_id", fp.alias("f"))
     keep = keyed.groupBy("f").agg(F.min("doc_id").alias("keep_id"))
     losers = (
@@ -1987,11 +1969,11 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "deletes_dedup_tombstones": QuerySpec(
         deletes_dedup_tombstones,
-        r"""
+        f"""
         WITH fp AS (
           SELECT doc_id, n_chars,
                  md5(array_to_string(list_slice(
-                     regexp_split_to_array(trim(text), '\s+'), 1, 12), ' ')) AS f
+                     {X.tokens('text', DUCKDB)}, 1, 12), ' ')) AS f
           FROM documents
         ),
         k AS (SELECT f, MIN(doc_id) AS keep FROM fp GROUP BY f)

@@ -17,13 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from columnar_analytics_engine_spark.functions.dialect import DUCKDB
 from columnar_analytics_engine_spark.functions.hashing import (
+    affine_hash_array,
     gram_hash_array,
     h60,
-    sql_affine_hash,
-    sql_gram_hash_array,
-    sql_h60,
-    sql_token_hash_structs,
     token_hash_structs,
 )
 from columnar_analytics_engine_spark.functions import text as X
@@ -33,20 +31,27 @@ from columnar_analytics_engine_spark.queries._util import QuerySpec, t
 
 # shared oracle fragments -----------------------------------------------------
 
-_SQL_TOKENS = "regexp_split_to_array(trim(text), '\\s+')"
 _SQL_TOK_CTE = f"""
 tok AS (
-  SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS token
+  SELECT doc_id, unnest({X.distinct_tokens('text', DUCKDB)}) AS token
   FROM documents
 )"""
+
+
+def _sql_minhash_sig(tok: str, k: int) -> str:
+    """MinHash signature rows (doc_id, h0..h{k-1}) over the (doc_id,
+    token) relation ``tok``: the min of each affine family member."""
+    mins = ", ".join(f"MIN(vs[{i + 1}]) AS h{i}" for i in range(k))
+    return (
+        f"SELECT doc_id, {mins} FROM (SELECT doc_id, "
+        f"{affine_hash_array('token', k, DUCKDB)} AS vs FROM {tok}) GROUP BY doc_id"
+    )
 
 
 def _minhash_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str:
     # integer-exact threshold boundary, mirroring jaccard_pairs (see
     # operators/dedup.py: (den+num)*|A∩B| >= num*(|A|+|B|))
     num, den = D._rational_threshold(threshold)
-    fam = sql_affine_hash("token", k)
-    mins = ",\n         ".join(f"MIN({fam[i]}) AS h{i}" for i in range(k))
     band_selects = "\n      UNION ALL\n      ".join(
         "SELECT doc_id, {j} AS band_id, md5(CONCAT_WS(',', {cols})) AS band_key FROM sig".format(
             j=j,
@@ -56,11 +61,7 @@ def _minhash_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str:
     )
     return f"""
     WITH {_SQL_TOK_CTE},
-    sig AS (
-      SELECT doc_id,
-         {mins}
-      FROM tok GROUP BY doc_id
-    ),
+    sig AS ({_sql_minhash_sig('tok', k)}),
     bands AS (
       {band_selects}
     ),
@@ -71,7 +72,7 @@ def _minhash_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str:
        AND a.doc_id < b.doc_id
     ),
     sets AS (
-      SELECT doc_id, list_distinct({_SQL_TOKENS}) AS toks FROM documents
+      SELECT doc_id, {X.distinct_tokens('text', DUCKDB)} AS toks FROM documents
     )
     SELECT c.d1, c.d2,
            CAST(len(list_intersect(sa.toks, sb.toks)) AS DOUBLE)
@@ -86,7 +87,7 @@ def _minhash_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str:
 
 
 def _simhash_pairs_sql(max_hamming: int, bits: int, band_bits: int) -> str:
-    h = sql_h60("s:", "token")
+    h = h60("s:", "token", DUCKDB)
     bit_sums = ",\n         ".join(
         f"SUM(CASE WHEN (({h}) >> {b}) & 1 = 1 THEN cnt ELSE -cnt END) AS b{b}"
         for b in range(bits)
@@ -103,7 +104,7 @@ def _simhash_pairs_sql(max_hamming: int, bits: int, band_bits: int) -> str:
     )
     return f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({X.tokens('text', DUCKDB)}) AS token FROM documents
     ),
     tokcnt AS (SELECT doc_id, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
     bitsums AS (
@@ -309,8 +310,6 @@ def _minhash_probe_sql(threshold: float, k: int, bands: int, rows: int, mod: int
     halves' signatures recomputed, candidates restricted to
     (batch, history) pairs."""
     num, den = D._rational_threshold(threshold)
-    fam = sql_affine_hash("token", k)
-    mins = ",\n         ".join(f"MIN({fam[i]}) AS h{i}" for i in range(k))
     band_selects = "\n      UNION ALL\n      ".join(
         "SELECT doc_id, {j} AS band_id, md5(CONCAT_WS(',', {cols})) AS band_key FROM sig".format(
             j=j,
@@ -320,11 +319,7 @@ def _minhash_probe_sql(threshold: float, k: int, bands: int, rows: int, mod: int
     )
     return f"""
     WITH {_SQL_TOK_CTE},
-    sig AS (
-      SELECT doc_id,
-         {mins}
-      FROM tok GROUP BY doc_id
-    ),
+    sig AS ({_sql_minhash_sig('tok', k)}),
     bands AS (
       {band_selects}
     ),
@@ -335,7 +330,7 @@ def _minhash_probe_sql(threshold: float, k: int, bands: int, rows: int, mod: int
       WHERE n.doc_id % {mod} = 0 AND h.doc_id % {mod} != 0
     ),
     sets AS (
-      SELECT doc_id, list_distinct({_SQL_TOKENS}) AS toks FROM documents
+      SELECT doc_id, {X.distinct_tokens('text', DUCKDB)} AS toks FROM documents
     )
     SELECT c.new_id, c.hist_id,
            CAST(len(list_intersect(sa.toks, sb.toks)) AS DOUBLE)
@@ -370,7 +365,7 @@ def text_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences per term (the inputs to TF-IDF weighting)."""
     docs = t(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", F.explode(X.tokens(F.col("text"))).alias("token")
+        "doc_id", F.explode(F.expr(X.tokens("text"))).alias("token")
     )
     # corpus size stays IN the plan (1-row agg broadcast-joined in) so
     # building this DataFrame is fully lazy — no job fires until an action
@@ -434,12 +429,8 @@ def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster sizes (unlike rng-based TABLESAMPLE).  The standard way to
     carve stable train/eval splits out of a 100 TB corpus."""
     df = t(spark, sf_dir, "lineitem")
-    key = F.concat_ws(
-        ":", F.col("l_orderkey").cast("string"), F.col("l_linenumber").cast("string")
-    )
-    from columnar_analytics_engine_spark.functions.hashing import h60
-
-    return df.filter((h60("smp:", key) % 100) < 10).select(
+    key = "concat_ws(':', CAST(l_orderkey AS STRING), CAST(l_linenumber AS STRING))"
+    return df.filter(F.expr(f"{h60('smp:', key)} % 100 < 10")).select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
 
@@ -470,13 +461,14 @@ def dedup_keeper_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = t(spark, sf_dir, "documents")
     txt = F.col("text")
+    n_tokens = F.expr(X.token_count("text"))
     return df.select(
         "doc_id",
         X.char_count(txt).alias("n_chars"),
-        X.token_count(txt).alias("n_tokens"),
-        X.distinct_token_count(txt).alias("n_distinct_tokens"),
+        n_tokens.alias("n_tokens"),
+        F.expr(X.distinct_token_count("text")).alias("n_distinct_tokens"),
         (
-            X.non_ws_char_count(txt).cast("double") / X.token_count(txt).cast("double")
+            X.non_ws_char_count(txt).cast("double") / n_tokens.cast("double")
         ).alias("avg_token_len"),
     )
 
@@ -484,9 +476,9 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = t(spark, sf_dir, "documents")
     txt = F.col("text")
-    n_tokens = X.token_count(txt)
-    stop_ratio = X.stopword_hits("text", "en").cast("double") / n_tokens.cast("double")
-    diversity = X.distinct_token_count(txt).cast("double") / n_tokens.cast("double")
+    n_tokens = F.expr(X.token_count("text"))
+    stop_ratio = F.expr(X.stopword_hits("text", "en")).cast("double") / n_tokens.cast("double")
+    diversity = F.expr(X.distinct_token_count("text")).cast("double") / n_tokens.cast("double")
     punct_ratio = X.punct_count(txt).cast("double") / X.char_count(txt).cast("double")
     quality = (
         F.when((n_tokens >= 30) & (stop_ratio >= 0.05) & (diversity >= 0.3), "good")
@@ -504,13 +496,14 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = t(spark, sf_dir, "documents")
-    txt = F.col("text")
-    scores = X.language_scores("text")
     return df.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
-        X.predict_language("text").alias("pred_lang"),
-        *[scores[lang].alias(f"score_{lang}") for lang in X.LANG_PRIORITY],
+        F.expr(X.predict_language("text")).alias("pred_lang"),
+        *[
+            F.expr(X.stopword_hits("text", lang)).alias(f"score_{lang}")
+            for lang in X.LANG_PRIORITY
+        ],
     )
 
 
@@ -518,7 +511,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = t(spark, sf_dir, "documents")
     return df.select(
         "doc_id",
-        X.fingerprint(F.col("text")).alias("fingerprint"),
+        F.expr(X.fingerprint("text")).alias("fingerprint"),
         F.sha2(F.col("text"), 256).alias("sha256"),
     )
 
@@ -540,28 +533,6 @@ def multimodal_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ceil(n_bytes.cast("double") / F.lit(1024.0)).cast("long").alias("n_chunks"),
         F.sha2(F.col("text"), 256).alias("digest"),
     )
-
-
-_SQL_LANG_SCORES = {
-    lang: (
-        f"CAST(len(list_filter({_SQL_TOKENS}, tk -> list_contains("
-        + "["
-        + ", ".join(f"'{w}'" for w in X.STOPWORDS[lang])
-        + "], tk))) AS BIGINT)"
-    )
-    for lang in X.LANG_PRIORITY
-}
-
-
-def _langid_case_sql() -> str:
-    langs = list(X.LANG_PRIORITY)
-    cases = []
-    for i, lang in enumerate(langs[:-1]):
-        conds = " AND ".join(
-            f"s_{lang} >= s_{other}" for other in langs[i + 1 :]
-        )
-        cases.append(f"WHEN {conds} THEN '{lang}'")
-    return "CASE " + " ".join(cases) + f" ELSE '{langs[-1]}' END"
 
 
 QUERIES: dict[str, QuerySpec] = {
@@ -623,7 +594,7 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         SELECT l_orderkey, l_linenumber, l_quantity
         FROM lineitem
-        WHERE {sql_h60('smp:', "CONCAT(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR))")} % 100 < 10
+        WHERE {h60('smp:', "CONCAT(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR))", DUCKDB)} % 100 < 10
         """,
         "hash-based deterministic 10% sample",
         ("sampling",),
@@ -641,7 +612,7 @@ QUERIES: dict[str, QuerySpec] = {
           SELECT doc_id,
                  list_distinct(list_transform(range(1, len(l) - 1),
                      i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS sh
-          FROM (SELECT doc_id, {_SQL_TOKENS} AS l FROM documents)
+          FROM (SELECT doc_id, {X.tokens('text', DUCKDB)} AS l FROM documents)
           WHERE len(l) >= 3
         ),
         g AS (SELECT doc_id, unnest(sh) AS g FROM s),
@@ -670,7 +641,7 @@ QUERIES: dict[str, QuerySpec] = {
                COUNT(DISTINCT doc_id) AS doc_freq,
                COUNT(*) AS total_occurrences,
                (SELECT COUNT(*) FROM documents) AS n_docs
-        FROM (SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents) tok
+        FROM (SELECT doc_id, unnest({X.tokens('text', DUCKDB)}) AS token FROM documents) tok
         GROUP BY token ORDER BY token
         """,
         "vocabulary document-frequency statistics (TF-IDF inputs)",
@@ -782,10 +753,10 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         SELECT doc_id,
                CAST(LENGTH(trim(text)) AS BIGINT) AS n_chars,
-               CAST(len({_SQL_TOKENS}) AS BIGINT) AS n_tokens,
-               CAST(len(list_distinct({_SQL_TOKENS})) AS BIGINT) AS n_distinct_tokens,
+               {X.token_count('text', DUCKDB)} AS n_tokens,
+               {X.distinct_token_count('text', DUCKDB)} AS n_distinct_tokens,
                CAST(LENGTH(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE)
-                 / CAST(len({_SQL_TOKENS}) AS DOUBLE) AS avg_token_len
+                 / CAST(len({X.tokens('text', DUCKDB)}) AS DOUBLE) AS avg_token_len
         FROM documents
         """,
         "per-document token statistics",
@@ -796,9 +767,9 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         WITH base AS (
           SELECT doc_id,
-                 CAST(len({_SQL_TOKENS}) AS BIGINT) AS n_tokens,
-                 {_SQL_LANG_SCORES['en']} AS stop_hits,
-                 CAST(len(list_distinct({_SQL_TOKENS})) AS BIGINT) AS n_distinct,
+                 {X.token_count('text', DUCKDB)} AS n_tokens,
+                 {X.stopword_hits('text', 'en', DUCKDB)} AS stop_hits,
+                 {X.distinct_token_count('text', DUCKDB)} AS n_distinct,
                  CAST(LENGTH(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS BIGINT) AS n_punct,
                  CAST(LENGTH(trim(text)) AS BIGINT) AS n_chars
           FROM documents
@@ -823,11 +794,11 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         WITH scores AS (
           SELECT doc_id, lang AS labeled_lang,
-                 {', '.join(f"{_SQL_LANG_SCORES[lang]} AS s_{lang}" for lang in X.LANG_PRIORITY)}
+                 {', '.join(f"{X.stopword_hits('text', lang, DUCKDB)} AS s_{lang}" for lang in X.LANG_PRIORITY)}
           FROM documents
         )
         SELECT doc_id, labeled_lang,
-               {_langid_case_sql()} AS pred_lang,
+               {X.language_argmax({lang: f's_{lang}' for lang in X.LANG_PRIORITY})} AS pred_lang,
                {', '.join(f's_{lang} AS score_{lang}' for lang in X.LANG_PRIORITY)}
         FROM scores
         """,
@@ -836,9 +807,9 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "text_fingerprint": QuerySpec(
         text_fingerprint,
-        """
+        f"""
         SELECT doc_id,
-               md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
+               {X.fingerprint('text', DUCKDB)} AS fingerprint,
                sha256(text) AS sha256
         FROM documents
         """,
@@ -882,7 +853,7 @@ def dedup_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact dedup — between md5-exact and near-dup in strictness)."""
     docs = t(spark, sf_dir, "documents")
     return (
-        docs.select("doc_id", X.fingerprint(F.col("text")).alias("fp"))
+        docs.select("doc_id", F.expr(X.fingerprint("text")).alias("fp"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_members"))
     )
@@ -892,7 +863,7 @@ def text_top_tokens_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 most frequent tokens per labeled language (explode +
     two-level aggregation + per-group top-k window)."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("lang", F.explode(X.tokens(F.col("text"))).alias("token"))
+    tok = docs.select("lang", F.explode(F.expr(X.tokens("text"))).alias("token"))
     counts = tok.groupBy("lang", "token").agg(F.count("*").alias("n"))
     w = W.partitionBy("lang").orderBy(F.col("n").desc(), F.col("token"))
     return (
@@ -904,8 +875,8 @@ def text_top_tokens_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["dedup_fingerprint_groups"] = QuerySpec(
     dedup_fingerprint_groups,
-    """
-    SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
+    f"""
+    SELECT {X.fingerprint('text', DUCKDB)} AS fp,
            MIN(doc_id) AS keeper_id,
            COUNT(*) AS n_members
     FROM documents GROUP BY 1
@@ -921,7 +892,7 @@ QUERIES["text_top_tokens_per_lang"] = QuerySpec(
       SELECT lang, token, COUNT(*) AS n,
              CAST(ROW_NUMBER() OVER (PARTITION BY lang
                   ORDER BY COUNT(*) DESC, token) AS BIGINT) AS rnk
-      FROM (SELECT lang, unnest({_SQL_TOKENS}) AS token FROM documents) tk
+      FROM (SELECT lang, unnest({X.tokens('text', DUCKDB)}) AS token FROM documents) tk
       GROUP BY lang, token) ranked
     WHERE rnk <= 5
     """,
@@ -1085,7 +1056,7 @@ QUERIES["dedup_containment"] = QuerySpec(
       SELECT doc_id,
              list_distinct(list_transform(range(1, len(l) - 1),
                  i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS sh
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS l FROM documents)
+      FROM (SELECT doc_id, {X.tokens('text', DUCKDB)} AS l FROM documents)
       WHERE len(l) >= 3
     ),
     tok AS (SELECT doc_id, unnest(sh) AS token FROM s),
@@ -1190,8 +1161,6 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _containment_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str:
     num, den = D._rational_threshold(threshold)
-    fam = sql_affine_hash("token", k)
-    mins = ",\n         ".join(f"MIN({fam[i]}) AS h{i}" for i in range(k))
     band_selects = "\n      UNION ALL\n      ".join(
         "SELECT doc_id, {j} AS band_id, md5(CONCAT_WS(',', {cols})) AS band_key FROM sig".format(
             j=j,
@@ -1201,11 +1170,7 @@ def _containment_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str
     )
     return f"""
     WITH {_SQL_TOK_CTE},
-    sig AS (
-      SELECT doc_id,
-         {mins}
-      FROM tok GROUP BY doc_id
-    ),
+    sig AS ({_sql_minhash_sig('tok', k)}),
     bands AS (
       {band_selects}
     ),
@@ -1219,7 +1184,7 @@ def _containment_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str
       SELECT doc_id,
              list_distinct(list_transform(range(1, len(l) - 1),
                  i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS sh
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS l FROM documents)
+      FROM (SELECT doc_id, {X.tokens('text', DUCKDB)} AS l FROM documents)
       WHERE len(l) >= 3
     ),
     joined AS (
@@ -1377,11 +1342,11 @@ def _pagerank_sql() -> str:
     )
     return f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_TOKENS} AS l FROM documents
-      WHERE len({_SQL_TOKENS}) >= {_PR_W}
+      SELECT doc_id, {X.tokens('text', DUCKDB)} AS l FROM documents
+      WHERE len({X.tokens('text', DUCKDB)}) >= {_PR_W}
     ),
-    h AS (SELECT doc_id, {sql_token_hash_structs('l')} AS hl FROM d),
-    g AS (SELECT doc_id, {sql_gram_hash_array('hl', _PR_W)} AS ga FROM h),
+    h AS (SELECT doc_id, {token_hash_structs('l', DUCKDB)} AS hl FROM d),
+    g AS (SELECT doc_id, {gram_hash_array('hl', _PR_W, DUCKDB)} AS ga FROM h),
     spans AS (SELECT DISTINCT doc_id, unnest(ga) AS gh FROM g),
     ok AS (
       SELECT gh FROM spans GROUP BY 1
@@ -1443,7 +1408,7 @@ def training_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_training.py.
     """
     clusters = dedup_clusters(spark, sf_dir)
-    gate = h60("split:", F.col("cluster_id").cast("string")) % 100
+    gate = F.expr(f"{h60('split:', 'CAST(cluster_id AS STRING)')} % 100")
     return clusters.select(
         "doc_id",
         "cluster_id",
@@ -1477,7 +1442,7 @@ QUERIES["training_leakage_safe_split"] = QuerySpec(
                 WHEN gate < 95 THEN 'validation'
                 ELSE 'test' END AS split
     FROM (SELECT doc_id, cluster_id,
-                 {sql_h60('split:', 'CAST(cluster_id AS VARCHAR)')} % 100 AS gate
+                 {h60('split:', 'CAST(cluster_id AS VARCHAR)', DUCKDB)} % 100 AS gate
           FROM assigned) g
     """.format(lsh=_minhash_lsh_sql(0.8, D.MINHASH_K, D.LSH_BANDS, D.LSH_ROWS_PER_BAND)),
     "cluster-aware train/val/test split (near-dups never straddle splits)",
@@ -1495,12 +1460,12 @@ def _passage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the frequent-shingle carrier guard), plan-keyed-persisted so
     consumers that branch the edge list scan it once."""
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", X.tokens(F.col("text")).alias("l")).filter(
+    toks = docs.select("doc_id", F.expr(X.tokens("text")).alias("l")).filter(
         F.size("l") >= _PR_W
     )
-    hashed = toks.select("doc_id", token_hash_structs("l").alias("hl"))
+    hashed = toks.select("doc_id", F.expr(token_hash_structs("l")).alias("hl"))
     spans = hashed.select(
-        "doc_id", F.explode(gram_hash_array("hl", _PR_W)).alias("gh")
+        "doc_id", F.explode(F.expr(gram_hash_array("hl", _PR_W))).alias("gh")
     ).distinct()
     ok = (
         spans.groupBy("gh")
@@ -1571,11 +1536,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _triangle_sql() -> str:
     return f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_TOKENS} AS l FROM documents
-      WHERE len({_SQL_TOKENS}) >= {_PR_W}
+      SELECT doc_id, {X.tokens('text', DUCKDB)} AS l FROM documents
+      WHERE len({X.tokens('text', DUCKDB)}) >= {_PR_W}
     ),
-    h AS (SELECT doc_id, {sql_token_hash_structs('l')} AS hl FROM d),
-    g AS (SELECT doc_id, {sql_gram_hash_array('hl', _PR_W)} AS ga FROM h),
+    h AS (SELECT doc_id, {token_hash_structs('l', DUCKDB)} AS hl FROM d),
+    g AS (SELECT doc_id, {gram_hash_array('hl', _PR_W, DUCKDB)} AS ga FROM h),
     spans AS (SELECT DISTINCT doc_id, unnest(ga) AS gh FROM g),
     ok AS (
       SELECT gh FROM spans GROUP BY 1
@@ -1665,11 +1630,11 @@ QUERIES["text_language_id_accuracy"] = QuerySpec(
     f"""
     WITH scores AS (
       SELECT doc_id, lang AS labeled_lang,
-             {', '.join(f"{_SQL_LANG_SCORES[lang]} AS s_{lang}" for lang in X.LANG_PRIORITY)}
+             {', '.join(f"{X.stopword_hits('text', lang, DUCKDB)} AS s_{lang}" for lang in X.LANG_PRIORITY)}
       FROM documents
     ),
     pred AS (
-      SELECT labeled_lang, {_langid_case_sql()} AS pred_lang FROM scores
+      SELECT labeled_lang, {X.language_argmax({lang: f's_{lang}' for lang in X.LANG_PRIORITY})} AS pred_lang FROM scores
     ),
     cells AS (
       SELECT labeled_lang, pred_lang, COUNT(*) AS n
@@ -1712,7 +1677,7 @@ def corpus_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations keyed by source, one join — all map-combinable; exact
     integers with one final division per ratio."""
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select("source", X.tokens(F.col("text")).alias("l"))
+    toks = docs.select("source", F.expr(X.tokens("text")).alias("l"))
     uni = toks.select("source", F.explode("l").alias("w"))
     uni_stats = uni.groupBy("source").agg(
         F.count("*").alias("n_tokens"),
@@ -1755,7 +1720,7 @@ def corpus_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["corpus_ngram_diversity"] = QuerySpec(
     corpus_ngram_diversity,
     f"""
-    WITH tk AS (SELECT source, {_SQL_TOKENS} AS l FROM documents),
+    WITH tk AS (SELECT source, {X.tokens('text', DUCKDB)} AS l FROM documents),
     uni AS (
       SELECT source,
              CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -2096,20 +2061,14 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_calibration_sql() -> str:
     k = D.MINHASH_K
-    fam = sql_affine_hash("token", k)
-    mins = ",\n         ".join(f"MIN({fam[i]}) AS h{i}" for i in range(k))
     agree = " + ".join(f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(k))
     return f"""
     WITH pr AS ({_minhash_lsh_sql(0.8, D.MINHASH_K, D.LSH_BANDS, D.LSH_ROWS_PER_BAND)}),
     tok2 AS (
-      SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS token
+      SELECT doc_id, unnest({X.distinct_tokens('text', DUCKDB)}) AS token
       FROM documents
     ),
-    sig2 AS (
-      SELECT doc_id,
-         {mins}
-      FROM tok2 GROUP BY doc_id
-    ),
+    sig2 AS ({_sql_minhash_sig('tok2', k)}),
     e AS (
       SELECT (CAST(({agree}) AS BIGINT) * 1000000) / {k}
              - CAST(ROUND(pr.jaccard * 1e6) AS BIGINT) AS e

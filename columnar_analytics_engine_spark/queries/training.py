@@ -33,18 +33,15 @@ from pyspark.sql import functions as F
 
 from columnar_analytics_engine_spark.functions import text as X
 from columnar_analytics_engine_spark.functions.caching import persist_once as _persist_once
+from columnar_analytics_engine_spark.functions.dialect import DUCKDB, SPARK, Dialect
 from columnar_analytics_engine_spark.functions.hashing import (
     gram_hash_array,
     h60,
-    sql_gram_hash_array,
-    sql_h60,
-    sql_token_hash_structs,
     token_hash_structs,
 )
 from columnar_analytics_engine_spark.functions.similarity import cosine, with_norms
 from columnar_analytics_engine_spark.queries._util import QuerySpec, t
 
-_SQL_TOKENS = "regexp_split_to_array(trim(text), '\\s+')"
 
 # ---------------------------------------------------------------------------
 # quality: repetition filters (Gopher-style)
@@ -78,7 +75,7 @@ def quality_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluate) the regex split per element_at call — measured 19×
     # slower at sf0.1.  A named column is computed once per row.
     toks = docs.select(
-        "doc_id", F.col("text"), X.tokens(F.col("text")).alias("l")
+        "doc_id", F.col("text"), F.expr(X.tokens("text")).alias("l")
     )
     l = F.col("l")
     n = F.size(l).cast("long")
@@ -117,7 +114,7 @@ def quality_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_QUALITY_REPETITION = f"""
 WITH f AS (
-  SELECT doc_id, {_SQL_TOKENS} AS l FROM documents
+  SELECT doc_id, {X.tokens('text', DUCKDB)} AS l FROM documents
 ),
 m AS (
   SELECT doc_id,
@@ -169,11 +166,11 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents")
     # token array materialized once (see quality_repetition_filters)
-    toks = docs.select("doc_id", X.tokens(F.col("text")).alias("l")).filter(
+    toks = docs.select("doc_id", F.expr(X.tokens("text")).alias("l")).filter(
         F.size("l") >= _CONTAM_N
     )
-    hashed = toks.select("doc_id", token_hash_structs("l").alias("hl"))
-    sh = F.array_distinct(gram_hash_array("hl", _CONTAM_N))
+    hashed = toks.select("doc_id", F.expr(token_hash_structs("l")).alias("hl"))
+    sh = F.array_distinct(F.expr(gram_hash_array("hl", _CONTAM_N)))
     shingled = hashed.select("doc_id", F.explode(sh).alias("gh"))
     bench = (
         shingled.filter(F.col("doc_id") % _CONTAM_BENCH_MOD == 0)
@@ -201,15 +198,15 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_CONTAMINATION = f"""
 WITH f AS (
-  SELECT doc_id, {_SQL_TOKENS} AS l FROM documents
-  WHERE len({_SQL_TOKENS}) >= {_CONTAM_N}
+  SELECT doc_id, {X.tokens('text', DUCKDB)} AS l FROM documents
+  WHERE len({X.tokens('text', DUCKDB)}) >= {_CONTAM_N}
 ),
 h AS (
-  SELECT doc_id, {sql_token_hash_structs('l')} AS hl FROM f
+  SELECT doc_id, {token_hash_structs('l', DUCKDB)} AS hl FROM f
 ),
 sh AS (
   SELECT doc_id,
-         unnest(list_distinct({sql_gram_hash_array('hl', _CONTAM_N)})) AS gh
+         unnest(list_distinct({gram_hash_array('hl', _CONTAM_N, DUCKDB)})) AS gh
   FROM h
 ),
 bench AS (SELECT DISTINCT gh FROM sh WHERE doc_id % {_CONTAM_BENCH_MOD} = 0),
@@ -235,6 +232,11 @@ _N_SHARDS = 16
 _SEQ_LEN = 2048
 
 
+def _shard(d: Dialect = SPARK, doc_id: str = "doc_id") -> str:
+    """The corpus shard rule: ``h60('shard:', doc_id) % _N_SHARDS``."""
+    return f"{h60('shard:', f'CAST({doc_id} AS STRING)', d)} % {_N_SHARDS}"
+
+
 def shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-sharding report: each document lands in
     ``h60(doc_id) % 16``; per shard, the doc/token/char volume.  The
@@ -242,11 +244,11 @@ def shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs and engines, and the report shows the hash balances them.
     One groupBy; at scale this is the pre-write repartition key."""
     docs = t(spark, sf_dir, "documents")
-    shard = (h60("shard:", F.col("doc_id").cast("string")) % _N_SHARDS).alias("shard")
+    shard = F.expr(_shard()).alias("shard")
     return (
         docs.select(
             shard,
-            X.token_count(F.col("text")).alias("n_tok"),
+            F.expr(X.token_count("text")).alias("n_tok"),
             F.col("n_chars").cast("long").alias("nc"),
             "doc_id",
         )
@@ -263,9 +265,9 @@ def shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_SHARD = f"""
-SELECT {sql_h60('shard:', 'CAST(doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard,
+SELECT {_shard(DUCKDB)} AS shard,
        COUNT(*) AS n_docs,
-       CAST(SUM(len({_SQL_TOKENS})) AS BIGINT) AS total_tokens,
+       CAST(SUM(len({X.tokens('text', DUCKDB)})) AS BIGINT) AS total_tokens,
        CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
        MIN(doc_id) AS min_doc_id,
        MAX(doc_id) AS max_doc_id
@@ -286,8 +288,8 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     two), a single exact IEEE op.
     """
     docs = t(spark, sf_dir, "documents")
-    shard = (h60("shard:", F.col("doc_id").cast("string")) % _N_SHARDS).alias("shard")
-    base = docs.select(shard, "doc_id", X.token_count(F.col("text")).alias("n_tok"))
+    shard = F.expr(_shard()).alias("shard")
+    base = docs.select(shard, "doc_id", F.expr(X.token_count("text")).alias("n_tok"))
     w = (
         W.partitionBy("shard")
         .orderBy("doc_id")
@@ -314,9 +316,9 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_PACKING = f"""
 WITH base AS (
-  SELECT {sql_h60('shard:', 'CAST(doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard,
+  SELECT {_shard(DUCKDB)} AS shard,
          doc_id,
-         CAST(len({_SQL_TOKENS}) AS BIGINT) AS n_tok
+         {X.token_count('text', DUCKDB)} AS n_tok
   FROM documents
 ),
 packed AS (
@@ -340,6 +342,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
 # stratified sampling
 # ---------------------------------------------------------------------------
 
+_STRAT_KEY = "lang || ':' || CAST(doc_id AS STRING)"
 _STRATA_RATES = {"en": 50, "fr": 100, "es": 200, "de": 400, "zh": 800}  # per-mille
 
 
@@ -353,7 +356,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.create_map(
         *[F.lit(x) for kv in _STRATA_RATES.items() for x in kv]
     )[F.col("lang")]
-    gate = h60("strat:", F.concat(F.col("lang"), F.lit(":"), F.col("doc_id").cast("string"))) % 1000
+    gate = F.expr(f"{h60('strat:', _STRAT_KEY)} % 1000")
     return (
         docs.filter(gate < F.coalesce(rate, F.lit(0)))
         .select("doc_id", "lang", "source", gate.alias("gate"))
@@ -362,9 +365,9 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_STRATIFIED = f"""
 SELECT doc_id, lang, source,
-       {sql_h60('strat:', "lang || ':' || CAST(doc_id AS VARCHAR)")} % 1000 AS gate
+       {h60('strat:', _STRAT_KEY, DUCKDB)} % 1000 AS gate
 FROM documents
-WHERE {sql_h60('strat:', "lang || ':' || CAST(doc_id AS VARCHAR)")} % 1000
+WHERE {h60('strat:', _STRAT_KEY, DUCKDB)} % 1000
       < CASE lang {' '.join(f"WHEN '{k}' THEN {v}" for k, v in _STRATA_RATES.items())} ELSE 0 END
 """
 
@@ -1194,9 +1197,7 @@ def training_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % _CONTAM_BENCH_MOD != 0)
         .join(keep, "doc_id")
         .join(contaminated, "doc_id", "left_anti")
-        .withColumn(
-            "shard", h60("shard:", F.col("doc_id").cast("string")) % _N_SHARDS
-        )
+        .withColumn("shard", F.expr(_shard()))
     )
     w = (
         W.partitionBy("shard")
@@ -1217,7 +1218,7 @@ def training_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_EXPORT_MANIFEST = f"""
 WITH f AS (
-  SELECT doc_id, lang, {_SQL_TOKENS} AS l, text FROM documents
+  SELECT doc_id, lang, {X.tokens('text', DUCKDB)} AS l, text FROM documents
 ),
 q AS (
   SELECT doc_id, CAST(len(l) AS BIGINT) AS n_tokens
@@ -1233,7 +1234,7 @@ q AS (
         / CAST(len(l) AS DOUBLE) >= 3.0
 ),
 sh AS (
-  SELECT doc_id, {sql_h60('ctm:', 'g')} AS gh
+  SELECT doc_id, {h60('ctm:', 'g', DUCKDB)} AS gh
   FROM (
     SELECT doc_id, unnest(list_distinct(list_transform(
              range(1, len(l) - {_CONTAM_N - 2}),
@@ -1251,7 +1252,7 @@ contaminated AS (
 ),
 survivors AS (
   SELECT d.doc_id, d.lang, q.n_tokens,
-         {sql_h60('shard:', 'CAST(d.doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard
+         {_shard(DUCKDB, 'd.doc_id')} AS shard
   FROM documents d JOIN q ON d.doc_id = q.doc_id
   WHERE d.doc_id % {_CONTAM_BENCH_MOD} != 0
     AND d.doc_id NOT IN (SELECT doc_id FROM contaminated)
@@ -1281,7 +1282,7 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces every double bit-for-bit.
     """
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.col("text"), X.tokens(F.col("text")).alias("l"))
+    toks = docs.select("doc_id", F.col("text"), F.expr(X.tokens("text")).alias("l"))
     l = F.col("l")
     n = F.size(l).cast("long")
     mean_word_len = X.non_ws_char_count(F.col("text")).cast("double") / n.cast("double")
@@ -1292,7 +1293,7 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbol_ratio = n_symbols.cast("double") / n.cast("double")
     n_alpha = F.size(F.filter(l, lambda x: x.rlike("[A-Za-z]"))).cast("long")
     alpha_frac = n_alpha.cast("double") / n.cast("double")
-    stop_hits = X.stopword_hits("text", "en")
+    stop_hits = F.expr(X.stopword_hits("text", "en"))
     keep = (
         (n >= 50)
         & (n <= 100_000)
@@ -1313,15 +1314,9 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_STOP_EN = (
-    "CAST(len(list_filter(l, tk -> list_contains(["
-    + ", ".join(f"'{w}'" for w in X.STOPWORDS["en"])
-    + "], tk))) AS BIGINT)"
-)
-
 _SQL_GOPHER_RULES = f"""
 WITH f AS (
-  SELECT doc_id, text, {_SQL_TOKENS} AS l FROM documents
+  SELECT doc_id, text, {X.tokens('text', DUCKDB)} AS l FROM documents
 ),
 m AS (
   SELECT doc_id,
@@ -1330,7 +1325,7 @@ m AS (
          CAST(len(regexp_extract_all(text, '#'))
               + len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS nsym,
          CAST(len(list_filter(l, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS nalpha,
-         {_SQL_STOP_EN} AS stop_hits
+         {X.stopword_hits('text', 'en', DUCKDB)} AS stop_hits
   FROM f
   WHERE len(l) >= 1
 )
@@ -1471,7 +1466,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted sample from a 100 TB corpus in one pass.
     """
     docs = t(spark, sf_dir, "documents")
-    u_int = (h60("wrs:", F.col("doc_id").cast("string")) % 1_000_000) + 1
+    u_int = F.expr(f"({h60('wrs:', 'CAST(doc_id AS STRING)')} % 1000000) + 1")
     u = u_int.cast("double") / F.lit(1_000_000.0)
     w = F.greatest(F.col("n_chars"), F.lit(1)).cast("double")
     key = F.round((-F.log(u) / w) * F.lit(1e12)).cast("long")
@@ -1483,7 +1478,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_WRS_U = (
-    f"(({sql_h60('wrs:', 'CAST(doc_id AS VARCHAR)')} % 1000000) + 1) / 1000000.0"
+    f"(({h60('wrs:', 'CAST(doc_id AS VARCHAR)', DUCKDB)} % 1000000) + 1) / 1000000.0"
 )
 
 _SQL_WRS = f"""
@@ -1520,7 +1515,7 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     both key-bounded.
     """
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("token"))
+    tok = docs.select("doc_id", F.explode(F.expr(X.tokens("text"))).alias("token"))
     counts = tok.groupBy("doc_id", "token").agg(F.count("*").alias("c"))
     per_doc = counts.groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"),
@@ -1542,7 +1537,7 @@ QUERIES["text_token_entropy"] = QuerySpec(
     text_token_entropy,
     f"""
     WITH tok AS (
-      SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
+      SELECT doc_id, unnest({X.tokens('text', DUCKDB)}) AS token
       FROM documents
     ),
     counts AS (
@@ -1654,6 +1649,11 @@ QUERIES["contamination_embedding_cosine"] = QuerySpec(
 )
 
 
+def _fp_payload(d: Dialect) -> str:
+    """The checksummed per-doc payload: ``doc_id|fingerprint``."""
+    return f"CAST(doc_id AS STRING) || '|' || coalesce({X.fingerprint('text', d)}, '')"
+
+
 def training_shard_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent content checksum per training shard: each doc
     contributes two independently-salted ``h60`` hashes of its
@@ -1666,19 +1666,15 @@ def training_shard_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     them.  Same shard rule as :func:`shard_assignment`; one groupBy.
     """
     docs = t(spark, sf_dir, "documents")
-    shard = (h60("shard:", F.col("doc_id").cast("string")) % _N_SHARDS).alias("shard")
-    payload = F.concat(
-        F.col("doc_id").cast("string"),
-        F.lit("|"),
-        F.coalesce(X.fingerprint(F.col("text")), F.lit("")),
-    )
+    shard = F.expr(_shard()).alias("shard")
+    payload = _fp_payload(SPARK)
     # two independent 60-bit xor folds (different salts): commutative and
     # overflow-free at any shard size, ~120-bit collision strength
     return (
         docs.select(
             shard,
-            h60("chk:", payload).alias("h1"),
-            h60("chk2:", payload).alias("h2"),
+            F.expr(h60("chk:", payload)).alias("h1"),
+            F.expr(h60("chk2:", payload)).alias("h2"),
         )
         .groupBy("shard")
         .agg(
@@ -1690,18 +1686,14 @@ def training_shard_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FP_CONCAT = (
-    "CONCAT(CAST(doc_id AS VARCHAR), '|', "
-    "COALESCE(md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')), ''))"
-)
 
 QUERIES["training_shard_checksums"] = QuerySpec(
     training_shard_checksums,
     f"""
     WITH h AS (
-      SELECT {sql_h60('shard:', 'CAST(doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard,
-             {sql_h60('chk:', _SQL_FP_CONCAT)} AS h1,
-             {sql_h60('chk2:', _SQL_FP_CONCAT)} AS h2
+      SELECT {_shard(DUCKDB)} AS shard,
+             {h60('chk:', _fp_payload(DUCKDB), DUCKDB)} AS h1,
+             {h60('chk2:', _fp_payload(DUCKDB), DUCKDB)} AS h2
       FROM documents
     )
     SELECT shard, COUNT(*) AS n_docs,
@@ -1739,7 +1731,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as corpus_drift_report / sample_weighted_reservoir.
     """
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select(X.tokens(F.col("text")).alias("l"))
+    toks = docs.select(F.expr(X.tokens("text")).alias("l"))
     uni = (
         toks.select(F.explode("l").alias("w"))
         .groupBy("w")
@@ -1789,7 +1781,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["text_collocations_pmi"] = QuerySpec(
     text_collocations_pmi,
     f"""
-    WITH tk AS (SELECT {_SQL_TOKENS} AS l FROM documents),
+    WITH tk AS (SELECT {X.tokens('text', DUCKDB)} AS l FROM documents),
     uni AS (
       SELECT w, COUNT(*) AS c
       FROM (SELECT unnest(l) AS w FROM tk) u GROUP BY 1
@@ -1839,7 +1831,7 @@ def training_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     words = (
-        docs.select(F.explode(X.tokens(F.col("text"))).alias("word"))
+        docs.select(F.explode(F.expr(X.tokens("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
@@ -1895,9 +1887,9 @@ def _bpe_learn_ctes(n_merges: int, words_cte: str) -> str:
     return "".join(parts)
 
 
-_BPE_WORDS_CTE = """wq AS (
+_BPE_WORDS_CTE = f"""wq AS (
       SELECT word, CAST(COUNT(*) AS BIGINT) AS n
-      FROM (SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
+      FROM (SELECT unnest({X.tokens('text', DUCKDB)}) AS word
             FROM documents)
       GROUP BY word
     )"""
@@ -1961,7 +1953,7 @@ def training_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     doc_words = _persist_once(
         docs.select(
-            "doc_id", F.explode(X.tokens(F.col("text"))).alias("word")
+            "doc_id", F.explode(F.expr(X.tokens("text"))).alias("word")
         )
         # split('') yields one empty token: an empty/whitespace doc
         # would otherwise count 1 token segmenting to 0 subwords
@@ -1991,10 +1983,10 @@ def training_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_BPE_ENCODE_WORDS_CTE = """dw AS (
+_BPE_ENCODE_WORDS_CTE = f"""dw AS (
       SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS c
       FROM (SELECT doc_id,
-                   unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
+                   unnest({X.tokens('text', DUCKDB)}) AS word
             FROM documents)
       WHERE word != ''
       GROUP BY 1, 2
@@ -2050,7 +2042,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents")
     vocab = (
-        docs.select(F.explode(X.tokens(F.col("text"))).alias("w"))
+        docs.select(F.explode(F.expr(X.tokens("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
@@ -2098,7 +2090,7 @@ QUERIES["text_zipf_fit"] = QuerySpec(
     f"""
     WITH vocab AS (
       SELECT w, COUNT(*) AS c
-      FROM (SELECT unnest({_SQL_TOKENS}) AS w FROM documents) u GROUP BY 1
+      FROM (SELECT unnest({X.tokens('text', DUCKDB)}) AS w FROM documents) u GROUP BY 1
     ),
     ranked AS (
       SELECT ROW_NUMBER() OVER (ORDER BY c DESC, w) AS rnk, c FROM vocab
@@ -2148,7 +2140,7 @@ def text_stopword_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     table), one lazy 1-row total broadcast, exact integer ratio."""
     docs = t(spark, sf_dir, "documents")
     dfreq = (
-        docs.select("doc_id", F.explode(F.array_distinct(X.tokens(F.col("text")))).alias("token"))
+        docs.select("doc_id", F.explode(F.array_distinct(F.expr(X.tokens("text")))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("doc_freq"))
     )
@@ -2172,7 +2164,7 @@ QUERIES["text_stopword_discovery"] = QuerySpec(
     f"""
     WITH dfreq AS (
       SELECT token, COUNT(*) AS doc_freq
-      FROM (SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS token
+      FROM (SELECT doc_id, unnest({X.distinct_tokens('text', DUCKDB)}) AS token
             FROM documents) u
       GROUP BY 1
     ),

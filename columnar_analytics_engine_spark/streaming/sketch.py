@@ -28,12 +28,11 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-def _bucket(key: F.Column, row_id: F.Column) -> F.Column:
-    """Counter index for (key, hash row) — identical to the batch CMS."""
-    return F.pmod(
-        h60("cms", F.concat(row_id.cast("string"), F.lit(":"), key)),
-        F.lit(CMS_WIDTH),
-    )
+def _bucket() -> F.Column:
+    """Counter index for (key ``k``, hash row ``row_id``) — identical to
+    the batch CMS."""
+    key = h60("cms", "CAST(row_id AS STRING) || ':' || k")
+    return F.expr(f"pmod({key}, {CMS_WIDTH})")
 
 
 def partial_sketch(batch: DataFrame, key_col: str = "user_id") -> DataFrame:
@@ -42,7 +41,7 @@ def partial_sketch(batch: DataFrame, key_col: str = "user_id") -> DataFrame:
     return (
         batch.select(F.col(key_col).cast("string").alias("k"))
         .select("k", F.explode(rows).alias("row_id"))
-        .select("row_id", _bucket(F.col("k"), F.col("row_id")).alias("bucket"))
+        .select("row_id", _bucket().alias("bucket"))
         .groupBy("row_id", "bucket")
         .agg(F.count("*").alias("c"))
     )
@@ -73,7 +72,7 @@ def estimate_counts(
         F.col(key_col),
         F.col(key_col).cast("string").alias("k"),
         F.explode(rows).alias("row_id"),
-    ).select(key_col, "row_id", _bucket(F.col("k"), F.col("row_id")).alias("bucket"))
+    ).select(key_col, "row_id", _bucket().alias("bucket"))
     return (
         probes.join(F.broadcast(sk), ["row_id", "bucket"], "left")
         .groupBy(key_col)

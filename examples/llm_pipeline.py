@@ -29,8 +29,8 @@ def main() -> None:
     n0 = docs.count()
 
     # 1. quality filter: enough tokens, some lexical diversity
-    n_tokens = X.token_count(F.col("text"))
-    diversity = X.distinct_token_count(F.col("text")).cast("double") / n_tokens.cast("double")
+    n_tokens = F.expr(X.token_count("text"))
+    diversity = F.expr(X.distinct_token_count("text")).cast("double") / n_tokens.cast("double")
     quality = docs.filter((n_tokens >= 10) & (diversity >= 0.2))
     n1 = quality.count()
 
@@ -44,7 +44,7 @@ def main() -> None:
     # NOTE the subtle eval-leakage bug this simple split carries: two
     # NEAR-duplicates hash differently and can land on opposite sides of
     # the split — training_leakage_safe_split (step 6) is the fix.
-    train = deduped.filter(h60("split:", F.col("text")) % 100 < 80)
+    train = deduped.filter(F.expr(h60("split:", "text")) % 100 < 80)
     n3 = train.count()
 
     print(f"corpus {n0} -> quality {n1} -> deduped {n2} -> train {n3}")

@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from columnar_analytics_engine_spark.functions.caching import cache_scope  # noqa: E402
+from columnar_analytics_engine_spark.functions.text import tokens  # noqa: E402
 from columnar_analytics_engine_spark.io import write_table  # noqa: E402
 from columnar_analytics_engine_spark.queries.classify import (  # noqa: E402
     classifier_nb_confusion,
@@ -50,7 +51,7 @@ def probe(spark, num_docs: int) -> dict:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         vocab = (
             docs.filter(F.col("doc_id") % 2 == 0)
-            .select(F.explode(F.split(F.trim("text"), r"\s+")).alias("t"))
+            .select(F.explode(F.expr(tokens("text"))).alias("t"))
             .filter(F.col("t") != "")
             .distinct()
             .count()

@@ -425,7 +425,7 @@ def test_quantile_zorder_validation_and_rank_bin(spark):
         zorder_frame(df, ["a", "b"], 4, bits=12, method="quantile")
     with pytest.raises(ValueError, match="unknown binning method"):
         zorder_frame(df, ["a", "b"], 4, method="nope")
-    got = df.select(rank_bin(F.col("a"), [2.0, 5.0, 7.0]).alias("r")).collect()
+    got = df.select(F.expr(rank_bin("a", [2.0, 5.0, 7.0])).alias("r")).collect()
     assert [r["r"] for r in got] == [0, 0, 1, 1, 1, 2, 2, 3, 3, 3]
 
 
@@ -603,41 +603,43 @@ def test_compact_small_files_merges_sorted_sink_output(spark, tmp_path):
 
 
 def test_sql_builders_quote_awkward_column_names(spark):
-    """The SQL-text bucket builders quote column names, so a name with a
-    dot and a space, or a reserved word, gives the Column-builder
-    result."""
+    """The bucket builders quote column names, so a name with a dot and
+    a space, or a reserved word, gives the formula rendered over the
+    quoted names."""
+    from columnar_analytics_engine_spark.functions.dialect import SPARK
     from columnar_analytics_engine_spark.layout import (
-        morton_expr,
-        quote_ident,
+        morton,
         scaled_bin,
         with_linear_bucket,
         with_zorder_bucket,
         zorder_frame,
     )
 
-    assert quote_ident("a`b") == "`a``b`"
+    assert SPARK.quote("a`b") == "`a``b`"
     odd, kw = "a.b c", "order"
     df = spark.range(0, 500).select(
         F.col("id"),
         ((F.col("id") * 37) % 101).alias(odd),
         ((F.col("id") * 13) % 97).cast("double").alias(kw),
     )
-    c_odd, c_kw = F.col(quote_ident(odd)), F.col(quote_ident(kw))
+    c_odd, c_kw = SPARK.quote(odd), SPARK.quote(kw)
     bounds = df.agg(
-        F.min(c_odd).cast("double"), F.max(c_odd).cast("double"),
-        F.min(c_kw).cast("double"), F.max(c_kw).cast("double"),
+        F.min(F.col(c_odd)).cast("double"), F.max(F.col(c_odd)).cast("double"),
+        F.min(F.col(c_kw)).cast("double"), F.max(F.col(c_kw)).cast("double"),
     ).first()
-    lo_o, hi_o, lo_k, hi_k = (F.lit(v) for v in bounds)
+    lo_o, hi_o, lo_k, hi_k = (f"CAST({v!r} AS DOUBLE)" for v in bounds)
 
     def by_id(frame, col="_bucket"):
         return {r["id"]: r[col] for r in frame.select("id", col).collect()}
 
     lin = by_id(with_linear_bucket(df, odd, 8))
-    assert lin == by_id(df.withColumn("_bucket", scaled_bin(c_odd, lo_o, hi_o, 7)))
-    bits = 4
-    z = morton_expr(
-        [scaled_bin(c_odd, lo_o, hi_o, 15), scaled_bin(c_kw, lo_k, hi_k, 15)], bits
+    assert lin == by_id(
+        df.withColumn("_bucket", F.expr(scaled_bin(c_odd, lo_o, hi_o, 7)))
     )
+    bits = 4
+    z = F.expr(morton(
+        [scaled_bin(c_odd, lo_o, hi_o, 15), scaled_bin(c_kw, lo_k, hi_k, 15)], bits
+    ))
     want_z = by_id(df.withColumn("_z", z), "_z")
     zb = by_id(with_zorder_bucket(df, [odd, kw], 4, bits=bits))
     assert zb == {i: v >> (2 * bits - 2) for i, v in want_z.items()}

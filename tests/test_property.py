@@ -279,23 +279,22 @@ def test_gram_hashing_matches_duckdb_and_python(spark, toks, n):
     """The dual polynomial rolling hash behind passage dedup and
     contamination must be bit-identical in Spark, DuckDB, and the pure
     math — over arbitrary unicode tokens and window sizes."""
+    from columnar_analytics_engine_spark.functions.dialect import DUCKDB
     from columnar_analytics_engine_spark.functions.hashing import (
         gram_hash_array,
-        sql_gram_hash_array,
-        sql_token_hash_structs,
         token_hash_structs,
     )
 
     sdf = spark.createDataFrame([(toks,)], "l array<string>")
     got = sdf.select(
-        gram_hash_array(token_hash_structs(F.col("l")), n).alias("g")
+        F.expr(gram_hash_array(token_hash_structs("l"), n)).alias("g")
     ).first()["g"]
 
     con = duckdb.connect()
     con.register("t", pd.DataFrame({"l": [toks]}))
     want = con.execute(
-        f"SELECT {sql_gram_hash_array('hl', n)} FROM "
-        f"(SELECT {sql_token_hash_structs('l')} AS hl FROM t)"
+        f"SELECT {gram_hash_array('hl', n, DUCKDB)} FROM "
+        f"(SELECT {token_hash_structs('l', DUCKDB)} AS hl FROM t)"
     ).fetchone()[0]
     con.close()
 
