@@ -76,17 +76,31 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from columnar_analytics_engine_spark.io import read_files
+from columnar_analytics_engine_spark.io import _stat_identity, read_files
 
 # commit id for tombstones written outside the versioned-commit
 # protocol (no index_path, or a pre-r14 DV file): ALWAYS applied
 LEGACY_COMMIT = "__legacy__"
 
 
+_SCHEME = "^file:(//)?"
+
+
 def _strip_scheme(c: Column) -> Column:
     """``_metadata.file_path`` is a URI (``file:/...``); the index and
     manifest layers use plain paths — normalize to match."""
-    return F.regexp_replace(c, "^file:(//)?", "")
+    return F.regexp_replace(c, _SCHEME, "")
+
+
+# the DV frame's columns (``file``, ``row_index``, ``_commit_id``
+# renamed) and the anti-join condition of :func:`subtract_tombstones`
+# over them and the scan's hidden ``_metadata``: one SQL text, so the
+# join needs no alias, tag columns or Column builders
+_DV_COLS = ["__dv_file", "__dv_row_index", "__dv_commit_id"]
+_TOMBSTONED = (
+    f"regexp_replace(_metadata.file_path, '{_SCHEME}', '') = __dv_file"
+    " AND _metadata.row_index = __dv_row_index"
+)
 
 
 DV_ARROW_SCHEMA = pa.schema(
@@ -115,17 +129,43 @@ def dv_table(dv_path: str, commit_ids: list[str] | None = None):
     return tbl.filter(pc.is_in(tbl["_commit_id"], value_set=keep))
 
 
+def _dv_frame(spark: SparkSession, tbl: pa.Table) -> DataFrame:
+    """A :func:`dv_table` as an Arrow-backed local relation with the
+    :data:`_DV_COLS` names, the DV side of :func:`subtract_tombstones`."""
+    return spark.createDataFrame(tbl.rename_columns(_DV_COLS))
+
+
+# :func:`_dv` frames, one per DV dir, as ``io.read_table`` memoizes
+# tables: a DataFrame is an immutable plan, rebuilt here only when a DV
+# file is added, removed or rewritten, the commit set changes, or the
+# session is a different application.  Building it (Arrow transfer,
+# filter, hint) is most of a merge-on-read's construction cost.
+_DV_DF_CACHE: dict[str, tuple[tuple, DataFrame]] = {}
+
+
 def _dv(
     spark: SparkSession, dv_path: str, commit_ids: list[str] | None = None
 ) -> DataFrame:
-    """:func:`dv_table` as an Arrow-backed local relation (the broadcast
-    side of every tombstone anti-join).  The commit filter runs in
-    Spark, not Arrow: a local relation prints no rows, so only the
-    filter keeps plans over different commit sets distinguishable."""
-    dv = spark.createDataFrame(dv_table(dv_path))
-    if commit_ids is None:
-        return dv
-    return dv.where(F.col("_commit_id").isin([LEGACY_COMMIT, *commit_ids]))
+    """:func:`dv_table` as the broadcast side of every tombstone
+    anti-join (:func:`_dv_frame`, broadcast-hinted), memoized.  The
+    commit filter runs in Spark, not Arrow: a local relation prints no
+    rows, so only the filter keeps plans over different commit sets
+    distinguishable."""
+    ident = _stat_identity(dv_path)
+    key = (
+        spark.sparkContext.applicationId, ident,
+        None if commit_ids is None else tuple(commit_ids),
+    )
+    hit = _DV_DF_CACHE.get(os.path.abspath(dv_path))
+    if ident is not None and hit is not None and hit[0] == key:
+        return hit[1]
+    dv = _dv_frame(spark, dv_table(dv_path))
+    if commit_ids is not None:
+        dv = dv.where(F.col("__dv_commit_id").isin([LEGACY_COMMIT, *commit_ids]))
+    dv = dv.hint("broadcast")
+    if ident is not None:
+        _DV_DF_CACHE[os.path.abspath(dv_path)] = (key, dv)
+    return dv
 
 
 def _dv_lock(dv_path: str):
@@ -395,21 +435,12 @@ def read_with_deletes(
 
 def subtract_tombstones(df: DataFrame, dv: DataFrame) -> DataFrame:
     """``df`` (a raw, ``_metadata``-addressable file scan) minus the
-    rows the DV frame ``dv`` tombstones: a broadcast anti-join on
-    (file, row_index)."""
-    cols = df.columns
-    tagged = df.select(
-        "*",
-        _strip_scheme(F.col("_metadata.file_path")).alias("__dv_file"),
-        F.col("_metadata.row_index").alias("__dv_ri"),
-    )
-    kept = tagged.join(
-        F.broadcast(dv),
-        (tagged["__dv_file"] == dv["file"])
-        & (tagged["__dv_ri"] == dv["row_index"]),
-        "left_anti",
-    )
-    return kept.select(*cols)
+    rows the DV frame ``dv`` (:func:`_dv`, or a :func:`_dv_frame` the
+    caller hinted) tombstones: a broadcast anti-join on (file,
+    row_index).  A left-anti join keeps ``df``'s columns, so nothing
+    is added and dropped: every DataFrame step is py4j round trips and
+    a JVM analysis pass, and this runs on every merge-on-read."""
+    return df.join(dv, F.expr(_TOMBSTONED), "left_anti")
 
 
 def compact_deletes(
@@ -478,7 +509,7 @@ def compact_deletes(
     if not affected:
         cleared = _clear_tombstones(dv_path, clearable)
         return {"folded_files": 0, "new_files": 0, "tombstones_cleared": cleared}
-    dv = spark.createDataFrame(dv)
+    dv = _dv_frame(spark, dv).hint("broadcast")
     groups = group_by_partition_dir(affected, data_path)
     # evolved tables: schema-homogeneous rewrite groups only (mixing
     # cohorts in one read would drop the wider cohort's bytes)

@@ -14,6 +14,7 @@ Reference parity (SURVEY.md §2.1):
 from __future__ import annotations
 
 import os
+import re
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -220,7 +221,14 @@ def read_files(
     — the row-metadata key in the lexicographically first file's footer
     — is read on the driver and passed to ``.schema(...)``, saving the
     inference job; without that key (pandas/DuckDB writers), a footer
-    the driver cannot read, or ``mergeSchema`` on, Spark infers."""
+    the driver cannot read, or ``mergeSchema`` on, Spark infers.
+
+    Past ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    paths (default 32) Spark lists leaf files with a Spark job, although
+    the list is already here; for local (scheme-less or ``file:``)
+    paths the threshold is raised to ``len(files)`` for this read and
+    restored after it (the listing happens when the DataFrame is
+    built).  Object-store URIs keep Spark's parallel listing."""
     if not files:
         return spark.read.parquet(data_path).where("false")
     reader = spark.read
@@ -229,7 +237,20 @@ def read_files(
     schema = _spark_footer_schema(min(files))
     if schema and spark.conf.get("spark.sql.parquet.mergeSchema").lower() != "true":
         reader = reader.schema(schema)
-    return reader.parquet(*files)
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    if len(files) <= int(spark.conf.get(key)) or any(
+        re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", f) and not f.startswith("file:") for f in files
+    ):
+        return reader.parquet(*files)
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(len(files)))
+    try:
+        return reader.parquet(*files)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def _spark_footer_schema(path: str):
@@ -693,11 +714,16 @@ def describe_col(path: str) -> dict[str, Any]:
 
 
 def read_colfile(spark: SparkSession, path: str, where: str | None = None) -> DataFrame:
-    """Read native ``.col`` file(s) as a DataFrame (one scan partition
-    per row group; optional ``where`` does footer-stats zone-map
-    pruning — sources/colfile.py).  ``path`` must be a local or shared
-    (NFS-style) filesystem path visible on driver and executors;
-    object-store/HDFS URIs are rejected up front."""
+    """Read native ``.col`` file(s) as a DataFrame.  The footers are
+    read on the driver, where the optional ``where`` (``col op int``
+    clauses joined by AND) prunes row groups by their zone maps; the
+    result is ``spark.range(n).mapInArrow(...)`` with one partition per
+    surviving row group, each decoded and row-filtered in its task
+    (sources/colfile.py).  Constructing it runs no Spark job.  ``path``
+    must be a local or shared (NFS-style) filesystem path visible on
+    driver and executors; object-store/HDFS URIs are rejected up front.
+    ``spark.read.format("colfile")`` reads the same rows through the
+    Python DataSource adapter over the same planning and decoding."""
     from columnar_analytics_engine_spark.sources.colfile import read_col_spark
 
     return read_col_spark(spark, path, where=where)
@@ -709,13 +735,16 @@ def write_colfile(
     mode: str = "overwrite",
     encodings: dict[str, str] | None = None,
 ) -> None:
-    """Write a DataFrame as a directory of native ``.col`` shards (one
-    per task).  Columns must be int/long/string — the format's whole
-    type system; ``encodings`` maps column → plain|rle|delta|dictionary
-    (per-column control, parity with ``include/format.h:49-61``).
-    ``path`` must be a local/shared filesystem path (URI schemes are
-    rejected); overwrite is transactional — prior shards survive a
-    failed job (staged-rename commit, sources/colfile.py)."""
+    """Write a DataFrame as a directory of native ``.col`` shards: one
+    ``mapInArrow`` job stages one shard per partition (one row group
+    per Arrow batch), then the driver commits them.  Columns must be
+    int/long/string — the format's whole type system; ``encodings``
+    maps column → plain|rle|delta|dictionary (per-column control,
+    parity with ``include/format.h:49-61``).  ``mode`` is
+    ``overwrite`` or ``append``.  ``path`` must be a local/shared
+    filesystem path (URI schemes are rejected); overwrite is
+    transactional — prior shards survive a failed job (staged-rename
+    commit, sources/colfile.py)."""
     from columnar_analytics_engine_spark.sources.colfile import write_col_spark
 
     write_col_spark(df, path, mode=mode, encodings=encodings)

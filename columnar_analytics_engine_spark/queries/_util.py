@@ -10,9 +10,9 @@ arithmetic:
 
     SUM(CAST(ROUND(x * scale) AS BIGINT)) / CAST(scale AS DOUBLE)
 
-``x * scale`` is the same IEEE-754 product in both engines, ``ROUND`` of a
-non-tie double is identical (both round half away from zero, and exact .5
-products essentially never occur for real doubles), the integer sum is exact
+``x * scale`` is the same IEEE-754 product in both engines, the rounding is
+identical (half away from zero on every double, ties included: DuckDB's
+``ROUND``, and on the Spark side :func:`round_to_long_sql`), the integer sum is exact
 and associative, and the final division by a power of ten is a single exact
 IEEE op — so both engines produce the *same double*, independent of partition
 order.  TPC-H money columns have 2 decimals (scale 100); products like
@@ -71,19 +71,39 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # ---- exact float aggregation (Spark side) ----------------------------------
 
-def exact_sum(expr: Column | str, alias: str, scale: int = 100) -> Column:
-    """Order-independent SUM over a double expression (see module doc)."""
-    c = F.col(expr) if isinstance(expr, str) else expr
-    s = F.sum(F.round(c * F.lit(float(scale))).cast("long")).cast("double")
-    return (s / F.lit(float(scale))).alias(alias)
+# discounted revenue, as Spark SQL text for :func:`exact_sum`
+REVENUE = "l_extendedprice * (1D - l_discount)"
 
 
-def exact_avg(expr: Column | str, alias: str, scale: int = 100) -> Column:
+def round_to_long_sql(x: str) -> str:
+    """Spark SQL text: the double ``x`` rounded half away from zero to a
+    BIGINT — the value of ``CAST(ROUND(x) AS BIGINT)``, without
+    ``ROUND``'s per-row ``BigDecimal``.  Below 2^52 the truncation
+    ``t = CAST(x AS BIGINT)`` leaves the exact fraction ``x - t``, so
+    the ±1 step sees ties exactly; from 2^52 on every double is an
+    integer, and the plain cast saturates past 2^63 and maps NaN to 0
+    as the ``ROUND`` form does (``tests/test_property.py``)."""
+    t = f"CAST({x} AS BIGINT)"
+    return (
+        f"CASE WHEN abs({x}) < 4503599627370496D THEN {t} + CASE "
+        f"WHEN {x} - {t} >= 0.5D THEN 1L WHEN {x} - {t} <= -0.5D THEN -1L ELSE 0L END "
+        f"ELSE {t} END"
+    )
+
+
+def exact_sum(expr: str, alias: str, scale: int = 100) -> Column:
+    """Order-independent SUM over ``expr``, Spark SQL text of a double
+    (a column name or an expression; see module doc)."""
+    scaled = round_to_long_sql(f"({expr}) * {float(scale)!r}D")
+    return F.expr(f"CAST(SUM({scaled}) AS DOUBLE) / {float(scale)!r}D").alias(alias)
+
+
+def exact_avg(expr: str, alias: str, scale: int = 100) -> Column:
     """Order-independent AVG: exact integer sum / count, then unscale."""
-    c = F.col(expr) if isinstance(expr, str) else expr
-    s = F.sum(F.round(c * F.lit(float(scale))).cast("long")).cast("double")
-    n = F.count(c).cast("double")
-    return ((s / n) / F.lit(float(scale))).alias(alias)
+    scaled = round_to_long_sql(f"({expr}) * {float(scale)!r}D")
+    return F.expr(
+        f"CAST(SUM({scaled}) AS DOUBLE) / CAST(COUNT({expr}) AS DOUBLE) / {float(scale)!r}D"
+    ).alias(alias)
 
 
 # ---- exact float aggregation (oracle-SQL side) ------------------------------

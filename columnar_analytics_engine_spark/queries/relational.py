@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from columnar_analytics_engine_spark.queries._util import (
+    REVENUE,
     QuerySpec,
     exact_avg,
     exact_sum,
@@ -91,7 +92,6 @@ def join_star_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = t(spark, sf_dir, "supplier")
     nation = t(spark, sf_dir, "nation")
     region = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
@@ -99,7 +99,7 @@ def join_star_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
-        .agg(exact_sum(revenue, "revenue", scale=10_000))
+        .agg(exact_sum(REVENUE, "revenue", scale=10_000))
         .orderBy(F.col("revenue").desc(), F.col("n_name"))
     )
 
@@ -335,16 +335,13 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
-    disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    charge = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))) * (
-        F.lit(1.0) + F.col("l_tax")
-    )
+    charge = f"({REVENUE}) * (1D + l_tax)"
     return (
         df.groupBy("l_returnflag", "l_linestatus")
         .agg(
             exact_sum("l_quantity", "sum_qty"),
             exact_sum("l_extendedprice", "sum_base_price"),
-            exact_sum(disc_price, "sum_disc_price", scale=10_000),
+            exact_sum(REVENUE, "sum_disc_price", scale=10_000),
             exact_sum(charge, "sum_charge", scale=1_000_000),
             exact_avg("l_quantity", "avg_qty"),
             exact_avg("l_extendedprice", "avg_price"),
@@ -362,12 +359,11 @@ def tpch_q3_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
-    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(exact_sum(revenue, "revenue", scale=10_000))
+        .agg(exact_sum(REVENUE, "revenue", scale=10_000))
         .select(
             "l_orderkey",
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
@@ -389,9 +385,7 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_quantity") < 24.0)
     )
     return df.agg(
-        exact_sum(
-            F.col("l_extendedprice") * F.col("l_discount"), "revenue", scale=10_000
-        ),
+        exact_sum("l_extendedprice * l_discount", "revenue", scale=10_000),
         F.count("*").alias("n_rows"),
     )
 
@@ -406,13 +400,12 @@ def tpch_q10_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     customer = t(spark, sf_dir, "customer")
     nation = t(spark, sf_dir, "nation")
-    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(exact_sum(revenue, "revenue", scale=10_000))
+        .agg(exact_sum(REVENUE, "revenue", scale=10_000))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)
     )

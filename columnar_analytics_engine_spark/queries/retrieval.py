@@ -631,6 +631,13 @@ _HQ_WIDTH = 1000.0  # value-space bin width for l_extendedprice
 _HQ_QUANTILES = (0.5, 0.9, 0.99)
 
 
+def _quantile_table(spark: SparkSession, qs: tuple[float, ...]) -> DataFrame:
+    """The ``q double`` column of the queried quantiles as an inline
+    table (a local scan).  A tuple-list ``createDataFrame`` is a Python
+    RDD: every action over it runs one Python task per core."""
+    return spark.sql(f"SELECT * FROM VALUES {', '.join(f'({q!r}D)' for q in qs)} AS qs(q)")
+
+
 def approx_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile estimation from a fixed-width histogram sketch: bin
     counts (one map-side-combined groupBy), then linear interpolation
@@ -656,7 +663,7 @@ def approx_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bin", "cnt", F.sum("cnt").over(w_cum).alias("cum")
     ).withColumn("n", F.sum("cnt").over(W.orderBy(F.lit(1)).rowsBetween(
         W.unboundedPreceding, W.unboundedFollowing)))
-    qs = spark.createDataFrame([(q,) for q in _HQ_QUANTILES], "q double")
+    qs = _quantile_table(spark, _HQ_QUANTILES)
     target = F.col("q") * F.col("n").cast("double")
     hit = (
         cum.join(F.broadcast(qs))
@@ -874,7 +881,7 @@ def approx_quantile_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").over(w_cum).alias("cum"),
         F.sum("cnt").over(w_all).alias("n"),
     )
-    qs = spark.createDataFrame([(q,) for q in (0.5, 0.9)], "q double")
+    qs = _quantile_table(spark, (0.5, 0.9))
     target = F.col("q") * F.col("n").cast("double")
     hit = (
         cum.join(F.broadcast(qs))

@@ -15,17 +15,13 @@ from pyspark.sql import functions as F
 
 from columnar_analytics_engine_spark.functions.caching import persist_once
 from columnar_analytics_engine_spark.queries._util import (
+    REVENUE,
     QuerySpec,
     exact_sum,
+    round_to_long_sql,
     sql_exact_sum,
     t,
 )
-
-def _rev() -> F.Column:
-    """Discounted revenue (built lazily — Column construction needs an
-    active SparkContext, so no module-level Column objects)."""
-    return F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-
 
 _REV_SQL = "l_extendedprice * (1.0 - l_discount)"
 
@@ -80,7 +76,7 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             "supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year")
         )
-        .agg(exact_sum(_rev(), "revenue", scale=10_000))
+        .agg(exact_sum(REVENUE, "revenue", scale=10_000))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -103,7 +99,7 @@ def tpch_q9_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("long").alias("o_year"),
         )
-        .agg(exact_sum(_rev(), "sum_profit", scale=10_000))
+        .agg(exact_sum(REVENUE, "sum_profit", scale=10_000))
         .orderBy(F.col("nation"), F.col("o_year").desc())
     )
 
@@ -117,7 +113,7 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part = t(spark, sf_dir, "part")
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    cents = F.round(_rev() * F.lit(10_000.0)).cast("long")
+    cents = F.expr(round_to_long_sql(f"({REVENUE}) * 10000.0D"))
     promo = F.sum(F.when(F.col("p_type").startswith("PROMO"), cents).otherwise(F.lit(0)))
     total = F.sum(cents)
     return joined.agg(
@@ -176,7 +172,7 @@ def tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_quantity").between(20.0, 30.0))
     )
     return j.filter(c1 | c2 | c3).agg(
-        exact_sum(_rev(), "revenue", scale=10_000), F.count("*").alias("n_rows")
+        exact_sum(REVENUE, "revenue", scale=10_000), F.count("*").alias("n_rows")
     )
 
 
@@ -319,7 +315,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = t(spark, sf_dir, "supplier")
     revenue = (
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(exact_sum(_rev(), "total_revenue", scale=10_000))
+        .agg(exact_sum(REVENUE, "total_revenue", scale=10_000))
     )
     max_rev = revenue.agg(F.max("total_revenue").alias("m"))
     return (
@@ -429,7 +425,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
-    cents4 = F.round(_rev() * F.lit(10_000.0)).cast("long")
+    cents4 = F.expr(round_to_long_sql(f"({REVENUE}) * 10000.0D"))
     target = F.sum(F.when(F.col("n_name") == "NATION_5", cents4).otherwise(F.lit(0)))
     total = F.sum(cents4)
     return (

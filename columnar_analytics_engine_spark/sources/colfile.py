@@ -1,4 +1,4 @@
-"""Native ``.col`` file format: codec + PySpark DataSource.
+"""Native ``.col`` file format: codec, driver-planned Spark I/O, DataSource.
 
 The reference engine stores every table in its own columnar file format
 (spec: ``docs/FORMAT.md``; writer ``src/format.cpp:130-441``; codecs
@@ -11,18 +11,34 @@ migrating from the reference to this engine arrives with existing
   representation) — byte-compatible both directions with the reference
   binary, cross-checked in ``tests/test_colfile.py`` against a CLI
   compiled from the reference sources when a C++ toolchain is present;
-* a PySpark 4 Python DataSource (``format("colfile")``) whose batch
-  reader plans ONE InputPartition per (file, row group) — the same
-  parallelism Parquet gets from row groups — prunes row groups with the
-  footer's per-page min/max stats via the explicit ``where`` reader
-  option (zone-map skipping, the reference's only index:
-  ``src/execution.cpp`` scan loop; Catalyst ``pushFilters`` is
-  deliberately NOT used — see :func:`parse_where` for the reproduced
-  Spark 4.1 plan-cache hazard), and streams Arrow record batches to
-  the JVM; the writer emits one ``.col`` shard per task (Arrow batches
-  in, so wide rows never materialize as Python objects).
+* a Spark read and write planned on the driver and run as plain Arrow
+  tasks (:func:`read_col_spark` / :func:`write_col_spark`, behind
+  ``io.read_colfile`` / ``io.write_colfile``), built from four
+  functions:
 
-Scale shape: the footer is read driver-side per file (12-byte seek +
+  - :func:`plan_row_groups` (driver): read every footer and keep the
+    ``(file, row group)`` pairs whose per-page min/max stats survive
+    the explicit ``where`` clauses — zone-map skipping, the reference's
+    only index (``src/execution.cpp`` scan loop);
+  - :func:`decode_row_group` (executor): one pair → one Arrow batch,
+    rows filtered exactly; a read is ``spark.range(n, numSlices=n)
+    .mapInArrow(...)``, one task per surviving pair, the parallelism
+    Parquet gets from row groups;
+  - :func:`write_shard` (executor): one staged shard per task, one row
+    group per Arrow batch (wide rows never materialize as Python
+    objects); a write is ``df.mapInArrow(...).collect()``;
+  - :func:`commit_shards` (driver): validate the staged shards, collect
+    prior shards on overwrite, rename into place.
+
+  No Spark job runs to construct a read, and no Python data-source
+  planner runs at all;
+* ``format("colfile")``, a PySpark Python DataSource whose batch
+  reader and writer are thin adapters over the same four functions,
+  plus the streaming reader for append-only shard directories.
+  Catalyst ``pushFilters`` is deliberately not used on Spark 4.1 — see
+  :func:`parse_where` for the reproduced plan-cache hazard.
+
+Scale shape: the footer is read on the driver per file (12-byte seek +
 metadata parse — same cost class as Parquet footer planning), data
 pages are read executor-side only for surviving row groups, and decode
 is vectorized numpy (no per-value Python).  At 100 TB the format's own
@@ -569,7 +585,7 @@ def write_col(path: str, columns: dict, encodings: dict | None = None,
 
 
 # ---------------------------------------------------------------------------
-# PySpark DataSource
+# Spark read / write: planned on the driver, executed as Arrow tasks
 # ---------------------------------------------------------------------------
 
 def _spark_schema(specs: list[ColumnSpec]):
@@ -609,14 +625,15 @@ def parse_where(expr: str) -> list[tuple[str, str, int]]:
     (``src/cli.cpp:177-184,228-232``: six ops, int64 literals,
     conjunctive only).  Returns (column, normalized_op, value) clauses.
 
-    Why an explicit option instead of Catalyst ``pushFilters``: PySpark
-    4.1 caches one planned (read_func, partitions) per relation in the
-    JVM and REUSES it across queries over the same loaded DataFrame —
-    a scan pruned for ``df.filter(...)`` is silently replayed for a
-    later unfiltered ``df.count()`` (reproduced; rows vanish).  An
-    option is part of the relation's identity, so pruning on it can
-    never leak between queries, and Spark still evaluates its own
-    filters on top of what we return.
+    Why an explicit option instead of Catalyst ``pushFilters`` on the
+    ``format("colfile")`` adapter: PySpark 4.1 caches one planned
+    (read_func, partitions) per relation in the JVM and REUSES it
+    across queries over the same loaded DataFrame — a scan pruned for
+    ``df.filter(...)`` is silently replayed for a later unfiltered
+    ``df.count()`` (reproduced; rows vanish).  An option is part of the
+    relation's identity, so pruning on it can never leak between
+    queries, and Spark still evaluates its own filters on top of what
+    we return.
     """
     clauses = []
     for part in re.split(r"(?i)\s+and\s+", expr.strip()):
@@ -692,6 +709,229 @@ def _apply_clauses(cols: dict, specs: list[ColumnSpec], clauses) -> dict:
             out[s.name] = np.asarray(v)[mask]
     return out
 
+
+def plan_row_groups(files: list[str], clauses) -> tuple[list[ColumnSpec], list[tuple[str, int]]]:
+    """Driver side of a read: the first file's schema, and the
+    ``(file, row group)`` pairs whose footer zone maps survive
+    ``clauses`` — one scan partition each.  With no survivor the plan
+    keeps one ``(files[0], -1)`` sentinel, which decodes to an empty
+    batch of the right schema (a scan needs at least one partition)."""
+    specs = None
+    pairs = []
+    for fp in files:
+        meta = ColFileReader(fp).metadata
+        if specs is None:
+            specs = meta.schema
+        pairs.extend(
+            (fp, i) for i, rg in enumerate(meta.row_groups)
+            if _rg_survives(clauses, meta.schema, rg)
+        )
+    return specs, pairs or [(files[0], -1)]
+
+
+def decode_row_group(file_path: str, rg_idx: int, clauses):
+    """Executor side of a read: one planned pair as an Arrow record
+    batch, rows filtered exactly by ``clauses`` (``rg_idx < 0``: the
+    empty sentinel)."""
+    import pyarrow as pa
+
+    reader = ColFileReader(file_path)
+    specs = reader.metadata.schema
+    pa_types = {TYPE_INT32: pa.int32(), TYPE_INT64: pa.int64(), TYPE_STRING: pa.string()}
+    if rg_idx < 0:
+        cols = {s.name: [] for s in specs}
+    else:
+        cols = _apply_clauses(reader.read_row_group(rg_idx), specs, clauses)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[s.name], type=pa_types[s.ctype]) for s in specs],
+        [s.name for s in specs],
+    )
+
+
+def specs_for_schema(schema, encodings: dict | None = None) -> list[ColumnSpec]:
+    """``.col`` column specs for a Spark schema; ``encodings`` maps a
+    column name (case-insensitive) to plain|rle|delta|dictionary."""
+    from pyspark.sql.types import IntegerType, LongType, StringType
+
+    encodings = {k.lower(): v for k, v in (encodings or {}).items()}
+    specs = []
+    for f in schema.fields:
+        if isinstance(f.dataType, IntegerType):
+            ctype = TYPE_INT32
+        elif isinstance(f.dataType, LongType):
+            ctype = TYPE_INT64
+        elif isinstance(f.dataType, StringType):
+            ctype = TYPE_STRING
+        else:
+            raise TypeError(
+                f"colfile supports int/long/string only; column "
+                f"{f.name!r} is {f.dataType.simpleString()} — cast first"
+            )
+        enc = encodings.get(f.name.lower())
+        specs.append(ColumnSpec(f.name, ctype, _ENC_CODES[enc] if enc else default_encoding(ctype)))
+    return specs
+
+
+def write_shard(batches, path: str, specs: list[ColumnSpec], run_id: str) -> tuple[str, int]:
+    """Executor side of a write: one shard per task, one row group per
+    Arrow batch, staged under ``_staged-<run_id>-`` (complete but
+    invisible to every lister, which skips ``.``/``_`` names) until
+    :func:`commit_shards` publishes it.  Returns (staged path, rows);
+    an empty task stages a valid zero-row file (outside a task, as
+    partition 0)."""
+    import uuid
+
+    from pyspark import TaskContext
+
+    task = TaskContext.get()
+    fname = f"part-{task.partitionId() if task else 0:05d}-{uuid.uuid4().hex[:8]}.col"
+    tmp = os.path.join(path, "." + fname + ".tmp")
+    staged = os.path.join(path, f"_staged-{run_id}-{fname}")
+    rows = 0
+    with ColFileWriter(tmp, specs) as writer:
+        for batch in batches:
+            cols = []
+            for spec in specs:
+                arr = batch.column(batch.schema.get_field_index(spec.name))
+                if arr.null_count:
+                    raise ValueError(
+                        f"column {spec.name!r} contains NULLs; the .col "
+                        "format has no null representation — filter or "
+                        "coalesce first"
+                    )
+                if spec.ctype == TYPE_STRING:
+                    cols.append(arr.to_pylist())
+                else:
+                    cols.append(arr.to_numpy(zero_copy_only=False))
+            writer.write_row_group(cols)
+            rows += batch.num_rows
+    os.replace(tmp, staged)
+    return staged, rows
+
+
+def commit_shards(path: str, staged: list[str], run_id: str, overwrite: bool) -> None:
+    """Driver side of a write, once every task succeeded: validate the
+    staged shards, drop prior shards (overwrite), publish.
+
+    Every staged shard is checked BEFORE the destructive overwrite GC:
+    a vanished one (a concurrent overwrite's commit collected it) fails
+    the publish loudly with the OLD data intact, instead of publishing
+    a dataset with missing partitions.  A crash mid-rename can leave a
+    mixed state — the window every rename-based committer has — but a
+    failed JOB never touches the old data.  A failed job strands its
+    invisible staged/tmp files; overwrite collects strandings of other
+    runs, which it may do because overwrite claims the whole directory."""
+    for f in staged:
+        if not os.path.exists(f):
+            raise IOError(
+                f"staged .col shard missing at commit: {f} — aborting "
+                "publish (another writer may have claimed this directory)"
+            )
+    if overwrite:
+        for f in os.listdir(path):
+            visible = f.endswith(".col") and not f.startswith((".", "_"))
+            stranded = (f.startswith(("_staged-", ".")) and run_id not in f
+                        and f.endswith((".col", ".col.tmp")))
+            if visible or stranded:
+                os.remove(os.path.join(path, f))
+    prefix = f"_staged-{run_id}-"
+    for f in staged:
+        os.replace(f, os.path.join(path, os.path.basename(f).removeprefix(prefix)))
+
+
+_PICKLED_BY_VALUE = False
+
+
+def _pickle_by_value() -> None:
+    """Ship this module's code with every task that runs it, once per
+    process: by default cloudpickle pickles functions BY REFERENCE, so
+    an executor whose ``sys.path`` lacks this package (driver launched
+    from another cwd, cluster without ``--py-files``) would fail to
+    import them.  The codec is numpy+stdlib only, so the pickled code
+    is self-contained.  PySpark serializes with its VENDORED
+    ``pyspark.cloudpickle``; the standalone package is registered too
+    for user-level cloudpickle use."""
+    global _PICKLED_BY_VALUE
+    if _PICKLED_BY_VALUE:
+        return
+    import importlib
+    import sys
+
+    for modname in ("pyspark.cloudpickle", "cloudpickle"):
+        try:
+            importlib.import_module(modname).register_pickle_by_value(sys.modules[__name__])
+        except Exception:
+            pass  # unavailable variant: fall back to import resolution
+    _PICKLED_BY_VALUE = True
+
+
+def _require_local_path(path: str) -> None:
+    """``.col`` I/O addresses the filesystem with plain
+    ``open``/``os.listdir``/``os.replace`` — a LOCAL or shared
+    (NFS-style) mount visible at the same path on driver and every
+    executor.  Object-store / HDFS URIs would silently make each
+    executor read or write its own local disk, so reject them up
+    front rather than corrupt a dataset."""
+    m = re.match(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", path)
+    if m and m.group(1) not in ("file",):
+        raise ValueError(
+            f"colfile paths must be local/shared-filesystem paths; got "
+            f"{m.group(1)}:// URI {path!r} — copy to a shared mount or "
+            "use parquet for object-store storage"
+        )
+
+
+def read_col_spark(spark, path: str, where: str | None = None):
+    """Read ``.col`` file(s)/shard dir: footers are read and row groups
+    pruned on the driver (:func:`plan_row_groups`), then
+    ``spark.range(n).mapInArrow`` runs one task per surviving pair
+    (:func:`decode_row_group`).  No Spark job runs until an action.  The
+    pair list travels inside the task closure, which Spark broadcasts
+    once it outgrows the Python command threshold."""
+    _require_local_path(path)
+    clauses = parse_where(where) if where else []
+    specs, pairs = plan_row_groups(_list_col_files(path), clauses)
+    _pickle_by_value()
+
+    def decode(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield decode_row_group(*pairs[i], clauses)
+
+    return spark.range(0, len(pairs), 1, len(pairs)).mapInArrow(decode, _spark_schema(specs))
+
+
+def write_col_spark(df, path: str, mode: str = "overwrite",
+                    encodings: dict | None = None):
+    """Write ``.col`` shards: ``df.mapInArrow`` stages one shard per
+    partition (:func:`write_shard`), the driver collects the staged
+    names and commits them (:func:`commit_shards`).  ``mode`` is
+    ``overwrite`` or ``append``."""
+    import uuid
+
+    _require_local_path(path)
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"colfile write mode must be 'overwrite' or 'append', got {mode!r}")
+    specs = specs_for_schema(df.schema, encodings)
+    os.makedirs(path, exist_ok=True)
+    run_id = uuid.uuid4().hex[:8]
+    _pickle_by_value()
+
+    def stage(batches):
+        import pyarrow as pa
+
+        staged, rows = write_shard(batches, path, specs, run_id)
+        yield pa.RecordBatch.from_pydict({"file": [staged], "rows": [rows]})
+
+    staged = [r.file for r in df.mapInArrow(stage, "file string, rows long").collect()]
+    if not staged:  # a zero-partition frame: one empty shard, as Spark's V2 write
+        staged = [write_shard(iter(()), path, specs, run_id)[0]]
+    commit_shards(path, staged, run_id, mode == "overwrite")
+
+
+# ---------------------------------------------------------------------------
+# format("colfile"): Python DataSource adapters over the functions above
+# ---------------------------------------------------------------------------
 
 _PUSHDOWN_MIN_SPARK = (4, 2)
 
@@ -805,47 +1045,20 @@ def _make_datasource_classes():
                 if options.get("where") else []
 
         def partitions(self):
-            parts = []
-            for fp in self.files:
-                meta = ColFileReader(fp).metadata
-                for i, rg in enumerate(meta.row_groups):
-                    if _rg_survives(self.clauses, meta.schema, rg):
-                        parts.append(_RowGroupPartition(fp, i))
-            # an empty partition list is invalid; keep one sentinel so
-            # the task yields an empty batch with the right schema
-            if not parts:
-                parts.append(_RowGroupPartition(self.files[0], -1))
-            return parts
+            _, pairs = plan_row_groups(self.files, self.clauses)
+            return [_RowGroupPartition(fp, i) for fp, i in pairs]
 
         def read(self, partition):
-            import pyarrow as pa
-
-            reader = ColFileReader(partition.file_path)
-            specs = reader.metadata.schema
-            names = [s.name for s in specs]
-            pa_types = {TYPE_INT32: pa.int32(), TYPE_INT64: pa.int64(),
-                        TYPE_STRING: pa.string()}
-            if partition.rg_idx < 0 or not reader.metadata.row_groups:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([], type=pa_types[s.ctype]) for s in specs], names
-                )
-                return
-            cols = reader.read_row_group(partition.rg_idx)
-            if self.clauses:
-                cols = _apply_clauses(cols, specs, self.clauses)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[s.name], type=pa_types[s.ctype]) for s in specs],
-                names,
-            )
+            yield decode_row_group(partition.file_path, partition.rg_idx, self.clauses)
 
     class ColFileStreamReader(SimpleDataSourceStreamReader):
         """Streaming side: continuous ingestion of an append-only
         directory of ``.col`` shards — the same live-drop shape as the
         record-archive stream (sources/record_archive.py), for the
         native format.  File-granularity offsets are EXACT because both
-        writers publish shards atomically (``ColFileWriterDS.write``
-        stages to a dotfile and ``os.replace``s; ``_list`` skips
-        dot/underscore names), so a visible file is complete.
+        writers publish shards atomically (:func:`write_shard` stages
+        to a dotfile and ``os.replace``s; ``_list`` skips dot/underscore
+        names), so a visible file is complete.
 
         Offset model ``{"seen": [filename, ...]}``: ``read`` decodes
         every row group of not-yet-seen files and advances;
@@ -908,123 +1121,33 @@ def _make_datasource_classes():
             self.file_path = file_path
 
     class ColFileWriterDS(DataSourceArrowWriter):
-        """Commit protocol mirrors Spark's file sinks: tasks stage
-        shards under underscore-prefixed names (invisible to every
-        reader/stream lister, which skip ``.``/``_`` prefixes), and
-        only the driver-side :meth:`commit` deletes prior shards and
-        renames staged ones into place — so a failed or aborted
-        overwrite leaves the existing dataset intact."""
+        """Tasks stage shards with :func:`write_shard`; the driver-side
+        :meth:`commit` publishes them with :func:`commit_shards`, so a
+        failed or aborted overwrite leaves the existing dataset intact.
+        (PySpark 4.1's PythonBatchWrite does not relay job-level
+        ``abort()`` here, so a failed job strands its staged files
+        until the next overwrite collects them.)"""
 
         def __init__(self, options, schema, overwrite: bool):
             import uuid
-
-            from pyspark.sql.types import IntegerType, LongType, StringType
 
             self.path = options.get("path")
             if not self.path:
                 raise ValueError("colfile writer requires a path")
             self.overwrite = overwrite
             self.run_id = uuid.uuid4().hex[:8]
-            self.specs: list[ColumnSpec] = []
-            for f in schema.fields:
-                if isinstance(f.dataType, IntegerType):
-                    ctype = TYPE_INT32
-                elif isinstance(f.dataType, LongType):
-                    ctype = TYPE_INT64
-                elif isinstance(f.dataType, StringType):
-                    ctype = TYPE_STRING
-                else:
-                    raise TypeError(
-                        f"colfile supports int/long/string only; column "
-                        f"{f.name!r} is {f.dataType.simpleString()} — cast first"
-                    )
-                enc_opt = options.get(f"encoding.{f.name.lower()}")
-                enc = _ENC_CODES[enc_opt] if enc_opt else default_encoding(ctype)
-                self.specs.append(ColumnSpec(f.name, ctype, enc))
+            self.specs = specs_for_schema(schema, {
+                k[len("encoding."):]: v for k, v in options.items()
+                if k.lower().startswith("encoding.")
+            })
             os.makedirs(self.path, exist_ok=True)
 
         def write(self, iterator):
-            import uuid
-
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            fname = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.col"
-            tmp = os.path.join(self.path, "." + fname + ".tmp")
-            # staged under an underscore prefix: complete but invisible
-            # until commit() renames it to its final name
-            final = os.path.join(self.path, f"_staged-{self.run_id}-{fname}")
-            writer = None
-            rows = 0
-            for batch in iterator:
-                if writer is None:
-                    writer = ColFileWriter(tmp, self.specs)
-                cols = []
-                for spec in self.specs:
-                    arr = batch.column(batch.schema.get_field_index(spec.name))
-                    if arr.null_count:
-                        raise ValueError(
-                            f"column {spec.name!r} contains NULLs; the .col "
-                            "format has no null representation "
-                            "(/root/reference/README.md:134) — filter or "
-                            "coalesce first"
-                        )
-                    if spec.ctype == TYPE_STRING:
-                        cols.append(arr.to_pylist())
-                    else:
-                        cols.append(arr.to_numpy(zero_copy_only=False))
-                writer.write_row_group(cols)
-                rows += batch.num_rows
-            if writer is None:  # empty partition: valid zero-row file
-                writer = ColFileWriter(tmp, self.specs)
-            writer.close()
-            os.replace(tmp, final)
-            return _ColCommit(final)
+            return _ColCommit(write_shard(iterator, self.path, self.specs, self.run_id)[0])
 
         def commit(self, messages):
-            # Only now — every task succeeded — drop prior shards
-            # (overwrite mode) and publish the staged ones.  A crash
-            # mid-loop can leave a mixed state, same window every
-            # rename-based committer has, but a failed JOB never
-            # touches the old data.  (PySpark 4.1's PythonBatchWrite
-            # does not relay job-level abort() to this writer —
-            # observed empirically — so a failed job strands its
-            # invisible staged/tmp files; overwrite commit garbage-
-            # collects strandings from other runs, which it may do
-            # because overwrite claims the entire directory.)
-            # Validate every staged shard BEFORE the destructive
-            # overwrite GC below: a vanished staged file (e.g. a
-            # concurrent overwrite's commit GC'd this run's files)
-            # must fail the job loudly — and with the OLD data still
-            # intact — not silently publish a dataset with missing
-            # partitions.
-            for m in messages:
-                if m is not None and not os.path.exists(m.file_path):
-                    raise IOError(
-                        f"staged .col shard missing at commit: {m.file_path} "
-                        "— aborting publish (another writer may have "
-                        "claimed this directory)"
-                    )
-            if self.overwrite:
-                for f in os.listdir(self.path):
-                    full = os.path.join(self.path, f)
-                    if f.endswith(".col") and not f.startswith((".", "_")):
-                        os.remove(full)
-                    elif (
-                        (f.startswith("_staged-") or f.startswith("."))
-                        and self.run_id not in f
-                        and (f.endswith(".col") or f.endswith(".col.tmp"))
-                    ):
-                        os.remove(full)
-            prefix = f"_staged-{self.run_id}-"
-            for m in messages:
-                if m is None:
-                    continue
-                name = os.path.basename(m.file_path)
-                os.replace(
-                    m.file_path,
-                    os.path.join(self.path, name.removeprefix(prefix)),
-                )
+            commit_shards(self.path, [m.file_path for m in messages if m is not None],
+                          self.run_id, self.overwrite)
 
         def abort(self, messages):
             for m in messages:
@@ -1033,7 +1156,8 @@ def _make_datasource_classes():
 
     class ColFileDataSource(DataSource):
         """``spark.read.format("colfile").load(path)`` /
-        ``df.write.format("colfile").save(dir)``."""
+        ``df.write.format("colfile").save(dir)`` /
+        ``spark.readStream.format("colfile").load(dir)``."""
 
         @classmethod
         def name(cls):
@@ -1070,7 +1194,9 @@ def _pushdown_conf_enabled(spark) -> bool:
 
 
 def register_colfile(spark) -> None:
-    """Idempotently register the ``colfile`` format on this session.
+    """Register the ``colfile`` format on this session (only needed for
+    ``format("colfile")``; :func:`read_col_spark` and
+    :func:`write_col_spark` do not use it).
 
     Catalyst ``pushFilters`` activates automatically when BOTH the
     Spark-version gate (:func:`spark_supports_filter_pushdown`) and the
@@ -1082,70 +1208,14 @@ def register_colfile(spark) -> None:
     global _DS_CLASS
     if _DS_CLASS is None:
         _DS_CLASS = _make_datasource_classes()
-    reader_cls = getattr(_DS_CLASS, "_reader_cls", None)
-    if reader_cls is not None:
-        want = spark_supports_filter_pushdown() and _pushdown_conf_enabled(spark)
-        # Spark detects pushdown support by OVERRIDE, so probe the class
-        # __dict__ (the DataSourceReader base defines a default)
-        have = "pushFilters" in reader_cls.__dict__
-        if want and not have:
-            reader_cls.pushFilters = _push_filters_impl
-        elif have and not want:
-            del reader_cls.pushFilters
-    # Executors deserialize the DataSource with cloudpickle; by default
-    # classes pickle BY REFERENCE, so a worker whose sys.path lacks this
-    # repo (driver launched from another cwd, cluster without
-    # --py-files) hits ModuleNotFoundError.  Pickle this module by value
-    # instead: the codec is numpy+stdlib only, so the serialized class
-    # is fully self-contained.  PySpark serializes with its VENDORED
-    # pyspark.cloudpickle, so register there (and in the standalone
-    # package for any user-level cloudpickle use).
-    import columnar_analytics_engine_spark.sources.colfile as _self
-
-    for modname in ("pyspark.cloudpickle", "cloudpickle"):
-        try:
-            import importlib
-
-            importlib.import_module(modname).register_pickle_by_value(_self)
-        except Exception:
-            pass  # unavailable variant: fall back to import resolution
+    reader_cls = _DS_CLASS._reader_cls
+    want = spark_supports_filter_pushdown() and _pushdown_conf_enabled(spark)
+    # Spark detects pushdown support by OVERRIDE, so probe the class
+    # __dict__ (the DataSourceReader base defines a default)
+    have = "pushFilters" in reader_cls.__dict__
+    if want and not have:
+        reader_cls.pushFilters = _push_filters_impl
+    elif have and not want:
+        del reader_cls.pushFilters
+    _pickle_by_value()  # the DataSource classes are cloudpickled too
     spark.dataSource.register(_DS_CLASS)
-
-
-def _require_local_path(path: str) -> None:
-    """The .col DataSource addresses the filesystem with plain
-    ``open``/``os.listdir``/``os.replace`` — a LOCAL or shared
-    (NFS-style) mount visible at the same path on driver and every
-    executor.  Object-store / HDFS URIs would silently make each
-    executor read or write its own local disk, so reject them up
-    front rather than corrupt a dataset."""
-    m = re.match(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", path)
-    if m and m.group(1) not in ("file",):
-        raise ValueError(
-            f"colfile paths must be local/shared-filesystem paths; got "
-            f"{m.group(1)}:// URI {path!r} — copy to a shared mount or "
-            "use parquet for object-store storage"
-        )
-
-
-def read_col_spark(spark, path: str, where: str | None = None):
-    """Read ``.col`` file(s)/shard dir.  Requires a local or shared
-    filesystem path (see :func:`_require_local_path`)."""
-    _require_local_path(path)
-    register_colfile(spark)
-    reader = spark.read.format("colfile")
-    if where:
-        reader = reader.option("where", where)
-    return reader.load(path)
-
-
-def write_col_spark(df, path: str, mode: str = "overwrite",
-                    encodings: dict | None = None):
-    """Write ``.col`` shards.  Requires a local or shared filesystem
-    path (see :func:`_require_local_path`)."""
-    _require_local_path(path)
-    register_colfile(df.sparkSession)
-    w = df.write.format("colfile").mode(mode)
-    for col, enc in (encodings or {}).items():
-        w = w.option(f"encoding.{col}", enc)
-    w.save(path)

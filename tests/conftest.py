@@ -20,6 +20,23 @@ def spark():
     yield spark
 
 
+def count_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (Spark jobs it ran,
+    its result)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
 @pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL

@@ -75,3 +75,17 @@ def test_grouped_histogram_quantile_within_bin_width(spark, sf_small):
             F.expr(f"percentile(l_extendedprice, {r['q']})").alias("e")
         ).first()["e"]
         assert abs(r["approx_value"] - exact) <= _HQ_WIDTH, r
+
+
+def test_quantile_queries_run_no_python_relation(spark, sf_small):
+    """The quantile list is an inline table, not a tuple-list
+    ``createDataFrame`` (a Python RDD, ``ExistingRDD`` in the plan, whose
+    every action runs one Python task per core)."""
+    from columnar_analytics_engine_spark.queries.retrieval import (
+        approx_quantile_by_group,
+        approx_quantile_histogram,
+    )
+
+    for build in (approx_quantile_histogram, approx_quantile_by_group):
+        plan = build(spark, sf_small)._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan

@@ -287,6 +287,80 @@ def test_spark_read_empty_directory_file(spark, tmp_path):
     assert df.schema.simpleString() == "struct<x:bigint>"
 
 
+def test_read_colfile_matches_datasource_adapter(spark, col_path):
+    """``io.read_colfile`` (driver-planned ``mapInArrow``) and
+    ``format("colfile")`` (the Python DataSource adapter) return the same
+    rows, schema and partitions, with and without ``where`` (the last
+    one prunes every row group: both keep one empty partition)."""
+    from columnar_analytics_engine_spark import io
+
+    cf.register_colfile(spark)
+    for where in (None, "id lt 700", "id >= 1000 and id < 1500", "id gt 99999"):
+        got = io.read_colfile(spark, col_path, where=where)
+        reader = spark.read.format("colfile")
+        want = (reader.option("where", where) if where else reader).load(col_path)
+        assert got.schema == want.schema
+        assert got.rdd.getNumPartitions() == want.rdd.getNumPartitions()
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_read_colfile_is_arrow_tasks_over_range_built_without_a_job(spark, col_path):
+    from columnar_analytics_engine_spark import io
+    from conftest import count_jobs
+
+    io.read_colfile(spark, col_path)  # warm the code path
+    n, df = count_jobs(spark, lambda: io.read_colfile(spark, col_path, where="id lt 700"))
+    assert n == 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Range" in plan
+    assert "BatchScan" not in plan and "(Python)" not in plan
+
+
+def test_write_colfile_matches_datasource_adapter_layout(spark, tmp_path):
+    """Same shards, row groups (one per Arrow batch), encodings and rows
+    from ``io.write_colfile`` and ``format("colfile")``; the write is
+    one Spark job."""
+    from columnar_analytics_engine_spark import io
+    from conftest import count_jobs
+
+    df = spark.range(0, 25_000, 1, 2).selectExpr(
+        "id", "CAST(id % 7 AS int) AS k", "CAST(id % 5 AS string) AS s")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    n, _ = count_jobs(spark, lambda: io.write_colfile(df, a, encodings={"S": "dictionary", "k": "rle"}))
+    assert n == 1
+    cf.register_colfile(spark)
+    df.write.format("colfile").mode("overwrite").option("encoding.s", "dictionary") \
+        .option("encoding.k", "rle").save(b)
+
+    def layout(path):
+        return sorted(
+            ([s.encoding for s in m.schema], [rg.num_rows for rg in m.row_groups])
+            for m in (cf.ColFileReader(f).metadata for f in cf._list_col_files(path))
+        )
+
+    assert layout(a) == layout(b)
+    assert layout(a) == [([cf.ENC_PLAIN, cf.ENC_RLE, cf.ENC_DICTIONARY], [10_000, 2_500])] * 2
+    assert sorted(io.read_colfile(spark, a).collect()) == sorted(df.collect())
+    with pytest.raises(ValueError, match="overwrite' or 'append"):
+        io.write_colfile(df, a, mode="ignore")
+
+
+def test_write_colfile_zero_partition_frame_leaves_one_empty_shard(spark, tmp_path):
+    """A frame with no partitions runs no write task; as with Spark's V2
+    write (and ``format("colfile")``), the overwrite still leaves one
+    readable zero-row shard in place of the old data."""
+    from columnar_analytics_engine_spark import io
+
+    out = str(tmp_path / "out")
+    io.write_colfile(spark.range(0, 10, 1, 2), out)
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), "id long")
+    assert empty.rdd.getNumPartitions() == 0
+    io.write_colfile(empty, out)
+    assert len(cf._list_col_files(out)) == 1
+    df = io.read_colfile(spark, out)
+    assert df.count() == 0 and df.schema.simpleString() == "struct<id:bigint>"
+
+
 # ---------------------------------------------------------------------------
 # cross-validation against the compiled reference binary
 # ---------------------------------------------------------------------------

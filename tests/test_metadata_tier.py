@@ -7,7 +7,6 @@ version dirs, legacy flat indexes, Spark-written DV files) still read."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -23,22 +22,9 @@ from columnar_analytics_engine_spark.manifest import (
     write_manifest,
 )
 from columnar_analytics_engine_spark.sources import synthetic
+from conftest import count_jobs as _jobs
 
 _ROW_SCHEMA = "id long, value long, score int, region string"
-
-
-def _jobs(spark, fn):
-    """Run ``fn`` under a fresh job group; return (jobs it ran, result)."""
-    sc = spark.sparkContext
-    group = f"metadata-tier-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
 @pytest.fixture()
@@ -117,6 +103,22 @@ def test_bloom_planning_runs_no_job(spark, table, tmp_path):
             spark, index, pred, bloom_path=bloom))
         assert n == 0
         assert plan["files_pruned"] > 0
+
+
+def test_read_past_the_listing_threshold_runs_no_job(spark, tmp_path):
+    """A local leaf-file list longer than Spark's parallel-listing
+    threshold (32) is listed on the driver: constructing the read runs
+    no Spark job, and the session's threshold is left as it was."""
+    data, index = str(tmp_path / "data"), str(tmp_path / "index")
+    io.write_sorted(synthetic.bench_table(spark, 4_000, 3), data, ["value"], n_files=40)
+    skipping.build_stats_index(spark, data, index)
+    assert len(manifest_files(index)) == 40
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key, None)
+    n, df = _jobs(spark, lambda: skipping.read_indexed(spark, data, index))
+    assert n == 0
+    assert spark.conf.get(key, None) == before
+    assert df.count() == 4_000
 
 
 def test_spark_written_version_and_legacy_flat_read_through_arrow(spark, tmp_path):

@@ -373,3 +373,58 @@ def test_containment_matches_python_reference(spark, texts):
     assert {k: round(v, 9) for k, v in got.items()} == {
         k: round(v, 9) for k, v in want.items()
     }
+
+
+# ---------------------------------------------------------------------------
+# exact-sum rounding kernel: Spark kernel == Spark ROUND == DuckDB ROUND
+# ---------------------------------------------------------------------------
+
+_ROUND_EDGES = [
+    *(k + 0.5 for k in range(-4, 4)),
+    0.49999999999999994, -0.49999999999999994,
+    2.0**52 - 1, 2.0**52 + 1, -(2.0**52) - 1, -(2.0**52) + 1,
+    2.0**52 - 0.5, -(2.0**52) + 0.5, 2.0**53, -(2.0**53),
+    0.0, -0.0, float("nan"), float("inf"), float("-inf"),
+    2.0**63, -(2.0**63), 9.25e18, -9.25e18, 1e300, -1e300, 9.2233720368547748e18,
+]
+
+
+def _rounding_agrees(spark, xs):
+    """The kernel against ``CAST(ROUND(x) AS BIGINT)`` in Spark (non-ANSI,
+    as the queries run) on every value, and against DuckDB's ``ROUND`` on
+    the values DuckDB can cast (finite, below 2^63 in magnitude)."""
+    from columnar_analytics_engine_spark.queries._util import round_to_long_sql
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        df = spark.createDataFrame(pd.DataFrame({"i": range(len(xs)), "x": xs}), "i long, x double")
+        got = df.select(
+            "i", F.expr(round_to_long_sql("x")).alias("k"), F.round("x").cast("long").alias("r")
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    kernel = {r["i"]: r["k"] for r in got}
+    assert kernel == {r["i"]: r["r"] for r in got}
+    ok = [i for i, x in enumerate(xs) if x == x and abs(x) < 2.0**63]
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": ok, "x": [xs[i] for i in ok]}))
+    duck = dict(con.execute("SELECT i, CAST(ROUND(x) AS BIGINT) FROM t").fetchall())
+    assert {i: kernel[i] for i in ok} == duck
+
+
+def test_round_to_long_edges_match_round_and_duckdb(spark):
+    _rounding_agrees(spark, _ROUND_EDGES)
+
+
+@given(xs=st.lists(
+    st.one_of(
+        st.floats(allow_nan=True, allow_infinity=True),
+        st.floats(min_value=-(2.0**53), max_value=2.0**53),
+        st.integers(-(10**6), 10**6).map(lambda k: k + 0.5),
+    ),
+    min_size=1, max_size=60,
+))
+@SETTINGS
+def test_round_to_long_matches_round_and_duckdb(spark, xs):
+    _rounding_agrees(spark, xs)
