@@ -76,7 +76,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from columnar_analytics_engine_spark.io import _stat_identity, read_files
+from columnar_analytics_engine_spark.io import _stat_identity, read_files, stat_memo
 
 # commit id for tombstones written outside the versioned-commit
 # protocol (no index_path, or a pre-r14 DV file): ALWAYS applied
@@ -151,21 +151,18 @@ def _dv(
     commit filter runs in Spark, not Arrow: a local relation prints no
     rows, so only the filter keeps plans over different commit sets
     distinguishable."""
+    def _build() -> DataFrame:
+        dv = _dv_frame(spark, dv_table(dv_path))
+        if commit_ids is not None:
+            dv = dv.where(F.col("__dv_commit_id").isin([LEGACY_COMMIT, *commit_ids]))
+        return dv.hint("broadcast")
+
     ident = _stat_identity(dv_path)
-    key = (
+    key = None if ident is None else (
         spark.sparkContext.applicationId, ident,
         None if commit_ids is None else tuple(commit_ids),
     )
-    hit = _DV_DF_CACHE.get(os.path.abspath(dv_path))
-    if ident is not None and hit is not None and hit[0] == key:
-        return hit[1]
-    dv = _dv_frame(spark, dv_table(dv_path))
-    if commit_ids is not None:
-        dv = dv.where(F.col("__dv_commit_id").isin([LEGACY_COMMIT, *commit_ids]))
-    dv = dv.hint("broadcast")
-    if ident is not None:
-        _DV_DF_CACHE[os.path.abspath(dv_path)] = (key, dv)
-    return dv
+    return stat_memo(_DV_DF_CACHE, dv_path, key, _build)
 
 
 def _dv_lock(dv_path: str):

@@ -15,7 +15,9 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Any
+import threading
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,12 +39,57 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+_T = TypeVar("_T")
+
+
+def stat_memo(cache: dict[str, tuple[tuple, _T]], path: str, key: tuple | None,
+              build: Callable[[], _T]) -> _T:
+    """``build()``, memoized in ``cache`` for ``path`` under ``key``
+    (one that embeds :func:`_stat_identity`, so a changed file misses).
+    One entry per absolute path: a new key replaces the superseded
+    entry, so the memo is bounded by the paths read.  ``key`` None (no
+    identity: missing path, no part file) builds without storing."""
+    if key is None:
+        return build()
+    apath = os.path.abspath(path)
+    hit = cache.get(apath)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    value = build()
+    cache[apath] = (key, value)
+    return value
+
+
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on ``spark`` for the block, then restore (or unset)
+    the previous values.  Session confs are shared by every thread using
+    the session, so blocks are serialized by one process-wide lock: two
+    threads cannot interleave their saves and restores and leave a value
+    set.  Keep the block to plan construction — Spark captures the confs
+    into the plan there — so the lock is held only briefly."""
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, old in prev.items():
+                if old is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, old)
+
+
 # path -> (stat identity, ns-column list).  ``read_table`` runs on every
 # query INVOCATION (the bench times 3 runs per query), and the pyarrow
 # footer open below is driver-side, single-threaded work paid per call;
-# the answer only changes when a file changes, so the memo is checked
-# against the stat identity.  One entry per path: a new identity
-# replaces the superseded one.
+# the answer only changes when a file changes, so the memo
+# (:func:`stat_memo`) is keyed on the stat identity.
 _NS_FIELDS_CACHE: dict[str, tuple[tuple, list[str]]] = {}
 
 
@@ -91,11 +138,6 @@ def _ns_timestamp_fields(path: str) -> list[str]:
     import pyarrow.parquet as pq
     import pyarrow.types as pat
 
-    ident = _stat_identity(path)
-    hit = _NS_FIELDS_CACHE.get(os.path.abspath(path))
-    if ident is not None and hit is not None and hit[0] == ident:
-        return hit[1]
-
     def _compute() -> list[str]:
         file_path = _first_part(path)
         if file_path is None:
@@ -120,10 +162,7 @@ def _ns_timestamp_fields(path: str) -> list[str]:
         }
         return sorted(ns_names & int64_cols)
 
-    result = _compute()
-    if ident is not None:
-        _NS_FIELDS_CACHE[os.path.abspath(path)] = (ident, result)
-    return result
+    return stat_memo(_NS_FIELDS_CACHE, path, _stat_identity(path), _compute)
 
 
 # path -> ((applicationId, table stat identity), resolved DataFrame).
@@ -136,8 +175,7 @@ def _ns_timestamp_fields(path: str) -> list[str]:
 # caching: no rows are materialized, every action recomputes from the
 # parquet files, and the memo invalidates when the table's stat
 # identity changes (file added/removed/rewritten) or the session is a
-# different application.  One entry per path (a new identity replaces
-# the superseded one): the memo is bounded by the table paths read.
+# different application (:func:`stat_memo`).
 _TABLE_DF_CACHE: dict[str, tuple[tuple, DataFrame]] = {}
 
 
@@ -162,39 +200,28 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     path = table_path(sf_dir, name)
     ident = _stat_identity(path)
-    cache_key = None
-    if ident is not None:
-        cache_key = (spark.sparkContext.applicationId,) + ident
-        hit = _TABLE_DF_CACHE.get(os.path.abspath(path))
-        if hit is not None and hit[0] == cache_key:
-            return hit[1]
-    ns_cols = _ns_timestamp_fields(path)
-    # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) would otherwise be
-    # inferred as TIMESTAMP_NTZ, which Spark's epoch/tz functions reject;
-    # reading it as session-tz TIMESTAMP (session tz is pinned UTC) gives
-    # the exact semantics the DuckDB oracle applies to naive timestamps,
-    # and keeps filter pushdown on the scan (a post-read cast would not).
-    # Confs are captured into the scan at read-plan time, so they can be
-    # restored immediately — later reads by the caller are unaffected.
-    confs = {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}
-    if ns_cols:
-        confs["spark.sql.legacy.parquet.nanosAsLong"] = "true"
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        df = spark.read.parquet(path)
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    if cache_key is not None:
-        _TABLE_DF_CACHE[os.path.abspath(path)] = (cache_key, df)
-    return df
+
+    def _resolve() -> DataFrame:
+        ns_cols = _ns_timestamp_fields(path)
+        # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) would otherwise
+        # be inferred as TIMESTAMP_NTZ, which Spark's epoch/tz functions
+        # reject; reading it as session-tz TIMESTAMP (session tz is pinned
+        # UTC) gives the exact semantics the DuckDB oracle applies to naive
+        # timestamps, and keeps filter pushdown on the scan (a post-read
+        # cast would not).  Confs are captured into the scan at read-plan
+        # time, so they can be restored immediately — later reads by the
+        # caller are unaffected.
+        confs = {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}
+        if ns_cols:
+            confs["spark.sql.legacy.parquet.nanosAsLong"] = "true"
+        with session_confs(spark, confs):
+            df = spark.read.parquet(path)
+        for c in ns_cols:
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
+        return df
+
+    key = None if ident is None else (spark.sparkContext.applicationId,) + ident
+    return stat_memo(_TABLE_DF_CACHE, path, key, _resolve)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
@@ -226,9 +253,10 @@ def read_files(
     Past ``spark.sql.sources.parallelPartitionDiscovery.threshold``
     paths (default 32) Spark lists leaf files with a Spark job, although
     the list is already here; for local (scheme-less or ``file:``)
-    paths the threshold is raised to ``len(files)`` for this read and
-    restored after it (the listing happens when the DataFrame is
-    built).  Object-store URIs keep Spark's parallel listing."""
+    paths the threshold is raised to ``len(files)`` while the DataFrame
+    is built (the listing happens then) and restored after it, under
+    :func:`session_confs`.  Object-store URIs keep Spark's parallel
+    listing."""
     if not files:
         return spark.read.parquet(data_path).where("false")
     reader = spark.read
@@ -242,15 +270,8 @@ def read_files(
         re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", f) and not f.startswith("file:") for f in files
     ):
         return reader.parquet(*files)
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(len(files)))
-    try:
+    with session_confs(spark, {key: str(len(files))}):
         return reader.parquet(*files)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def _spark_footer_schema(path: str):

@@ -71,8 +71,10 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # ---- exact float aggregation (Spark side) ----------------------------------
 
-# discounted revenue, as Spark SQL text for :func:`exact_sum`
-REVENUE = "l_extendedprice * (1D - l_discount)"
+# discounted revenue, as SQL text both engines read alike (Spark widens
+# the 1.0 literal to the double of ``l_discount``): the argument of the
+# Spark :func:`exact_sum` calls and of the oracle :func:`sql_exact_sum`
+REVENUE = "l_extendedprice * (1.0 - l_discount)"
 
 
 def round_to_long_sql(x: str) -> str:

@@ -496,7 +496,7 @@ QUERIES: dict[str, QuerySpec] = {
         join_star_tpch_q5,
         f"""
         SELECT n_name,
-               {sql_exact_sum('l_extendedprice * (1.0 - l_discount)', 'revenue', 10_000)}
+               {sql_exact_sum(REVENUE, 'revenue', 10_000)}
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -697,8 +697,8 @@ QUERIES: dict[str, QuerySpec] = {
         SELECT l_returnflag, l_linestatus,
                {sql_exact_sum('l_quantity', 'sum_qty')},
                {sql_exact_sum('l_extendedprice', 'sum_base_price')},
-               {sql_exact_sum('l_extendedprice * (1.0 - l_discount)', 'sum_disc_price', 10_000)},
-               {sql_exact_sum('(l_extendedprice * (1.0 - l_discount)) * (1.0 + l_tax)', 'sum_charge', 1_000_000)},
+               {sql_exact_sum(REVENUE, 'sum_disc_price', 10_000)},
+               {sql_exact_sum(f'({REVENUE}) * (1.0 + l_tax)', 'sum_charge', 1_000_000)},
                {sql_exact_avg('l_quantity', 'avg_qty')},
                {sql_exact_avg('l_extendedprice', 'avg_price')},
                {sql_exact_avg('l_discount', 'avg_disc', 10_000)},
@@ -716,7 +716,7 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         SELECT l_orderkey,
                strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-               {sql_exact_sum('l_extendedprice * (1.0 - l_discount)', 'revenue', 10_000)}
+               {sql_exact_sum(REVENUE, 'revenue', 10_000)}
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -748,7 +748,7 @@ QUERIES: dict[str, QuerySpec] = {
         tpch_q10_adapted,
         f"""
         SELECT c_custkey, c_name, n_name,
-               {sql_exact_sum('l_extendedprice * (1.0 - l_discount)', 'revenue', 10_000)}
+               {sql_exact_sum(REVENUE, 'revenue', 10_000)}
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey

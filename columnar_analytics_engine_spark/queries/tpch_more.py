@@ -23,8 +23,6 @@ from columnar_analytics_engine_spark.queries._util import (
     t,
 )
 
-_REV_SQL = "l_extendedprice * (1.0 - l_discount)"
-
 
 def tpch_q4_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 order-priority checking (adapted: no l_commitdate — 'late'
@@ -197,7 +195,7 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                CAST(EXTRACT(YEAR FROM l_shipdate) AS BIGINT) AS l_year,
-               {sql_exact_sum(_REV_SQL, 'revenue', 10_000)}
+               {sql_exact_sum(REVENUE, 'revenue', 10_000)}
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
         JOIN supplier ON l_suppkey = s_suppkey
@@ -218,7 +216,7 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         SELECT n_name AS nation,
                CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
-               {sql_exact_sum(_REV_SQL, 'sum_profit', 10_000)}
+               {sql_exact_sum(REVENUE, 'sum_profit', 10_000)}
         FROM lineitem
         JOIN part     ON l_partkey = p_partkey
         JOIN supplier ON l_suppkey = s_suppkey
@@ -234,9 +232,9 @@ QUERIES: dict[str, QuerySpec] = {
         tpch_q14_promo_revenue,
         f"""
         SELECT (CAST(SUM(CASE WHEN p_type LIKE 'PROMO%'
-                         THEN CAST(ROUND(({_REV_SQL}) * CAST(10000 AS DOUBLE)) AS BIGINT)
+                         THEN CAST(ROUND(({REVENUE}) * CAST(10000 AS DOUBLE)) AS BIGINT)
                          ELSE 0 END) AS DOUBLE)
-                / CAST(SUM(CAST(ROUND(({_REV_SQL}) * CAST(10000 AS DOUBLE)) AS BIGINT)) AS DOUBLE))
+                / CAST(SUM(CAST(ROUND(({REVENUE}) * CAST(10000 AS DOUBLE)) AS BIGINT)) AS DOUBLE))
                * 100.0 AS promo_revenue_pct,
                COUNT(*) AS n_rows
         FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -270,7 +268,7 @@ QUERIES: dict[str, QuerySpec] = {
     "tpch_q19_disjunctive": QuerySpec(
         tpch_q19_disjunctive,
         f"""
-        SELECT {sql_exact_sum(_REV_SQL, 'revenue', 10_000)},
+        SELECT {sql_exact_sum(REVENUE, 'revenue', 10_000)},
                COUNT(*) AS n_rows
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 5
@@ -372,7 +370,7 @@ QUERIES["tpch_q15_top_supplier"] = QuerySpec(
     f"""
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
-             {sql_exact_sum(_REV_SQL, 'total_revenue', 10_000)}
+             {sql_exact_sum(REVENUE, 'total_revenue', 10_000)}
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
@@ -496,9 +494,9 @@ QUERIES["tpch_q8_market_share"] = QuerySpec(
     f"""
     SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
            CAST(SUM(CASE WHEN n_name = 'NATION_5'
-                    THEN CAST(ROUND(({_REV_SQL}) * CAST(10000 AS DOUBLE)) AS BIGINT)
+                    THEN CAST(ROUND(({REVENUE}) * CAST(10000 AS DOUBLE)) AS BIGINT)
                     ELSE 0 END) AS DOUBLE)
-           / CAST(SUM(CAST(ROUND(({_REV_SQL}) * CAST(10000 AS DOUBLE)) AS BIGINT)) AS DOUBLE)
+           / CAST(SUM(CAST(ROUND(({REVENUE}) * CAST(10000 AS DOUBLE)) AS BIGINT)) AS DOUBLE)
              AS mkt_share,
            COUNT(*) AS n_rows
     FROM lineitem

@@ -40,16 +40,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     restored confs (pinned by tests/test_streaming.py, which runs every
     stream after this restore has already happened).
     """
-    from columnar_analytics_engine_spark.io import _ns_timestamp_fields
+    from columnar_analytics_engine_spark.io import _ns_timestamp_fields, session_confs
 
     ns_cols = _ns_timestamp_fields(f"{sf_dir}/events.parquet")
     confs = {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}
     if ns_cols:
         confs["spark.sql.legacy.parquet.nanosAsLong"] = "true"
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with session_confs(spark, confs):
         batch = spark.read.parquet(f"{sf_dir}/events.parquet")
         # file-stream sources take a directory; select just the events
         # file from the fixture dir via glob filter
@@ -59,12 +56,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
     for c in ns_cols:
         stream = stream.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
     return stream

@@ -168,6 +168,28 @@ def col_path(tmp_path, sample_cols):
     return path
 
 
+def _readers(spark):
+    """Both ``.col`` read entry points, as ``path -> DataFrame``: the
+    driver-planned reader and the ``format("colfile")`` DataSource
+    adapter over the same plan/decode functions."""
+    cf.register_colfile(spark)
+    return {
+        "read_col_spark": lambda path: cf.read_col_spark(spark, path),
+        "format": lambda path: spark.read.format("colfile").load(path),
+    }
+
+
+def _writers(spark):
+    """Both ``.col`` write entry points, as ``(df, path) -> None`` in
+    overwrite mode: the driver-committed writer and the
+    ``format("colfile")`` DataSource adapter."""
+    cf.register_colfile(spark)
+    return {
+        "write_col_spark": cf.write_col_spark,
+        "format": lambda df, path: df.write.format("colfile").mode("overwrite").save(path),
+    }
+
+
 def test_spark_read_matches_file(spark, col_path, sample_cols):
     df = cf.read_col_spark(spark, col_path)
     assert df.schema.simpleString() == (
@@ -185,13 +207,16 @@ def test_spark_read_matches_file(spark, col_path, sample_cols):
 def test_spark_read_no_state_leak_across_queries(spark, col_path):
     """Regression for the PySpark 4.1 plan-cache hazard that made us
     reject Catalyst pushFilters: a Spark-side filter on one query must
-    not change a later unfiltered scan of the same DataFrame."""
+    not change a later unfiltered scan of the same DataFrame.  Checked
+    on both entry points: the hazard lives in the ``format("colfile")``
+    scan, where ``pushFilters`` turns on."""
     from pyspark.sql import functions as F
 
-    df = cf.read_col_spark(spark, col_path)
-    assert df.count() == 2500
-    assert df.filter(F.col("id") < 500).count() == 500
-    assert df.count() == 2500
+    for read in _readers(spark).values():
+        df = read(col_path)
+        assert df.count() == 2500
+        assert df.filter(F.col("id") < 500).count() == 500
+        assert df.count() == 2500
 
 
 def test_where_option_prunes_row_groups_and_filters_rows(spark, col_path):
@@ -229,15 +254,16 @@ def test_spark_writer_roundtrip_and_encoding_options(spark, tmp_path, col_path):
 def test_spark_writer_rejects_nulls_and_bad_types(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    df = spark.range(10).select(
-        F.col("id"),
-        F.when(F.col("id") < 5, F.col("id")).alias("maybe_null"),
-    )
-    with pytest.raises(Exception, match="NULL"):
-        cf.write_col_spark(df, str(tmp_path / "nulls"))
-    df2 = spark.range(5).select((F.col("id") * 1.5).alias("d"))
-    with pytest.raises(Exception, match="int/long/string"):
-        cf.write_col_spark(df2, str(tmp_path / "badtype"))
+    for name, write in _writers(spark).items():
+        df = spark.range(10).select(
+            F.col("id"),
+            F.when(F.col("id") < 5, F.col("id")).alias("maybe_null"),
+        )
+        with pytest.raises(Exception, match="NULL"):
+            write(df, str(tmp_path / name / "nulls"))
+        df2 = spark.range(5).select((F.col("id") * 1.5).alias("d"))
+        with pytest.raises(Exception, match="int/long/string"):
+            write(df2, str(tmp_path / name / "badtype"))
 
 
 def test_failed_overwrite_preserves_existing_shards(spark, tmp_path):
@@ -252,22 +278,24 @@ def test_failed_overwrite_preserves_existing_shards(spark, tmp_path):
             if f.endswith(".col") and not f.startswith((".", "_"))
         )
 
-    out = str(tmp_path / "ds")
-    cf.write_col_spark(spark.range(100).select(F.col("id")), out)
-    before = visible(out)
-    assert before
-    bad = spark.range(10).select(
-        F.when(F.col("id") < 5, F.col("id")).alias("id")
-    )
-    with pytest.raises(Exception, match="NULL"):
-        cf.write_col_spark(bad, out)  # overwrite attempt fails mid-job
-    assert visible(out) == before
-    assert cf.read_col_spark(spark, out).count() == 100
-    # a SUCCESSFUL overwrite replaces them and garbage-collects the
-    # failed run's stranded staged/tmp files
-    cf.write_col_spark(spark.range(7).select(F.col("id")), out)
-    assert cf.read_col_spark(spark, out).count() == 7
-    assert visible(out) == sorted(os.listdir(out))  # no invisible leftovers
+    read = _readers(spark)["read_col_spark"]
+    for name, write in _writers(spark).items():
+        out = str(tmp_path / name / "ds")
+        write(spark.range(100).select(F.col("id")), out)
+        before = visible(out)
+        assert before
+        bad = spark.range(10).select(
+            F.when(F.col("id") < 5, F.col("id")).alias("id")
+        )
+        with pytest.raises(Exception, match="NULL"):
+            write(bad, out)  # overwrite attempt fails mid-job
+        assert visible(out) == before
+        assert read(out).count() == 100
+        # a SUCCESSFUL overwrite replaces them and garbage-collects the
+        # failed run's stranded staged/tmp files
+        write(spark.range(7).select(F.col("id")), out)
+        assert read(out).count() == 7
+        assert visible(out) == sorted(os.listdir(out))  # no invisible leftovers
 
 
 def test_uri_scheme_paths_rejected(spark):
