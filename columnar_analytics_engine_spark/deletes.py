@@ -377,15 +377,16 @@ def read_with_deletes(
     """Merge-on-read scan: the dataset minus its tombstones (broadcast
     anti-join on (file, row_index) — DV tables are delete-count-sized).
     With ``index_path`` (+ optional ``predicate``/``bloom_path``) the
-    scan first prunes files through the stats index
-    (``skipping.read_skipping``), and tombstone subtraction applies on
-    the pruned scan — the two layers compose because both are pure
-    row-set restrictions.  ``index_path`` without a predicate reads the
-    manifest's full file list (``skipping.read_indexed``) — the
-    maintenance-safe scan, not a silent fall-through to a directory
-    listing.  Schema-EVOLVED tables compose too: tombstones subtract
-    inside each cohort scan (``evolution.read_evolved(dv_path=...)``)
-    and the predicate re-applies on logical columns.
+    scan first prunes files through the stats index (the plan of
+    ``skipping.read_skipping``; without a predicate, the manifest's
+    full file list — the maintenance-safe scan, not a silent
+    fall-through to a directory listing) and reads them with
+    ``evolution.read_evolved(dv_path=...)``, the one read of a
+    maintained table: tombstones subtract inside each scan (each
+    cohort scan on a schema-EVOLVED table) and the predicate
+    re-applies on logical columns — the layers compose because all
+    are pure row-set restrictions.  Without ``index_path`` the plain
+    directory read minus the tombstones.
 
     Time travel: ``as_of=N`` (a retained manifest version) or
     ``as_of_ts=<epoch seconds>`` (resolved through the publish journal,
@@ -393,41 +394,19 @@ def read_with_deletes(
     then, INCLUDING its deletes — only tombstones whose commit is in
     that version's ``_DV_COMMITS`` sidecar apply (versioned deletes
     compose with time travel; see the module docstring)."""
-    from columnar_analytics_engine_spark.evolution import read_evolved, read_schema_spec
-    from columnar_analytics_engine_spark.skipping import (
-        _resolve_as_of,
-        _row_filter,
-        plan_skipping,
-        read_indexed,
-        read_skipping,
-    )
+    from columnar_analytics_engine_spark.skipping import _read_planned, _resolve_as_of
 
-    if as_of_ts is not None and index_path is None:
-        raise ValueError("as_of_ts requires index_path")
-    as_of = _resolve_as_of(index_path, as_of, as_of_ts)
-    dv_ids = applied_commit_ids(index_path, as_of)
-    if index_path is not None and read_schema_spec(index_path) is not None:
-        files = cond = None
-        if predicate is not None:
-            plan = plan_skipping(
-                spark, index_path, predicate, bloom_path=bloom_path, as_of=as_of
-            )
-            files, cond = plan["files"], _row_filter(plan["clauses"])
-        df = read_evolved(
-            spark, data_path, index_path, as_of=as_of, files=files,
-            dv_path=dv_path, dv_commit_ids=dv_ids,
-        )
-        return df if cond is None else df.where(cond)
     if index_path is None:
-        base = spark.read.parquet(data_path)
-    elif predicate is None:
-        base = read_indexed(spark, data_path, index_path, as_of=as_of)
-    else:
-        base = read_skipping(
-            spark, data_path, index_path, predicate, bloom_path=bloom_path,
-            as_of=as_of,
+        if as_of_ts is not None:
+            raise ValueError("as_of_ts requires index_path")
+        return subtract_tombstones(
+            _raw_scan(spark, data_path, None), _dv(spark, dv_path)
         )
-    return subtract_tombstones(base, _dv(spark, dv_path, dv_ids))
+    as_of = _resolve_as_of(index_path, as_of, as_of_ts)
+    return _read_planned(
+        spark, data_path, index_path, predicate, bloom_path, as_of,
+        dv_path=dv_path, dv_commit_ids=applied_commit_ids(index_path, as_of),
+    )
 
 
 def subtract_tombstones(df: DataFrame, dv: DataFrame) -> DataFrame:
@@ -460,18 +439,10 @@ def compact_deletes(
     path moves physical rows and does not consult DVs.
 
     Hive-partitioned layouts (e.g. the streaming sink's ``batch_id=N``
-    dirs) are handled by grouping the tombstoned files per partition
-    directory and rewriting each group IN PLACE (leaf reads without
-    basePath, so partition values stay path-encoded and out of the
-    rewritten files) — a root-level rewrite would mix leaf files with
-    ``key=value`` dirs and corrupt both plain directory reads and
-    basePath leaf-list reads."""
-    from columnar_analytics_engine_spark.layout import (
-        group_by_partition_dir,
-        publish_rewrite,
-        split_groups_by_cohort,
-    )
-
+    dirs) and schema cohorts are handled by the shared rewrite loop
+    (``layout.rewrite_groups``): each partition directory's files are
+    rewritten IN PLACE, one group per cohort, single files included."""
+    from columnar_analytics_engine_spark.layout import rewrite_groups
     from columnar_analytics_engine_spark.manifest import (
         current_version,
         dv_commits,
@@ -493,7 +464,7 @@ def compact_deletes(
     if versioned:
         clearable = sorted(
             set(dv_all.column("file").to_pylist())
-            - referenced_files(spark, index_path)
+            - referenced_files(index_path)
         )
     else:
         # tombstones on files the CURRENT manifest no longer lists are
@@ -507,23 +478,12 @@ def compact_deletes(
         cleared = _clear_tombstones(dv_path, clearable)
         return {"folded_files": 0, "new_files": 0, "tombstones_cleared": cleared}
     dv = _dv_frame(spark, dv).hint("broadcast")
-    groups = group_by_partition_dir(affected, data_path)
-    # evolved tables: schema-homogeneous rewrite groups only (mixing
-    # cohorts in one read would drop the wider cohort's bytes)
-    groups = split_groups_by_cohort(spark, index_path, groups)
-    new_files: list[str] = []
-    for dest, files in sorted(groups.items()):
-        dest = dest.split("\x00", 1)[0]  # strip cohort tag
-        survivors = subtract_tombstones(
-            read_files(spark, data_path, files, base_path=False), dv
-        )
-        group_files, expected = publish_rewrite(
-            spark, data_path, index_path, files,
-            survivors.coalesce(max(1, len(files) // 4)),
-            dest_dir=dest if dest != data_path else None,
-            expected_current=expected,
-        )
-        new_files.extend(group_files)
+    def fold(df: DataFrame, files: list[str]) -> DataFrame:
+        return subtract_tombstones(df, dv).coalesce(max(1, len(files) // 4))
+
+    done = rewrite_groups(
+        spark, data_path, index_path, affected, fold, expected, min_files=1
+    )
     # versioned tables clear only retention-expired tombstones (the
     # folded ones stay until their files leave every retained version);
     # legacy tables clear folded + dead as before
@@ -531,6 +491,6 @@ def compact_deletes(
     cleared = _clear_tombstones(dv_path, drop) if drop else 0
     return {
         "folded_files": len(affected),
-        "new_files": len(new_files),
+        "new_files": done["new_files"],
         "tombstones_cleared": cleared,
     }

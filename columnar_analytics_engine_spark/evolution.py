@@ -17,22 +17,27 @@ manifest:
   the chain of prior physical names (renames).
 * :func:`add_column` / :func:`rename_column` / :func:`widen_type` are
   O(metadata): they rewrite only the spec.  No data file changes.
-* :func:`read_evolved` reconciles: the manifest knows exactly which
-  columns each file physically carries (one row per (file, column)),
-  so files group into schema COHORTS; each cohort scans once with its
-  own projection (missing column → default literal; old name → rename;
-  narrow type → cast) and the cohorts union.  Distinguishing
-  written-NULL from never-written (→ default) is exactly what a merged
-  ``mergeSchema`` scan cannot do and per-cohort reads can.
+* :func:`read_evolved` is the ONE read of a maintained table: every
+  index-planned read (``skipping.read_indexed`` / ``read_skipping`` /
+  ``read_skipping_for_join``, ``deletes.read_with_deletes``, the MERGE
+  rewrite) resolves its snapshot, plans its file list and calls it,
+  so no caller chooses between a flat and an evolved read.  It
+  reconciles: the manifest knows exactly which columns each file
+  physically carries (one row per (file, column)), so files group
+  into schema COHORTS; each cohort scans once with its own projection
+  (missing column → default literal; old name → rename; narrow type →
+  cast) and the cohorts union.  Distinguishing written-NULL from
+  never-written (→ default) is exactly what a merged ``mergeSchema``
+  scan cannot do and per-cohort reads can.
 * Lazy materialization: ``layout.merge_upsert_files`` reads affected
   files through the evolved view, so every MERGE upgrades the files it
   touches to the current schema — the table converges physically
   without a bulk rewrite, Iceberg-style.  ``cluster_compact`` and
   ``compact_deletes`` instead preserve each file's PHYSICAL schema
-  (they split rewrite groups per cohort —
-  ``layout.split_groups_by_cohort`` — because a mixed-cohort read
-  would silently drop the wider cohort's bytes); correctness never
-  depends on which maintenance op ran.
+  (their one rewrite loop, ``layout.rewrite_groups``, splits groups
+  per cohort because a mixed-cohort read would silently drop the
+  wider cohort's bytes); correctness never depends on which
+  maintenance op ran.
 
 Pruning stays sound for free: a predicate on an added/renamed column
 finds no stats row under that name for pre-evolution files, and the
@@ -241,13 +246,18 @@ def read_evolved(
     dv_path: str | None = None,
     dv_commit_ids: list[str] | None = None,
 ) -> DataFrame:
-    """The table under its CURRENT logical schema: manifest-listed
-    files (optionally restricted to ``files`` — the maintenance-rewrite
-    path) grouped into physical-schema cohorts, each scanned with its
-    own reconciling projection, unioned.  Without a spec this is
-    exactly ``read_indexed``.  Cohort count is the number of distinct
-    physical schemas ever written — a handful in practice — and each
-    cohort is one ordinary pruned scan, so the plan stays
+    """The table under its CURRENT logical schema — the ONE read of a
+    maintained table: every index-planned read (``skipping.read_indexed``,
+    ``read_skipping``, ``read_skipping_for_join``,
+    ``deletes.read_with_deletes``, the MERGE rewrite) turns its
+    manifest snapshot or planned file list into a DataFrame here.
+    Manifest-listed files (optionally restricted to ``files`` — a
+    pruning plan or a maintenance rewrite) are grouped into
+    physical-schema cohorts, each scanned with its own reconciling
+    projection, unioned.  Without a spec it is one flat scan of the
+    snapshot's (or ``files``') files.  Cohort count is the number of
+    distinct physical schemas ever written — a handful in practice —
+    and each cohort is one ordinary pruned scan, so the plan stays
     scan-shaped at any table size.
 
     ``dv_path`` subtracts deletion vectors INSIDE each cohort scan
@@ -259,7 +269,7 @@ def read_evolved(
     subtracts everything."""
     from columnar_analytics_engine_spark.deletes import _dv, subtract_tombstones
     from columnar_analytics_engine_spark.layout import columns_by_file
-    from columnar_analytics_engine_spark.skipping import read_indexed
+    from columnar_analytics_engine_spark.manifest import manifest_files
 
     dv = _dv(spark, dv_path, dv_commit_ids) if dv_path is not None else None
 
@@ -268,11 +278,8 @@ def read_evolved(
 
     spec = read_schema_spec(index_path)
     if spec is None:
-        if files is None:
-            base = read_indexed(spark, data_path, index_path, as_of=as_of)
-        else:
-            base = read_files(spark, data_path, sorted(files))
-        return minus_dv(base)
+        flist = manifest_files(index_path, as_of) if files is None else sorted(files)
+        return minus_dv(read_files(spark, data_path, flist))
     wanted = set(files) if files is not None else None
     cohorts: dict[frozenset, list[str]] = {}
     for f, cs in columns_by_file(index_path, as_of).items():

@@ -36,6 +36,8 @@ bucket-count-sized groupBys.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -376,33 +378,27 @@ def split_groups_by_cohort(
     spark: SparkSession,
     index_path: str,
     groups: dict[str, list[str]],
-) -> dict[str, list[str]]:
-    """On a schema-EVOLVED table, further split each rewrite group by
-    physical-schema cohort (the per-file column set in the manifest).
-    A multi-file Spark read without mergeSchema takes the first file's
-    schema: mixing cohorts in one rewrite would silently DROP the
-    bytes of columns the sampled schema lacks.  Cohort-homogeneous
-    groups preserve every byte; the evolved view reconciles at read
-    time as always.  No-op (identity) when the table never evolved."""
+) -> list[tuple[str, list[str]]]:
+    """The rewrite groups as ``(dest_dir, files)`` pairs, ordered by
+    directory: on a schema-EVOLVED table each partition group is
+    further split by physical-schema cohort (the per-file column set
+    in the manifest).  A multi-file Spark read without mergeSchema
+    takes the first file's schema: mixing cohorts in one rewrite would
+    silently DROP the bytes of columns the sampled schema lacks.
+    Cohort-homogeneous groups preserve every byte; the evolved view
+    reconciles at read time as always.  One pair per directory when
+    the table never evolved."""
     from columnar_analytics_engine_spark.evolution import read_schema_spec
 
-    if read_schema_spec(index_path) is None:
-        return groups
-    cols_of = {
+    cols_of = {} if read_schema_spec(index_path) is None else {
         f: frozenset(cs) for f, cs in columns_by_file(index_path).items()
     }
-    out: dict[str, list[str]] = {}
-    for dest, files in groups.items():
+    out: list[tuple[str, list[str]]] = []
+    for dest, files in sorted(groups.items()):
         by_cohort: dict[frozenset, list[str]] = {}
         for f in files:
             by_cohort.setdefault(cols_of.get(f, frozenset()), []).append(f)
-        if len(by_cohort) == 1:
-            out[dest] = files
-        else:
-            for i, (_sig, fl) in enumerate(
-                sorted(by_cohort.items(), key=lambda kv: sorted(kv[1]))
-            ):
-                out[f"{dest}\x00cohort{i}"] = fl
+        out.extend((dest, fl) for fl in sorted(by_cohort.values(), key=sorted))
     return out
 
 
@@ -525,6 +521,63 @@ def publish_rewrite(
     return new_files, version
 
 
+def _n_out(files: list[str], target_file_bytes: int) -> int:
+    """Output file count for rewriting ``files`` at the target size."""
+    import os
+
+    total = sum(os.path.getsize(f) for f in files)
+    return max(1, int((total + target_file_bytes - 1) // target_file_bytes))
+
+
+def rewrite_groups(
+    spark: SparkSession,
+    data_path: str,
+    index_path: str,
+    files: list[str],
+    arrange: Callable[[DataFrame, list[str]], DataFrame],
+    expected_current: int | None,
+    min_files: int = 2,
+    sort_cols: list[str] | tuple[str, ...] = (),
+) -> dict:
+    """The one rewrite loop of the maintenance ops (``cluster_compact``,
+    ``compact_small_files``, ``deletes.compact_deletes``): group
+    ``files`` by hive partition directory, then by schema cohort
+    (:func:`split_groups_by_cohort`); read each group of at least
+    ``min_files`` as leaf files WITHOUT basePath (partition values stay
+    path-encoded and out of the rewritten files), persist
+    ``arrange(df, group_files)`` with :func:`publish_rewrite` into the
+    group's own directory, and thread the optimistic-concurrency base
+    version from one publish to the next, starting at
+    ``expected_current`` (the caller's plan-time version).  Rows never
+    leave their partition directory: a root-level rewrite would mix
+    leaf files with ``key=value`` dirs and corrupt plain
+    directory-listing reads; cross-partition overlap cannot be merged
+    (the path IS the partition value).  ``sort_cols`` that are
+    path-encoded partition columns are rejected before anything is
+    written."""
+    by_dir = group_by_partition_dir(files, data_path)
+    bad = partition_keys_of(by_dir, data_path) & set(sort_cols)
+    if bad:
+        raise ValueError(
+            f"columns {sorted(bad)} are path-encoded partition columns; "
+            "cluster or sort on data columns inside each partition"
+        )
+    out = {"rewritten": 0, "new_files": 0, "groups": 0}
+    for dest, group in split_groups_by_cohort(spark, index_path, by_dir):
+        if len(group) < min_files:
+            continue
+        df = read_files(spark, data_path, group, base_path=False)
+        new_files, expected_current = publish_rewrite(
+            spark, data_path, index_path, group, arrange(df, group),
+            dest_dir=dest if dest != data_path else None,
+            expected_current=expected_current,
+        )
+        out["rewritten"] += len(group)
+        out["new_files"] += len(new_files)
+        out["groups"] += 1
+    return out
+
+
 def cluster_compact(
     spark: SparkSession,
     data_path: str,
@@ -562,8 +615,6 @@ def cluster_compact(
     lazily converges old cohorts onto a switched spec, Iceberg's
     partition-spec-evolution shape.
     """
-    import os
-
     from columnar_analytics_engine_spark.manifest import current_version
 
     if cols is None:
@@ -586,53 +637,15 @@ def cluster_compact(
     if len(cand) < 2:
         return {"rewritten": 0, "new_files": 0, "groups": 0}
 
-    # hive layouts (the streaming sink's batch_id=N dirs): rows must
-    # stay inside their partition directory — a root-level rewrite
-    # would mix leaf files with key=value dirs and corrupt plain
-    # directory-listing reads.  Group candidates per partition dir and
-    # rewrite each group in place; cross-partition overlap cannot be
-    # merged (the path IS the partition value), which is the layout's
-    # own constraint, not this function's.
-    groups = group_by_partition_dir(cand, data_path)
-    hive = any(d != data_path for d in groups)
-    groups = split_groups_by_cohort(spark, index_path, groups)
-    if hive:
-        bad = partition_keys_of(groups, data_path) & set(cols)
-        if bad:
-            raise ValueError(
-                f"cluster columns {sorted(bad)} are path-encoded partition "
-                "columns; cluster on data columns inside each partition"
-            )
-
-    rewritten = 0
-    new_total = 0
-    n_groups = 0
-    for dest, files in sorted(groups.items()):
-        dest = dest.split("\x00", 1)[0]  # strip cohort tag
-        if len(files) < 2:
-            continue
-        total = sum(os.path.getsize(f) for f in files)
-        n_files = max(
-            1, int((total + target_file_bytes - 1) // target_file_bytes)
-        )
-        # leaf-file read WITHOUT basePath: partition columns stay
-        # path-encoded and out of the rewritten files
-        df = read_files(spark, data_path, files, base_path=False)
+    def arrange(df: DataFrame, files: list[str]) -> DataFrame:
+        n = _n_out(files, target_file_bytes)
         if len(cols) == 1:
-            arranged = df.repartitionByRange(n_files, *cols).sortWithinPartitions(
-                *cols
-            )
-        else:
-            arranged = zorder_frame(df, cols, n_files, bits=bits)
-        new_files, expected = publish_rewrite(
-            spark, data_path, index_path, files, arranged,
-            dest_dir=dest if dest != data_path else None,
-            expected_current=expected,
-        )
-        rewritten += len(files)
-        new_total += len(new_files)
-        n_groups += 1
-    return {"rewritten": rewritten, "new_files": new_total, "groups": n_groups}
+            return df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
+        return zorder_frame(df, cols, n, bits=bits)
+
+    return rewrite_groups(
+        spark, data_path, index_path, cand, arrange, expected, sort_cols=cols
+    )
 
 
 def vacuum_unindexed(
@@ -677,71 +690,49 @@ def vacuum_unindexed(
     import glob
     import os
     import shutil
+    import time
 
     from columnar_analytics_engine_spark.manifest import (
+        ORPHAN_GRACE_SEC,
         expire_versions,
         referenced_files,
+        surviving_versions,
     )
     from columnar_analytics_engine_spark.skipping import list_parquet_files
 
-    from columnar_analytics_engine_spark.manifest import surviving_versions
-
-    norm_self = os.path.normpath(index_path)
-    others = [
-        e for e in extra_indexes if os.path.normpath(e) != norm_self
-    ]
-
-    def _branch_keep() -> set[str]:
-        keep: set[str] = set()
-        for idx in others:
-            keep |= referenced_files(spark, idx)
-        return keep
-
     if dry_run:
-        retained = sorted(
-            surviving_versions(
-                index_path, keep_versions, protect=protect_versions
-            )
-        )
-        keep = referenced_files(spark, index_path, retained or None)
-        keep |= _branch_keep()
-        would = [f for f in list_parquet_files(data_path) if f not in keep]
-        # staging siblings: same others-and-age grace filter as the
-        # real run below, so preview and reality cannot disagree
-        import time as _time
-
-        from columnar_analytics_engine_spark.manifest import ORPHAN_GRACE_SEC
-
-        now = _time.time()
-        for d in sorted(glob.glob(data_path.rstrip("/") + ".rewrite-*")):
-            try:
-                if others and now - os.stat(d).st_mtime < ORPHAN_GRACE_SEC:
-                    continue  # possibly a live branch's in-flight rewrite
-            except FileNotFoundError:
-                continue
-            would.append(d)
-        return would
-    expire_versions(index_path, keep_versions, protect=protect_versions)
-    keep = referenced_files(spark, index_path) | _branch_keep()
-    stranded = [f for f in list_parquet_files(data_path) if f not in keep]
-    for f in stranded:
-        os.remove(f)
+        # version expiry simulated with the same retention math
+        retained = list(
+            surviving_versions(index_path, keep_versions, protect=protect_versions)
+        ) or None
+    else:
+        # expire FIRST, then protect every version still on disk: one
+        # staged concurrently after the expiry stays protected
+        expire_versions(index_path, keep_versions, protect=protect_versions)
+        retained = None
+    norm_self = os.path.normpath(index_path)
+    others = [e for e in extra_indexes if os.path.normpath(e) != norm_self]
+    keep = referenced_files(index_path, retained)
+    for idx in others:
+        keep |= referenced_files(idx)
+    doomed = [f for f in list_parquet_files(data_path) if f not in keep]
     # staging siblings: reclaim only past the in-flight grace window —
     # with branches, a rewrite may be mid-flight from ANOTHER owner
-    import time as _time
-
-    from columnar_analytics_engine_spark.manifest import ORPHAN_GRACE_SEC
-
-    now = _time.time()
-    for d in glob.glob(data_path.rstrip("/") + ".rewrite-*"):
+    now = time.time()
+    staging = []
+    for d in sorted(glob.glob(data_path.rstrip("/") + ".rewrite-*")):
         try:
             if others and now - os.stat(d).st_mtime < ORPHAN_GRACE_SEC:
                 continue  # possibly a live branch's in-flight rewrite
         except FileNotFoundError:
             continue
-        shutil.rmtree(d, ignore_errors=True)
-        stranded.append(d)
-    return stranded
+        staging.append(d)
+    if not dry_run:
+        for f in doomed:
+            os.remove(f)
+        for d in staging:
+            shutil.rmtree(d, ignore_errors=True)
+    return doomed + staging
 
 
 def vacuum_expired_references(
@@ -781,9 +772,9 @@ def vacuum_expired_references(
     expiring = [v for v in list_versions(index_path) if v not in survivors]
     if not expiring:
         return []
-    doomed_refs = referenced_files(spark, index_path, expiring)
+    doomed_refs = referenced_files(index_path, expiring)
     expire_versions(index_path, keep_versions, protect=protect_versions)
-    keep = referenced_files(spark, index_path)
+    keep = referenced_files(index_path)
     removed = []
     for f in sorted(doomed_refs - keep):
         try:
@@ -819,52 +810,26 @@ def compact_small_files(
     publish discipline, originals persist until vacuum)."""
     import os
 
-    from columnar_analytics_engine_spark.manifest import manifest_files
+    from columnar_analytics_engine_spark.manifest import current_version, manifest_files
 
     files = manifest_files(index_path)
     cutoff = small_bytes if small_bytes is not None else target_file_bytes // 2
-    from columnar_analytics_engine_spark.manifest import current_version
-
     expected = current_version(index_path)
     small = [
         f for f in files
         if os.path.exists(f) and os.path.getsize(f) < cutoff
     ][:max_files]
-    groups = split_groups_by_cohort(
-        spark, index_path, group_by_partition_dir(small, data_path)
-    )
-    if cols:
-        part_keys = partition_keys_of(groups, data_path) & set(cols)
-        if part_keys:
-            raise ValueError(
-                f"sort columns {sorted(part_keys)} are path-encoded "
-                "partition columns"
-            )
-    rewritten = 0
-    new_total = 0
-    n_groups = 0
-    for dest, flist in sorted(groups.items()):
-        dest = dest.split("\x00", 1)[0]
-        if len(flist) < 2:
-            continue
-        total = sum(os.path.getsize(f) for f in flist)
-        n_out = max(1, int((total + target_file_bytes - 1) // target_file_bytes))
-        df = read_files(spark, data_path, flist, base_path=False)
+
+    def arrange(df: DataFrame, flist: list[str]) -> DataFrame:
+        n = _n_out(flist, target_file_bytes)
         if cols:
-            arranged = df.repartitionByRange(n_out, *cols).sortWithinPartitions(
-                *cols
-            )
-        else:
-            arranged = df.coalesce(n_out)
-        new_files, expected = publish_rewrite(
-            spark, data_path, index_path, flist, arranged,
-            dest_dir=dest if dest != data_path else None,
-            expected_current=expected,
-        )
-        rewritten += len(flist)
-        new_total += len(new_files)
-        n_groups += 1
-    return {"rewritten": rewritten, "new_files": new_total, "groups": n_groups}
+            return df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
+        return df.coalesce(n)
+
+    return rewrite_groups(
+        spark, data_path, index_path, small, arrange, expected,
+        sort_cols=cols or (),
+    )
 
 
 def table_health(
@@ -993,8 +958,6 @@ def merge_upsert_files(
     each partition directory separately (``data_path=<partition dir>``
     with a partition-scoped index), or use
     ``operators.merge.merge_upsert`` when a full rewrite is intended."""
-    import os
-
     from columnar_analytics_engine_spark.skipping import (
         list_parquet_files,
         plan_skipping_join,
@@ -1029,8 +992,7 @@ def merge_upsert_files(
         return {"affected_files": 0, "new_files": len(new_files),
                 "pruned_files": plan["files_pruned"],
                 "version": version}
-    total = sum(os.path.getsize(f) for f in affected)
-    n_files = max(1, int((total + target_file_bytes - 1) // target_file_bytes))
+    n_files = _n_out(affected, target_file_bytes)
     # evolved tables: read affected cohorts under the CURRENT logical
     # schema so the rewrite lazily materializes adds/renames/widenings
     from columnar_analytics_engine_spark.evolution import read_evolved

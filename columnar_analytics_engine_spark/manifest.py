@@ -608,12 +608,11 @@ def surviving_versions(
 
 
 def referenced_files(
-    spark: SparkSession, index_path: str, versions: list[int] | None = None
+    index_path: str, versions: list[int] | None = None
 ) -> set[str]:
     """Union of data files referenced by the given manifest versions
     (default: every retained version — the set vacuum must NOT
-    delete).  Read on the driver, one small Parquet file per version
-    (``spark`` is unused; kept for callers)."""
+    delete).  Read on the driver, one small Parquet file per version."""
     if versions is None:
         # a legacy flat index is its own single (current) version
         versions = list_versions(index_path) or (

@@ -26,8 +26,10 @@ directories:
   shared by the join planner, touching no Spark object (driver memory
   bounded by the file list — the same planning shape as Iceberg
   manifest pruning) — and read only the surviving files through
-  ``io.read_files``, which takes the read schema from a footer instead
-  of a Spark inference job.  Constructing the read runs no Spark job.
+  ``evolution.read_evolved``, the one read of a maintained table (per
+  schema cohort, each via ``io.read_files``, which takes the read
+  schema from a footer instead of a Spark inference job).
+  Constructing the read runs no Spark job.
   The predicate is still applied exactly on top of the pruned scan, so
   skipping is a pure superset optimization: it can never change
   results, only skip I/O.
@@ -62,7 +64,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from columnar_analytics_engine_spark.io import read_files
+from columnar_analytics_engine_spark.evolution import read_evolved, read_schema_spec
 
 INDEX_SCHEMA = (
     "file string, column string, kind string, "
@@ -389,8 +391,6 @@ def _rebase_index(
     footer-scanned rows for ``add_files`` — the next version's table,
     computed on the driver (shared by ``update_stats_index`` and
     ``layout._swap_index``)."""
-    from columnar_analytics_engine_spark.evolution import read_schema_spec
-
     out = idx.select(INDEX_ARROW_SCHEMA.names).cast(INDEX_ARROW_SCHEMA)
     if drop_files:
         gone = pc.is_in(out["file"], value_set=pa.array(drop_files, pa.string()))
@@ -434,7 +434,7 @@ def update_stats_index(
     current = set(list_parquet_files(data_path))
     idx = manifest_table(index_path)
     indexed = set(idx.column("file").to_pylist())
-    known = referenced_files(spark, index_path)
+    known = referenced_files(index_path)
     added = sorted(current - indexed - known)
     # layout guard: on a hive-partitioned table, a candidate file whose
     # directory structure does not match the manifest's partition
@@ -626,25 +626,41 @@ def read_skipping(
     IDENTICAL to filtering the full dataset — the index only removes
     file opens and tasks.  ``as_of``/``as_of_ts`` time-travel the plan
     to a retained manifest version (``as_of_ts`` is epoch seconds,
-    resolved through the publish journal — ``manifest.version_at``)."""
-    as_of = _resolve_as_of(index_path, as_of, as_of_ts)
-    plan = plan_skipping(
-        spark, index_path, predicate, bloom_path=bloom_path, as_of=as_of
+    resolved through the publish journal — ``manifest.version_at``).
+    The pruned file list is read by ``evolution.read_evolved``, the one
+    read of a maintained table, so an evolved table is read per cohort
+    and the predicate applies to LOGICAL columns.  Pruning stays sound
+    there: clauses on added/renamed columns find no stats row under
+    the logical name for pre-evolution files, which are kept."""
+    return _read_planned(
+        spark, data_path, index_path, predicate, bloom_path,
+        _resolve_as_of(index_path, as_of, as_of_ts),
     )
-    from columnar_analytics_engine_spark.evolution import read_evolved, read_schema_spec
 
-    if read_schema_spec(index_path) is not None:
-        # evolved table: per-cohort reconciling scans over the pruned
-        # file list, exact predicate re-applied on LOGICAL columns.
-        # Pruning stays sound: clauses on added/renamed columns find no
-        # stats row under the logical name for pre-evolution files, so
-        # those files are conservatively kept.
-        df = read_evolved(
-            spark, data_path, index_path, as_of=as_of, files=plan["files"]
+
+def _read_planned(
+    spark: SparkSession,
+    data_path: str,
+    index_path: str,
+    predicate: str | None,
+    bloom_path: str | None,
+    as_of: int | None,
+    dv_path: str | None = None,
+    dv_commit_ids: list[str] | None = None,
+) -> DataFrame:
+    """Plan ``predicate`` (None: the whole snapshot), read the kept
+    files through ``read_evolved`` (minus the DV's tombstones when
+    ``dv_path`` is given) and re-apply the exact predicate."""
+    files = cond = None
+    if predicate is not None:
+        plan = plan_skipping(
+            spark, index_path, predicate, bloom_path=bloom_path, as_of=as_of
         )
-    else:
-        df = read_files(spark, data_path, plan["files"])
-    cond = _row_filter(plan["clauses"])
+        files, cond = plan["files"], _row_filter(plan["clauses"])
+    df = read_evolved(
+        spark, data_path, index_path, as_of=as_of, files=files,
+        dv_path=dv_path, dv_commit_ids=dv_commit_ids,
+    )
     return df if cond is None else df.where(cond)
 
 
@@ -675,18 +691,14 @@ def read_indexed(
     so the version-N snapshot reads exactly as it was published;
     ``as_of_ts=<epoch seconds>`` is TIMESTAMP AS OF, resolved through
     the publish journal (``manifest.version_at``).
-    Schema-EVOLVED tables route through ``evolution.read_evolved`` —
-    a flat multi-file read would sample one cohort's physical schema
-    and silently drop/null the others' columns."""
-    as_of = _resolve_as_of(index_path, as_of, as_of_ts)
-    from columnar_analytics_engine_spark.evolution import read_schema_spec
-    from columnar_analytics_engine_spark.manifest import manifest_files
-
-    if read_schema_spec(index_path) is not None:
-        from columnar_analytics_engine_spark.evolution import read_evolved
-
-        return read_evolved(spark, data_path, index_path, as_of=as_of)
-    return read_files(spark, data_path, manifest_files(index_path, as_of=as_of))
+    The snapshot is read by ``evolution.read_evolved``, the one read of
+    a maintained table: on a schema-EVOLVED table a flat multi-file
+    read would sample one cohort's physical schema and silently
+    drop/null the others' columns."""
+    return read_evolved(
+        spark, data_path, index_path,
+        as_of=_resolve_as_of(index_path, as_of, as_of_ts),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -880,11 +892,13 @@ def read_skipping_for_join(
     key from ``keys`` — the scan half of dynamic file pruning.  The
     result is a SUPERSET of the matching rows (file granularity); it is
     only correct to consume it through an inner or left-semi join on
-    ``column`` against those same keys."""
+    ``column`` against those same keys.  The kept files are read by
+    ``evolution.read_evolved``, the one read of a maintained table, so
+    an evolved table joins under its current logical schema."""
     plan = plan_skipping_join(
         spark, index_path, column, keys, max_keys, bloom_path=bloom_path
     )
-    return read_files(spark, data_path, plan["files"])
+    return read_evolved(spark, data_path, index_path, files=plan["files"])
 
 
 def broadcast_join_skipping(

@@ -933,70 +933,6 @@ def write_col_spark(df, path: str, mode: str = "overwrite",
 # format("colfile"): Python DataSource adapters over the functions above
 # ---------------------------------------------------------------------------
 
-_PUSHDOWN_MIN_SPARK = (4, 2)
-
-
-def spark_supports_filter_pushdown() -> bool:
-    """Version gate for Catalyst ``pushFilters`` (VERDICT r11 item 6):
-    PySpark 4.1.x's JVM plan cache for Python DataSources replays a
-    filter-pruned scan for later unfiltered queries over the same
-    loaded relation (reproduced — see ``ColFileReaderDS`` docstring),
-    so pushdown stays OFF below 4.2 regardless of
-    ``spark.sql.python.filterPushdown.enabled``.  On >= 4.2 the
-    ``pushFilters`` hook activates automatically (prune-but-decline
-    variant: row groups prune on the pushed comparisons, every filter
-    is returned unconsumed so Spark re-applies it exactly — soundness
-    does not depend on the translation).  The explicit ``where`` option
-    remains the portable path either way, and
-    ``test_spark_read_no_state_leak_across_queries`` is the regression
-    gate on every Spark bump."""
-    import pyspark
-
-    try:
-        ver = tuple(int(x) for x in pyspark.__version__.split(".")[:2])
-    except ValueError:
-        return False
-    return ver >= _PUSHDOWN_MIN_SPARK
-
-
-def _push_filters_impl(self, filters):
-    """Catalyst pushdown hook (attached to ``ColFileReaderDS`` ONLY
-    when :func:`register_colfile` finds both the version gate open and
-    ``spark.sql.python.filterPushdown.enabled`` true — Spark 4.1.x
-    raises DATA_SOURCE_PUSHDOWN_DISABLED if the method merely EXISTS
-    while the conf is off).  Prune-but-decline: translatable
-    comparisons extend the zone-map clause list, and EVERY filter is
-    yielded back unconsumed so Spark re-applies it — pruning can only
-    remove provably-excluded row groups, never change results."""
-    for f in filters:
-        clause = catalyst_filter_to_clause(f)
-        if clause is not None:
-            self.clauses.append(clause)
-    yield from filters
-
-
-def catalyst_filter_to_clause(f) -> tuple[str, str, int] | None:
-    """Translate a ``pyspark.sql.datasource`` filter object into a
-    zone-map clause (column, op, int literal) — None when the filter
-    shape is not prunable (non-int literal, nested attribute, unknown
-    class).  Only ever used for SKIPPING, never for row-level
-    evaluation, so an untranslated filter costs pruning, not
-    correctness."""
-    kind = type(f).__name__
-    ops = {
-        "EqualTo": "==", "GreaterThan": ">", "GreaterThanOrEqual": ">=",
-        "LessThan": "<", "LessThanOrEqual": "<=",
-    }
-    op = ops.get(kind)
-    if op is None:
-        return None
-    attr = getattr(f, "attribute", None)
-    value = getattr(f, "value", None)
-    if not attr or len(attr) != 1 or not isinstance(value, int)             or isinstance(value, bool):
-        return None
-    return (attr[0], op, value)
-
-
 def _make_datasource_classes():
     """Build the DataSource classes lazily so importing this module
     never requires a SparkSession (the codec half is plain Python)."""
@@ -1013,28 +949,15 @@ def _make_datasource_classes():
     class ColFileReaderDS(DataSourceReader):
         """Plans one InputPartition per (file, row group).  Zone-map
         pruning + row filtering come from the explicit ``where`` option
-        only — deliberately NOT Catalyst ``pushFilters``.
-
-        Round-10 re-attempt record (VERDICT r9 item 7): with
-        ``spark.sql.python.filterPushdown.enabled=true`` on PySpark
-        4.1.2, BOTH pushFilters variants reproduce the plan-cache
-        leak — (a) prune-but-return-all-filters and (b) properly
-        consume the pushed filters.  Minimal reproduction (pinned in
-        ``test_colfile.py::test_spark_read_no_state_leak_across_queries``
-        and re-confirmed against a 5-line probe DataSource, not just
-        this reader): over ONE loaded DataFrame, ``df.count()`` →
-        2500, ``df.filter(id < 500).count()`` → 500, ``df.count()``
-        → **500**.  Tracing shows the filtered query constructs a
-        fresh reader and re-plans, REPLACING the relation's cached
-        scan, while the later unfiltered query reuses the cached scan
-        without invoking ``DataSource.reader()`` at all — so the
-        pruned partition list leaks into it.  A freshly re-loaded
-        DataFrame is unaffected; the poisoning is per loaded relation.
+        only — deliberately NOT Catalyst ``pushFilters``: on PySpark
+        4.1 both pushdown variants (prune-but-return-all-filters and
+        consume-the-filters) replay a filter-pruned scan for a later
+        unfiltered query over the same loaded DataFrame — ``count()``
+        2500, ``filter(id < 500).count()`` 500, ``count()`` **500**.
         The defect is in the JVM-side plan cache for Python
-        DataSources (the unfiltered query should either re-plan or hit
-        a cache entry keyed by the pushed-filter set), so no
-        Python-side implementation can avoid it; revisit when an
-        upstream fix lands — the regression test is the gate."""
+        DataSources, so no Python-side reader can avoid it
+        (:func:`parse_where`); revisit when an upstream fix lands —
+        ``test_spark_read_no_state_leak_across_queries`` is the gate."""
 
         def __init__(self, options):
             self.path = options.get("path")
@@ -1176,46 +1099,20 @@ def _make_datasource_classes():
         def writer(self, schema, overwrite: bool):
             return ColFileWriterDS(self.options, schema, overwrite)
 
-    ColFileDataSource._reader_cls = ColFileReaderDS
     return ColFileDataSource
 
 
 _DS_CLASS = None
 
 
-def _pushdown_conf_enabled(spark) -> bool:
-    try:
-        return (
-            spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-            .lower() == "true"
-        )
-    except Exception:
-        return False
-
-
 def register_colfile(spark) -> None:
     """Register the ``colfile`` format on this session (only needed for
     ``format("colfile")``; :func:`read_col_spark` and
-    :func:`write_col_spark` do not use it).
-
-    Catalyst ``pushFilters`` activates automatically when BOTH the
-    Spark-version gate (:func:`spark_supports_filter_pushdown`) and the
-    session's ``spark.sql.python.filterPushdown.enabled`` conf are
-    open; otherwise the reader class carries no ``pushFilters`` method
-    at all (required on 4.1.x, where its mere presence under a
-    disabled conf is an error) and the explicit ``where`` option is the
-    pruning path."""
+    :func:`write_col_spark` do not use it).  The explicit ``where``
+    option is the pruning path; the reader has no ``pushFilters``
+    (:func:`parse_where`)."""
     global _DS_CLASS
     if _DS_CLASS is None:
         _DS_CLASS = _make_datasource_classes()
-    reader_cls = _DS_CLASS._reader_cls
-    want = spark_supports_filter_pushdown() and _pushdown_conf_enabled(spark)
-    # Spark detects pushdown support by OVERRIDE, so probe the class
-    # __dict__ (the DataSourceReader base defines a default)
-    have = "pushFilters" in reader_cls.__dict__
-    if want and not have:
-        reader_cls.pushFilters = _push_filters_impl
-    elif have and not want:
-        del reader_cls.pushFilters
     _pickle_by_value()  # the DataSource classes are cloudpickled too
     spark.dataSource.register(_DS_CLASS)

@@ -637,37 +637,3 @@ def test_crashed_writer_strandings_invisible_then_collected(spark, tmp_path):
     ]
     assert leftovers == []
     assert {r.id for r in spark.read.format("colfile").load(path).collect()} == {10, 11, 12}
-
-
-def test_pushdown_version_gate_and_translation():
-    """The Catalyst pushFilters path stays OFF on Spark 4.1.x (the
-    reproduced plan-cache leak) and its filter translation is
-    conservative: only single-attribute int comparisons become zone-map
-    clauses; everything else declines to pruning-neutral None."""
-    import pyspark
-
-    from columnar_analytics_engine_spark.sources.colfile import (
-        catalyst_filter_to_clause,
-        spark_supports_filter_pushdown,
-    )
-
-    major_minor = tuple(int(x) for x in pyspark.__version__.split(".")[:2])
-    assert spark_supports_filter_pushdown() == (major_minor >= (4, 2))
-
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    assert catalyst_filter_to_clause(EqualTo(("id",), 5)) == ("id", "==", 5)
-    assert catalyst_filter_to_clause(GreaterThan(("v",), -3)) == ("v", ">", -3)
-    assert catalyst_filter_to_clause(GreaterThanOrEqual(("v",), 0)) == ("v", ">=", 0)
-    assert catalyst_filter_to_clause(LessThan(("v",), 9)) == ("v", "<", 9)
-    assert catalyst_filter_to_clause(LessThanOrEqual(("v",), 9)) == ("v", "<=", 9)
-    # declined shapes: non-int literal, bool, nested attribute
-    assert catalyst_filter_to_clause(EqualTo(("s",), "x")) is None
-    assert catalyst_filter_to_clause(EqualTo(("b",), True)) is None
-    assert catalyst_filter_to_clause(EqualTo(("a", "b"), 1)) is None

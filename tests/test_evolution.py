@@ -268,6 +268,48 @@ def test_read_surface_is_evolution_aware(spark, table):
     assert sorted(r["id"] for r in got.collect()) == list(range(120, 150, 2))
 
 
+def test_join_reads_follow_rename_after_merge(spark, tmp_path):
+    """The file-pruned join reads the table under its current logical
+    schema.  After a rename, a MERGE rewrites only the files it
+    touches, under the new name, so the table holds both physical
+    names.  ``broadcast_join_skipping`` and ``read_skipping_for_join``
+    must then join exactly like a join over ``read_evolved``: no
+    column under the old name, no NULLs for the rewritten rows."""
+    from columnar_analytics_engine_spark.skipping import (
+        broadcast_join_skipping,
+        read_skipping_for_join,
+    )
+
+    data = str(tmp_path / "data")
+    index = str(tmp_path / "idx")
+    spark.createDataFrame(
+        [(i, i * 10, f"u{i}") for i in range(100)],
+        "id bigint, amount int, name string",
+    ).repartitionByRange(4, "id").sortWithinPartitions("id").write.parquet(data)
+    build_stats_index(spark, data, index)
+    rename_column(spark, data, index, "amount", "amt")
+    # updates 90..99 (the last range file only) and inserts 100..109
+    source = spark.createDataFrame(
+        [(i, i * 10 + 1, f"m{i}") for i in range(90, 110)],
+        "id bigint, amt int, name string",
+    )
+    assert merge_upsert_files(spark, data, index, source, "id")["affected_files"] == 1
+    dim = spark.createDataFrame([(k,) for k in range(0, 110, 3)], "k bigint")
+
+    want = read_evolved(spark, data, index).join(dim, F.col("id") == F.col("k"))
+    assert want.columns == ["id", "amt", "name", "k"]
+    assert _rows(want.select("id", "amt")) == sorted(
+        (k, k * 10 + (k >= 90)) for k in range(0, 110, 3)
+    )
+    got = broadcast_join_skipping(spark, data, index, "id", dim, "k")
+    assert got.columns == want.columns
+    assert _rows(got) == _rows(want)
+    fact = read_skipping_for_join(spark, data, index, "id", dim.select("k"))
+    got = fact.join(dim, fact["id"] == dim["k"])
+    assert got.columns == want.columns
+    assert _rows(got) == _rows(want)
+
+
 def test_cohort_projection_properties(spark):
     """Property: for ANY spec and physical column set, the projection
     yields exactly the spec's columns in order, resolves the newest

@@ -5,7 +5,8 @@ A seeded random walk over the full maintenance surface — append,
 predicate delete, physical fold, re-cluster, small-file compaction,
 index-bounded MERGE, metadata-only schema add, retention vacuum — with
 a pure-Python model of the expected rows checked after EVERY op via
-the merge-on-read read path.  This is the reference corruption suite's
+every entry point of the maintained-table read (merge-on-read scan,
+predicate-pruned scan, file-pruned join).  This is the reference corruption suite's
 "results never change" bar (tests/test_corruption.cpp) applied to the
 whole round-12 tier at once, with op ORDER chosen adversarially by the
 seed rather than by the test author.
@@ -36,22 +37,42 @@ from columnar_analytics_engine_spark.layout import (
     vacuum_unindexed,
 )
 from columnar_analytics_engine_spark.skipping import (
+    broadcast_join_skipping,
     build_stats_index,
     update_stats_index,
 )
 
 
-def _check(spark, data, index, dv, model, extra_cols):
-    got = sorted(
-        tuple(r)
-        for r in read_with_deletes(spark, data, dv, index_path=index)
-        .select("k", "v", *extra_cols)
-        .collect()
+def _check(spark, data, index, dv, model, extra_cols, tombstones_live):
+    """Every entry point of the one maintained-table read against the
+    model: the merge-on-read scan, whole and under a pruning
+    predicate, and — when no tombstone is live, since a join reads
+    physical rows — the file-pruned broadcast join."""
+    cols = ["k", "v", *extra_cols]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    def expect(keep):
+        return sorted(
+            (k, v, *(e[c] for c in extra_cols))
+            for k, (v, e) in model.items()
+            if keep(k)
+        )
+
+    assert rows(read_with_deletes(spark, data, dv, index_path=index)) == expect(
+        lambda k: True
     )
-    expect = sorted(
-        (k, v, *(e[c] for c in extra_cols)) for k, (v, e) in model.items()
-    )
-    assert got == expect
+    cut = max(model, default=0) // 2
+    assert rows(
+        read_with_deletes(
+            spark, data, dv, index_path=index, predicate=f"k < {cut}"
+        )
+    ) == expect(lambda k: k < cut)
+    if not tombstones_live:
+        dim = spark.range(0, max(model, default=0) + 1, 3).toDF("dk")
+        got = broadcast_join_skipping(spark, data, index, "k", dim, "dk")
+        assert rows(got) == expect(lambda k: k % 3 == 0)
 
 
 def _check_cdf(spark, data, index, dv, v_prev, v_cur):
@@ -205,7 +226,7 @@ def test_random_maintenance_walk_preserves_results(spark, tmp_path, seed):
                 e[col] = default
         elif op == "vacuum":
             vacuum_unindexed(spark, data, index, keep_versions=1)
-        _check(spark, data, index, dv, model, extra_cols)
+        _check(spark, data, index, dv, model, extra_cols, tombstones_live)
         # CDF soundness across whatever this op published — skipped
         # when vacuum expired the previous checkpoint (same retention
         # contract as as_of time travel)
@@ -216,4 +237,4 @@ def test_random_maintenance_walk_preserves_results(spark, tmp_path, seed):
     # final: fold + vacuum, then the INDEX-planned plain read agrees
     fold()
     vacuum_unindexed(spark, data, index, keep_versions=1)
-    _check(spark, data, index, dv, model, extra_cols)
+    _check(spark, data, index, dv, model, extra_cols, tombstones_live)

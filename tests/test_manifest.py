@@ -68,7 +68,7 @@ def test_versioned_write_read_roundtrip(spark, tmp_path):
     assert list_versions(index) == [1, 2]
     assert _rows(read_manifest(spark, index)) == [("b.parquet",)]
     assert _rows(read_manifest(spark, index, as_of=1)) == [("a.parquet",)]
-    assert referenced_files(spark, index) == {"a.parquet", "b.parquet"}
+    assert referenced_files(index) == {"a.parquet", "b.parquet"}
     with pytest.raises(FileNotFoundError, match="version 9"):
         read_manifest(spark, index, as_of=9)
 
@@ -103,7 +103,7 @@ def test_legacy_flat_index_upgrades_in_place(spark, tmp_path):
     legacy.coalesce(1).write.parquet(index)  # flat, no _CURRENT
     assert current_version(index) is None
     assert _rows(read_manifest(spark, index)) == [("x.parquet",)]
-    assert referenced_files(spark, index) == {"x.parquet"}
+    assert referenced_files(index) == {"x.parquet"}
     v = write_manifest(
         spark, index, spark.createDataFrame([("y.parquet",)], "file string")
     )
@@ -165,7 +165,7 @@ def test_concurrent_reader_survives_compaction(spark, compactable):
     removed = vacuum_unindexed(spark, data, index, keep_versions=1)
     assert removed, "originals should be reclaimed"
     assert _rows(read_skipping(spark, data, index, pred)) == expect
-    assert set(list_parquet_files(data)) == referenced_files(spark, index)
+    assert set(list_parquet_files(data)) == referenced_files(index)
 
 
 def test_time_travel_reads_pre_maintenance_snapshot(spark, compactable):
@@ -209,7 +209,7 @@ def test_update_stats_index_does_not_readopt_retained_files(spark, compactable):
     n = src.count()
     cluster_compact(spark, data, index, ["o_custkey"], max_files=8)
     assert len(list_parquet_files(data)) > len(
-        referenced_files(spark, index, [current_version(index)])
+        referenced_files(index, [current_version(index)])
     )
     delta = update_stats_index(spark, data, index)
     assert delta == {"added": 0, "removed": 0}

@@ -1058,7 +1058,7 @@ def test_stats_indexed_sink_no_readoption_after_retention(spark, tmp_path):
     from columnar_analytics_engine_spark.manifest import referenced_files
 
     vacuum_unindexed(spark, data, index, keep_versions=1)
-    assert set(list_parquet_files(data)) == referenced_files(spark, index)
+    assert set(list_parquet_files(data)) == referenced_files(index)
 
 
 def test_cdf_consumer_tails_streaming_sink(spark, tmp_path):
